@@ -20,7 +20,7 @@ from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _norm_cell(v):

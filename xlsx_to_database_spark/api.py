@@ -12,9 +12,13 @@ shaped API:
     t.to_parquet("/lake/sales", partition_by=["year"])
     t.df.filter(...)                     # full DataFrame API underneath
 
-Everything is a thin veneer over the engine's real parts (xlsx data
-source, sinks, catalog): the facade adds naming/mode vocabulary, never
-logic, so there is no second code path to keep correct.
+The facade sits on the engine's real parts (xlsx data source, sinks,
+txn table) and adds the naming/mode vocabulary. It does one thing of
+its own: ``load_xlsx`` plans the xlsx scan on the driver
+(``sources.xlsx.planned_scan``), running the data source's
+``schema()``, ``partitions()`` and ``read()`` without the two Python
+planner round trips a ``spark.read.format("xlsx")`` load makes. Both
+paths return the same schema and rows (tests/test_xlsx_paths.py).
 """
 
 from __future__ import annotations
@@ -24,9 +28,10 @@ import re
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from xlsx_to_database_spark.sources import sinks
-from xlsx_to_database_spark.sources.xlsx import register_xlsx_source
+from xlsx_to_database_spark.sources.xlsx import planned_scan, register_xlsx_source
 
 
 def default_table_name(path: str, sheet: Optional[str] = None) -> str:
@@ -116,21 +121,19 @@ class Engine:
         sanitize: bool = True,
         schema: Optional[str] = None,
     ) -> LoadedTable:
-        """Read one worksheet (or ``sheet="*"`` for all, unioned by name).
+        """Read one worksheet (or ``sheet="*"`` for all visible sheets,
+        unioned by position under the first sheet's schema).
 
         ``schema`` is an optional DDL string overriding inference
         (SURVEY.md §1.3 declared-schema path).
         """
-        reader = (
-            self.spark.read.format("xlsx")
-            .option("header", str(header).lower())
-            .option("sanitize", str(sanitize).lower())
-        )
+        options = {"path": path, "header": str(header).lower(), "sanitize": str(sanitize).lower()}
         if sheet:
-            reader = reader.option("sheet", sheet)
-        if schema:
-            reader = reader.schema(schema)
-        return LoadedTable(reader.load(path), default_table_name(path, sheet))
+            options["sheet"] = sheet
+        declared = StructType.fromDDL(schema) if schema else None
+        return LoadedTable(
+            planned_scan(self.spark, options, declared), default_table_name(path, sheet)
+        )
 
     def load_table(self, df: DataFrame, name: str) -> LoadedTable:
         """Wrap any DataFrame with the sink surface."""

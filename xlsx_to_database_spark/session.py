@@ -61,8 +61,27 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: The directory holding this package. Python workers import the engine
+#: by name (the xlsx reader, the worker daemon), so it must be on their
+#: path wherever the driver runs from.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(app_name: str = "xlsx-to-database-spark") -> SparkSession:
-    """Build (or reuse) a local session sized for this container."""
+    """Build (or reuse) a local session sized for this container.
+
+    Two settings concern the Python workers. Their ``PYTHONPATH`` (the
+    executor environment that ``spark.executorEnv.PYTHONPATH`` sets)
+    gains ``PACKAGE_ROOT`` after any value already set, because the
+    workers import the engine by name and would otherwise find it only
+    when the JVM's working directory happens to be the checkout. It is
+    added once the context exists, so a value given to spark-submit is
+    kept; every Python function takes the environment when it is
+    created. ``spark.python.daemon.module`` starts the workers from
+    ``xlsx_to_database_spark.daemon``, which on CPython < 3.12 stops
+    every task from re-reading the directories of the zip archives
+    pyspark is imported from (see that module).
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -71,5 +90,11 @@ def get_spark(app_name: str = "xlsx-to-database-spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", RUNTIME_CONFS["spark.sql.shuffle.partitions"])
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "xlsx_to_database_spark.daemon")
     )
-    return tune_session(builder.getOrCreate())
+    spark = builder.getOrCreate()
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [PACKAGE_ROOT])
+    return tune_session(spark)

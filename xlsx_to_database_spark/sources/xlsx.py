@@ -12,10 +12,19 @@ concurrently (xlsx sheets are independently-compressed zip members —
 per-sheet is the natural parallel grain; a single huge sheet streams
 within one task in O(row) memory).
 
+Two read paths run the same ``schema()``, ``partitions()`` and
+``read()``. ``spark.read.format("xlsx")`` is the DataFrameReader/SQL
+entry point: Spark calls ``schema()`` and ``partitions()`` in Python
+planner workers. ``api.Engine.load_xlsx`` plans on the driver instead
+(``planned_scan``): both run in-process and only ``read()`` runs on the
+workers, which saves two worker round trips per load.
+
 Pushdown: Python data sources get no automatic predicate pushdown, so
-``pushFilters`` accepts simple comparison filters and applies them
-during decode — rows are dropped *before* crossing the Python→JVM
-Arrow boundary, which is the expensive edge of this source.
+``pushFilters`` accepts EqualTo filters and applies them during decode
+— rows are dropped *before* crossing the Python→JVM Arrow boundary,
+which is the expensive edge of this source. This applies only to
+``format("xlsx")`` reads; filters on ``Engine`` frames run in Spark
+after decode and return the same rows.
 
 Options: ``sheet`` (name, or omitted = first sheet), ``header``
 (default true), ``sanitize`` (default true: headers → SQL identifiers),
@@ -28,6 +37,7 @@ import itertools
 from typing import Any, Iterator
 
 from pyspark.sql.datasource import (
+    CaseInsensitiveDict,
     DataSource,
     DataSourceReader,
     DataSourceWriter,
@@ -167,9 +177,16 @@ class XlsxReader(DataSourceReader):
         self._filters: list[Filter] = []
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """Accept EqualTo filters on scan columns (applied during
-        decode, pre-Arrow); everything else stays with Spark."""
-        names = {f.name for f in self.schema.fields}
+        """Accept EqualTo filters on string, bigint, double and boolean
+        scan columns (applied during decode, pre-Arrow); everything else
+        stays with Spark. Those are the columns whose decoded values are
+        the Python type the literal arrives as: a timestamp literal
+        arrives zone-aware and would never equal a decoded naive
+        datetime, dropping every row."""
+        names = {
+            f.name for f in self.schema.fields
+            if f.dataType.simpleString() in ("string", "bigint", "double", "boolean")
+        }
         for f in filters:
             if isinstance(f, EqualTo) and f.attribute[0] in names:
                 self._filters.append(f)
@@ -215,6 +232,35 @@ class XlsxReader(DataSourceReader):
                 yield vals
         finally:
             wb.close()
+
+
+def planned_scan(spark, options: dict, schema: StructType | None = None):
+    """The rows ``spark.read.format("xlsx")`` gives for ``options``,
+    planned on the driver.
+
+    ``schema()`` (unless ``schema`` is declared) and ``partitions()`` run
+    here, in-process; only ``read()`` runs on the Python workers, one
+    task per partition in a single ``mapInArrow`` stage, its rows turned
+    into Arrow by the converter Spark uses for Python data sources.
+    """
+    source = XlsxDataSource(CaseInsensitiveDict(options))
+    if schema is None:
+        schema = source.schema()
+    reader = source.reader(schema)
+    parts = reader.partitions()
+    batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+    def read_partitions(batches):
+        from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
+
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield from records_to_arrow_batches(
+                    reader.read(parts[i]), batch_rows, schema, source
+                )
+
+    n = len(parts)
+    return spark.range(0, n, 1, max(n, 1)).mapInArrow(read_partitions, schema)
 
 
 def register_xlsx_source(spark) -> None:
