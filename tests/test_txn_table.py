@@ -1337,62 +1337,91 @@ def test_merge_narrow_source_under_column_map(spark, tmp_path):
     assert len(got) == 50
 
 
-def test_compact_adopts_racing_blind_append(spark, tmp_path, monkeypatch):
+#: The content-preserving rewrites that share one layout-op conflict
+#: rule, each as (set-up, rewrite call). reorg_purge first needs hot
+#: deletion vectors: deleting every even key leaves each file 50 %
+#: deleted, past the 0.2 threshold.
+_REWRITES = {
+    "compact": (None, lambda t: t.compact(target_files=2)),
+    "compact_small": (None, lambda t: t.compact_small(max_rows=1000)),
+    "reorg_purge": (
+        lambda t: t.delete_where_dv(F.col("k") % 2 == 0),
+        lambda t: t.reorg_purge(max_deleted_ratio=0.2),
+    ),
+}
+
+
+def _rewrite_under_race(spark, tmp_path, monkeypatch, op, race):
+    """Build the 4-file table, run ``op``'s set-up, then run ``op``
+    with ``race(racer)`` landing once just before its first commit.
+    Returns (table, live {k: v} before the op, op thunk)."""
+    t = _mk(spark, tmp_path, n=100, parts=4)
+    setup, run = _REWRITES[op]
+    if setup is not None:
+        setup(t)
+    before = {r.k: r.v for r in t.read().collect()}
+    orig = t._commit
+    raced = {"done": False}
+
+    def patched(version, op_str, files, txn_id=None, **kw):
+        if op_str == op and not raced["done"]:
+            raced["done"] = True
+            race(TxnTable(spark, t.path, "k"))
+        return orig(version, op_str, files, txn_id=txn_id, **kw)
+
+    monkeypatch.setattr(t, "_commit", patched)
+    return t, before, lambda: run(t)
+
+
+@pytest.mark.parametrize("op", sorted(_REWRITES))
+def test_compact_adopts_racing_blind_append(
+    spark, tmp_path, monkeypatch, op
+):
     """Delta's layout-op conflict matrix: an OPTIMIZE that loses its
     version race to a BLIND APPEND must retry adopting the racer's
     files by reference — neither dropping them (the pre-round-8 silent
     corruption) nor raising (which would make continuous compaction
     starve under steady ingest)."""
-    t = _mk(spark, tmp_path, n=100, parts=4)
-    orig = t._commit
-    raced = {"done": False}
-
-    def patched(version, op, files, txn_id=None, **kw):
-        if op == "compact" and not raced["done"]:
-            raced["done"] = True
-            racer = TxnTable(spark, t.path, "k")
-            racer.append(
-                spark.createDataFrame([(999, 999)], "k long, v long")
-                .coalesce(1)
-            )
-        return orig(version, op, files, txn_id=txn_id, **kw)
-
-    monkeypatch.setattr(t, "_commit", patched)
-    v, n_before = t.compact(target_files=2)
-    assert v == 2 and n_before == 4  # racer took v1, compact landed v2
+    t, before, run = _rewrite_under_race(
+        spark, tmp_path, monkeypatch, op,
+        lambda racer: racer.append(
+            spark.createDataFrame([(999, 999)], "k long, v long")
+            .coalesce(1)
+        ),
+    )
+    base = t.latest_version()
+    v = run()[0]
+    assert v == base + 2  # racer took base+1, the rewrite landed next
+    assert t.manifest()["op"] == op
     got = {r.k: r.v for r in t.read().collect()}
-    assert got[999] == 999, "compact dropped the racing append"
-    assert len(got) == 101 and got[7] == 14
+    assert got[999] == 999, f"{op} dropped the racing append"
+    assert got == {**before, 999: 999}
     # racer's file carried by REFERENCE (not rewritten)
     racer_paths = {
-        e["path"] for e in t.manifest(1)["files"]
-    } - {e["path"] for e in t.manifest(0)["files"]}
-    assert racer_paths <= {e["path"] for e in t.manifest(2)["files"]}
+        e["path"] for e in t.manifest(base + 1)["files"]
+    } - {e["path"] for e in t.manifest(base)["files"]}
+    assert racer_paths <= {e["path"] for e in t.manifest(v)["files"]}
 
 
+@pytest.mark.parametrize("op", sorted(_REWRITES))
 def test_compact_refuses_racing_dv_delete_on_input(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, op
 ):
-    """The refuse half: a DV delete that lands on one of the compact's
+    """The refuse half: a DV delete that lands on one of the rewrite's
     INPUT files between its read and its commit makes the rewrite's
     live view stale — committing it would resurrect the freshly
     deleted rows, so it must raise, and the table must keep the
     racer's delete."""
-    t = _mk(spark, tmp_path, n=100, parts=4)
-    orig = t._commit
-    raced = {"done": False}
-
-    def patched(version, op, files, txn_id=None, **kw):
-        if op == "compact" and not raced["done"]:
-            raced["done"] = True
-            racer = TxnTable(spark, t.path, "k")
-            racer.delete_where_dv(F.col("k") <= 10)
-        return orig(version, op, files, txn_id=txn_id, **kw)
-
-    monkeypatch.setattr(t, "_commit", patched)
+    t, before, run = _rewrite_under_race(
+        spark, tmp_path, monkeypatch, op,
+        lambda racer: racer.delete_where_dv(F.col("k") <= 10),
+    )
+    base = t.latest_version()
     with pytest.raises(ConcurrentWriteError):
-        t.compact(target_files=2)
-    got = {r.k for r in t.read().collect()}
-    assert len(got) == 90 and min(got) == 11, (
+        run()
+    assert t.latest_version() == base + 1
+    got = {r.k: r.v for r in t.read().collect()}
+    assert got == {k: x for k, x in before.items() if k > 10}, (
         "the racer's DV delete was lost"
     )
+

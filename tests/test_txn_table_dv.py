@@ -381,6 +381,35 @@ def test_dv_delete_conflicts_with_overlapping_dv_delete(
     assert t.read().count() == 999
 
 
+def test_dv_update_conflicts_with_overlapping_dv_delete(
+    spark, tmp_path, monkeypatch
+):
+    # The update_dv half of the same rule: its merged sidecar embeds
+    # the hit file's PRIOR vector too, so a racer's DV delete on one of
+    # its hit files must make the update refuse, not undelete the
+    # racer's row or publish the update over it.
+    t = _mk(spark, tmp_path)
+    orig_commit = t._commit
+    raced = {"done": False}
+
+    def commit_and_race(version, op, files, txn_id=None, **kw):
+        if op == "update_dv" and not raced["done"]:
+            raced["done"] = True
+            racer = TxnTable(spark, t.path, "k")
+            racer.delete_where_dv(F.col("k") == 7)  # same first file
+        return orig_commit(version, op, files, txn_id=txn_id, **kw)
+
+    monkeypatch.setattr(t, "_commit", commit_and_race)
+    with pytest.raises(ConcurrentWriteError):
+        t.update_where_dv(
+            F.col("k") % 10 == 0, {"v": F.lit(-1).cast("long")}
+        )
+    assert t.latest_version() == 1  # only the racer's delete landed
+    assert t.read().filter(F.col("k") == 7).count() == 0
+    assert t.read().count() == 999
+    assert t.read().filter(F.col("v") == -1).count() == 0
+
+
 def test_reorg_purge_rewrites_only_hot_files(spark, tmp_path):
     # PURGE materializes vectors on files past the deleted-ratio
     # threshold only; lightly-vectored files keep their (cheap) vector.

@@ -1120,8 +1120,10 @@ def _ivfflat_index_path(sf_dir: str) -> str:
                    / (inv.nrm * tnv2.cn), 6) AS csim
       FROM inv, tnv2
     )
+    -- "+ 0.0" turns the -0.0 DuckDB's round() keeps for tiny negative
+    -- inputs into 0.0, which is what Spark's round() emits.
     SELECT v4.vec_id, CAST(a.cell AS BIGINT) AS cell,
-           CAST(t.i AS BIGINT) AS dim, v4.e[t.i] AS value
+           CAST(t.i AS BIGINT) AS dim, v4.e[t.i] + 0.0 AS value
     FROM v4 JOIN (
       SELECT vec_id, c_id AS cell FROM (
         SELECT vec_id, c_id,

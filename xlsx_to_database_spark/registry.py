@@ -278,6 +278,13 @@ _ATTESTED: tuple[str, ...] = (
     "sim_ivfflat_serve_topk", "sim_sq_serve_topk",
     "sim_residual_serve_topk", "sim_pq_refine_topk", "sim_hamming_topk",
     "sim_binary_rerank_topk", "vec_residual_index_build",
+    # CORRECTNESS_r14.json greens: the four ANN builders the round-14
+    # correctness repairs turned driver-green (the HUGEINT->BIGINT cast
+    # in vec_binary_encode's oracle, exploded (id, dim, value) outputs
+    # for the array-returning builders). This moves them to the
+    # attested tail of all_queries().
+    "vec_binary_encode", "vec_ivf_train_centroids", "vec_sq_encode",
+    "vec_sq_index_build",
 )
 
 # Attested ops whose IMPLEMENTATION changed after their attestation round:
