@@ -5159,11 +5159,10 @@ def test_ivf_training_is_monotone_and_keeps_empty_cells(spark, sf_dir):
 
 
 def test_range_bucketed_null_value_purchase_keeps_zero_row(spark, tmp_path):
-    """r13: join_range_bucketed dropped its third events scan by relying
-    on each purchase's own event row to retain the group through the
-    inner bucket join. A NULL-value purchase has no numeric bucket, so
-    the sentinel-bucket path must keep its LEFT-JOIN-mandated 0 row —
-    pinned here because the testdata has no NULL values to catch it."""
+    """A NULL-value purchase has no bucket, so none of its three
+    exploded bucket rows can match; the LEFT join to events must still
+    keep its 0 row, and a NULL-value event must never count — pinned
+    here because the testdata has no NULL values to catch it."""
     import datetime
     import os
 

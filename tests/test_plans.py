@@ -254,8 +254,28 @@ def test_range_bucketed_join_is_hash_not_nested_loop(spark, sf_dir, qs):
     # The whole point of the bucket rewrite: a pure range join must NOT
     # plan as BroadcastNestedLoopJoin at scale — the bucket id gives it
     # an equi key.
+    # The outer join keeps zero-match purchases itself, so events is
+    # scanned twice (probe and build side), never a third time.
+    import re
+
     plan = explain_str(qs["join_range_bucketed"](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) <= 2, plan
+
+
+def test_funnel_steps_is_one_user_id_shuffle(spark, sf_dir, qs):
+    # All three stages come from one pass partitioned by user_id: no
+    # join, one hash exchange on user_id, and the single-partition
+    # exchange of the final counts.
+    import re
+
+    plan = explain_str(qs["funnel_steps"](spark, sf_dir), "simple")
+    assert "Join" not in plan, plan
+    exchanges = re.findall(r"Exchange (\w+)\(?([^,\n]*)", plan)
+    assert sorted(kind for kind, _ in exchanges) == [
+        "SinglePartition", "hashpartitioning"], plan
+    assert [key for kind, key in exchanges if kind == "hashpartitioning"][0].startswith(
+        "user_id#"), plan
 
 
 def test_pii_redact_is_map_only(spark, sf_dir, qs):

@@ -7,6 +7,22 @@ lineitem events documents embeddings — one parquet file per table under
 Scans stay fully declarative (``spark.read.parquet``) so Catalyst gets
 predicate pushdown + column pruning for free; at 100 TB these would be
 partitioned/bucketed parquet directories and the same code holds.
+
+Schema memo. An inferring ``spark.read.parquet`` runs a Spark job to
+merge the file footers on every call, which at bench scale costs more
+than many of the queries that follow it. ``table()`` therefore infers a
+file's schema once and pins it on later reads
+(``spark.read.schema(s).parquet``), which start no job. The memo holds
+the ``StructType``, never the DataFrame: two ``table()`` calls must
+return independent plans, or a self-join would see the same attribute
+ids on both sides. The key is the path, the file's identity and version
+(``st_ino``, ``st_mtime_ns``, ``st_size``; for a directory, those of
+every file under it) and the two session confs that change the types
+inference gives (``nanosAsLong`` and ``inferTimestampNTZ.enabled``,
+both pinned by ``session.tune_session``). A rewritten file or a flipped
+conf misses the memo and is inferred afresh; a path that cannot be
+stat'ed locally (a remote URI) is inferred on every call. One entry is
+kept per path, so the memo is bounded by the number of tables read.
 """
 
 from __future__ import annotations
@@ -14,6 +30,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES = (
     "region",
@@ -33,11 +50,55 @@ TABLES = (
 BROADCAST_DIMS = frozenset({"region", "nation"})
 
 
+#: Session confs whose values change the schema parquet inference gives.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: path -> (version key, inferred schema); see the module docstring.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_version(path: str) -> tuple | None:
+    """(ino, mtime_ns, size) of a file, or of every file under a
+    directory; None when the path cannot be stat'ed locally."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (st.st_ino, st.st_mtime_ns, st.st_size)
+        version = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for f in sorted(files):
+                fst = os.stat(os.path.join(root, f))
+                version.append((root, f, fst.st_ino, fst.st_mtime_ns, fst.st_size))
+        return tuple(version)
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
+    """Read ``path`` with its memoised schema, inferring it on a miss."""
+    version = _file_version(path)
+    if version is None:
+        df = spark.read.parquet(path)
+        return df, df.schema
+    key = (version, *(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path), hit[1]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    _SCHEMAS[path] = (key, schema)
+    return df, schema
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table as a DataFrame (lazy columnar scan)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df, schema = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # ts is TIMESTAMP(NANOS) in the file, surfaced as nanos-long via
         # spark.sql.legacy.parquet.nanosAsLong (session.py). Truncate to
@@ -45,11 +106,10 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # double precision, so no float math here) — exactly DuckDB's
         # ns→µs truncation, keeping oracle timestamps value-identical.
         from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampNTZType
 
-        if isinstance(df.schema["ts"].dataType, LongType):
+        if isinstance(schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
+        elif isinstance(schema["ts"].dataType, TimestampNTZType):
             # Defensive mirror of spark.sql.parquet.inferTimestampNTZ
             # (session.py): a session that read the file before our confs
             # applied surfaces TIMESTAMP_NTZ; with the session tz pinned

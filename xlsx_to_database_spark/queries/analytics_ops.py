@@ -4,10 +4,9 @@ path mining, deterministic mode, heavy hitters, period-over-period
 deltas, the bucketed pure-range join, and cluster-survivor selection.
 
 Scale notes:
-- ``funnel_steps`` is three staged aggregates all keyed on user_id —
-  the shuffles share one key, and each stage's input is pre-filtered to
-  one event type before joining, so the wide events table is read once
-  per stage with the filter pushed into the scan.
+- ``funnel_steps`` is one shuffle on user_id: a chain of per-user
+  window minima carries each stage's timestamp forward, then one
+  per-user aggregate and one global count, with no join and one scan.
 - ``retention_cohorts`` ships (user, week) pairs once: cohort week is a
   per-user aggregate joined back on the user key; offsets are integer
   epoch math, not calendar UDFs.
@@ -17,8 +16,9 @@ Scale notes:
 - ``join_range_bucketed`` is the scale path for range joins WITHOUT an
   equi key (which otherwise plan as nested-loop): quantize the range
   attribute into radius-width buckets, explode the probe side into its
-  3 adjacent buckets, equi-join on bucket id, verify the exact residual.
-  Result-transparent: the oracle is the plain theta-join SQL.
+  3 adjacent buckets, LEFT equi-join on bucket id with the exact
+  residual in the join condition. Result-transparent: the oracle is the
+  plain theta-join SQL.
 - ``dedup_keep_best`` composes connected components with a per-cluster
   row_number — the final keep/drop verdict of a dedup pipeline.
 """
@@ -60,31 +60,38 @@ from xlsx_to_database_spark.registry import query
 def funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel signup → click → purchase: a user
     advances only with a later-or-equal event at each stage (min
-    qualifying timestamp carried forward). Three staged aggregates, all
-    shuffling on user_id; each stage scans events with its event-type
-    filter pushed down."""
-    ev = table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
+    qualifying timestamp carried forward). One pass partitioned by
+    user_id: window minima give each event row its user's t1 (first
+    signup) and t2 (first click at or after t1); a per-user aggregate
+    on the same partitioning takes t3 (first purchase at or after t2);
+    one global count per stage.
 
-    def stage(etype: str, prev: DataFrame | None, prev_t: str, out_t: str) -> DataFrame:
-        e = ev.filter(F.col("event_type") == etype)
-        if prev is not None:
-            e = e.join(prev, "user_id").filter(F.col("ts") >= F.col(prev_t))
-        return e.groupBy("user_id").agg(F.min("ts").alias(out_t))
-
-    s1 = stage("signup", None, "", "t1")
-    s2 = stage("click", s1, "t1", "t2")
-    s3 = stage("purchase", s2, "t2", "t3")
-
-    def cnt(df: DataFrame, label: str) -> DataFrame:
-        return df.agg(
-            F.lit(label).alias("stage"),
-            F.count(F.lit(1)).cast("long").alias("n_users"),
+    Stage 1 counts users with any signup event, as the oracle's
+    ``GROUP BY`` does even when every signup ``ts`` is NULL; stages 2
+    and 3 join on user_id there, so a NULL user_id never advances."""
+    w = Window.partitionBy("user_id")
+    et, ts = F.col("event_type"), F.col("ts")
+    per_user = (
+        table(spark, sf_dir, "events")
+        .select("user_id", "event_type", "ts")
+        .filter(et.isin("signup", "click", "purchase"))
+        .withColumn("t1", F.min(F.when(et == "signup", ts)).over(w))
+        .withColumn("t2", F.min(F.when((et == "click") & (ts >= F.col("t1")), ts)).over(w))
+        .groupBy("user_id")
+        .agg(
+            F.max(et == "signup").alias("signed_up"),
+            F.max("t2").alias("t2"),
+            F.min(F.when((et == "purchase") & (ts >= F.col("t2")), ts)).alias("t3"),
         )
-
-    return (
-        cnt(s1, "1_signup")
-        .unionByName(cnt(s2, "2_click"))
-        .unionByName(cnt(s3, "3_purchase"))
+    )
+    known = F.col("user_id").isNotNull()
+    counts = per_user.agg(
+        F.count(F.when(F.col("signed_up"), 1)).alias("n1"),
+        F.count(F.when(known, F.col("t2"))).alias("n2"),
+        F.count(F.when(known, F.col("t3"))).alias("n3"),
+    )
+    return counts.select(
+        F.expr("stack(3, '1_signup', n1, '2_click', n2, '3_purchase', n3) AS (stage, n_users)")
     )
 
 
@@ -299,16 +306,20 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     each purchase. Declared as a theta join this plans nested-loop —
     quadratic at scale — so the implementation quantizes `value` into
     radius-width buckets, explodes the probe side into its 3 adjacent
-    buckets, equi-joins on bucket id, and verifies the exact residual:
-    every true match lands in an adjacent bucket (|va−vb| ≤ r ⇒ bucket
-    ids differ by ≤ 1), so the rewrite is lossless while the join
-    becomes a hash/sort-merge on a dense integer key. The oracle is the
-    plain theta-join SQL — result-transparency is the point."""
+    buckets, and LEFT equi-joins on bucket id with the exact residual
+    in the join condition: every true match lands in an adjacent bucket
+    (|va−vb| ≤ r ⇒ bucket ids differ by ≤ 1), so the rewrite is
+    lossless while the join becomes a hash/sort-merge on a dense integer
+    key. The three buckets are distinct, so no match is counted twice,
+    and a purchase with no match (a NULL value included) keeps its 0
+    row through the outer join. The oracle is the plain theta-join SQL —
+    result-transparency is the point."""
     r = 0.5
+    bucket = F.floor(F.col("value") / r).cast("long")
     ev = table(spark, sf_dir, "events").select(
         F.col("event_id").alias("e_id"),
         F.col("value").alias("e_val"),
-        F.floor(F.col("value") / r).cast("long").alias("bucket"),
+        bucket.alias("e_bucket"),
     )
     p = (
         table(spark, sf_dir, "events")
@@ -316,36 +327,19 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("event_id").alias("p_id"),
             F.col("value").alias("p_val"),
-            F.explode(
-                F.array(
-                    F.floor(F.col("value") / r).cast("long") - 1,
-                    F.floor(F.col("value") / r).cast("long"),
-                    F.floor(F.col("value") / r).cast("long") + 1,
-                )
-            ).alias("bucket"),
+            F.explode(F.array(bucket - 1, bucket, bucket + 1)).alias("p_bucket"),
         )
     )
-    matched = p.join(ev, "bucket").filter(
-        (F.col("e_val") >= F.col("p_val") - r)
+    on = (
+        (F.col("p_bucket") == F.col("e_bucket"))
+        & (F.col("e_val") >= F.col("p_val") - r)
         & (F.col("e_val") <= F.col("p_val") + r)
         & (F.col("e_id") != F.col("p_id"))
     )
-    # Left-join semantics (purchases with zero matches keep a 0 row):
-    # re-join the per-purchase counts onto the full purchase set.
-    counts = matched.groupBy("p_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_similar")
-    )
-    all_p = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(F.col("event_id").alias("p_id"))
-    )
     return (
-        all_p.join(counts, "p_id", "left")
-        .select(
-            F.col("p_id").alias("event_id"),
-            F.coalesce(F.col("n_similar"), F.lit(0).cast("long")).alias("n_similar"),
-        )
+        p.join(ev, on, "left")
+        .groupBy(F.col("p_id").alias("event_id"))
+        .agg(F.count("e_id").cast("long").alias("n_similar"))
     )
 
 

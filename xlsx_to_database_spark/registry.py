@@ -425,6 +425,12 @@ _REOPENED: frozenset[str] = frozenset({
     # family).
     "graph_connected_components",
     "graph_modularity",
+    # Single-pass rewrites (same output, different job sequence, per the
+    # round-14 precedent above): funnel_steps is one user_id window pass
+    # instead of three staged joins; join_range_bucketed left-joins the
+    # exploded buckets instead of re-joining a third events scan.
+    "funnel_steps",
+    "join_range_bucketed",
 })
 
 #: The driver evaluates this many registry-order entries per round

@@ -49,15 +49,34 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+#: Confs in ``RUNTIME_CONFS`` that decide result values (timestamps, and
+#: the types the catalog infers and memoises). A session that refuses
+#: one would silently return different answers, so ``tune_session``
+#: raises for these; every other conf is a performance knob and stays
+#: best-effort.
+VALUE_CONFS = frozenset({
+    "spark.sql.session.timeZone",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.outputTimestampType",
+})
+
+
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (driver-owned or ours)."""
+    """Apply runtime confs to an existing session (ours or one handed to us).
+
+    Raises ``RuntimeError`` naming the conf when one of ``VALUE_CONFS``
+    cannot be set."""
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
+        except Exception as exc:
             # Some confs may be fixed by the session owner; never fail a
-            # query over a tuning knob.
-            pass
+            # query over a tuning knob, never run with a wrong value.
+            if key in VALUE_CONFS:
+                raise RuntimeError(
+                    f"cannot set {key}={value!r}, which decides result values"
+                ) from exc
     return spark
 
 
