@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +21,11 @@ from xlsx_to_database_spark.operators.txn_table import (
     ConcurrentWriteError,
     TxnTable,
 )
+
+
+#: Table directory names that ``_metadata.file_path`` percent-encodes
+#: (space, ``%``) or keeps although a plain URL quote would encode them.
+ENCODED_DIRS = ["a b", "p%41", "x+y(1)", "é,;=@$&!'~*"]
 
 
 def _mk(spark, tmp_path, n=1000, parts=4, name="tbl"):
@@ -526,3 +532,37 @@ def test_dv_merge_conflict_matrix_sees_interleaved_dv_delete(
     monkeypatch.setattr(t, "_stage_files", stage_and_race)
     with pytest.raises(ConcurrentWriteError):
         t.merge(src, "k")
+
+
+@pytest.mark.parametrize("name", ENCODED_DIRS)
+def test_dv_ops_under_encoded_table_path(spark, tmp_path, name):
+    t = _mk(spark, tmp_path / name, n=100, parts=2)
+    assert t.delete_where_dv(F.col("k") % 10 == 0)[1:] == (2, 10)
+    assert t.read().count() == 90
+    assert t.update_where_dv(F.col("k") <= 5, {"v": F.lit(-1)})[1:] == (1, 5)
+    got = {r.k: r.v for r in t.read().collect()}
+    want = {k: -1 if k <= 5 else 2 * k for k in range(1, 101) if k % 10}
+    assert got == want
+    assert t.delete_where(F.col("k") > 95)[1] == 1
+    t.compact(target_files=1)
+    got = {r.k: r.v for r in t.read().collect()}
+    assert got == {k: v for k, v in want.items() if k <= 95}
+
+
+@pytest.mark.parametrize("name", ENCODED_DIRS)
+def test_dv_table_copied_to_encoded_path_keeps_deletes(spark, tmp_path, name):
+    t = _mk(spark, tmp_path, n=100, parts=2)
+    t.delete_where_dv(F.col("k") % 10 == 0)
+    dst = tmp_path / name / "copy"
+    shutil.copytree(t.path, dst)
+    got = sorted(r.k for r in TxnTable(spark, str(dst), "k").read().collect())
+    assert got == [k for k in range(1, 101) if k % 10]
+
+
+def test_dv_fresh_refuses_a_file_the_manifest_does_not_name(spark, tmp_path):
+    import pyarrow as pa
+
+    t = _mk(spark, tmp_path, n=10, parts=1)
+    hits = pa.table({"__fp": ["file:/elsewhere/part-0.parquet"], "__ri": [0]})
+    with pytest.raises(RuntimeError, match="does not name"):
+        t._dv_fresh(t.manifest(), hits)

@@ -386,7 +386,7 @@ def test_merged_cells_fill(tmp_path):
     assert [r[0] for r in filled[1:]] == ["alpha", "alpha", "alpha", "beta"]
 
 
-def test_formula_cells_decode_cached_values(tmp_path):
+def test_formula_cells_decode_cached_values_inline_xml(tmp_path):
     """A formula cell stores <f>expr</f> plus the last-evaluated <v>;
     readers that don't evaluate formulas (ours, by design) must surface
     the cached value — numeric for t='n', literal text for t='str' —

@@ -24,6 +24,7 @@ import pytest
 
 from tools.check_correctness import value_hash
 from xlsx_to_database_spark import daemon
+from xlsx_to_database_spark.sources import xlsx_io
 from xlsx_to_database_spark.sources.xlsx_io import write_workbook
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -102,8 +103,28 @@ def _ragged_book(path):
     )
 
 
+def _sliced_book(path):
+    """One sheet big enough to be read in slices, with gaps in it."""
+    write_workbook(
+        path,
+        {
+            "big": (
+                ["id", "name", "amount", "flag", "at", "note"],
+                [
+                    (i, f"name{i % 13}", i * 0.25, i % 3 == 0, datetime(2020, 1, 1 + i % 28, i % 24),
+                     None if i % 7 == 0 else f"n{i}")
+                    for i in range(5000)
+                ],
+            )
+        },
+    )
+    with zipfile.ZipFile(path) as zf:
+        assert zf.getinfo("xl/worksheets/sheet1.xml").file_size > 2 * xlsx_io.SLICE_BYTES
+
+
 #: (workbook builder, Engine.load_xlsx keyword arguments).
 CASES = {
+    "sliced": (_sliced_book, {}),
     "wildcard_hidden": (_hidden_sheet_book, {"sheet": "*"}),
     "numfmt_dates_1904": (_dates_1904_book, {}),
     "ragged": (_ragged_book, {}),
@@ -170,6 +191,18 @@ def test_engine_scan_is_planned_on_the_driver(spark, tmp_path):
     assert "MapInArrow" in plan, plan
     assert df.rdd.getNumPartitions() == 2  # the two visible sheets
     assert "BatchScan xlsx" in _format_read(spark, path)._jdf.queryExecution().executedPlan().toString()
+
+
+def test_big_sheet_is_read_in_slices(spark, tmp_path):
+    from xlsx_to_database_spark.api import Engine
+
+    path = str(tmp_path / "big.xlsx")
+    _sliced_book(path)
+    with zipfile.ZipFile(path) as zf:
+        size = zf.getinfo("xl/worksheets/sheet1.xml").file_size
+    n = -(-size // xlsx_io.SLICE_BYTES)
+    assert Engine(spark=spark).load_xlsx(path).df.rdd.getNumPartitions() == n
+    assert _format_read(spark, path).rdd.getNumPartitions() == n
 
 
 def test_workers_find_the_engine_from_any_cwd(tmp_path):
@@ -279,3 +312,58 @@ def test_python_tasks_run_under_the_engine_daemon(spark):
     assert parent[1:3] == ["-m", "xlsx_to_database_spark.daemon"], parent
     expected = "invalidate_caches" if sys.version_info >= (3, 12) else "_invalidate_caches"
     assert invalidate == expected
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="lazy natively from CPython 3.12")
+def test_planner_workers_get_the_zip_backport(spark, tmp_path):
+    """Spark forks the data-source planner workers from the stock
+    ``pyspark.daemon``; importing the xlsx source patches them, so the
+    second write's commit runs in a worker with the lazy invalidation."""
+    from xlsx_to_database_spark.sources.xlsx import XlsxDataSource, XlsxWriter
+
+    class ProbeWriter(XlsxWriter):
+        def commit(self, messages):
+            super().commit(messages)
+            import json
+            import os
+            import zipimport
+
+            from xlsx_to_database_spark import daemon
+
+            with open(os.path.join(self.path, "probe.json"), "w") as f:
+                json.dump(zipimport.zipimporter.invalidate_caches is daemon._invalidate_caches, f)
+
+    class ProbeSource(XlsxDataSource):
+        @classmethod
+        def name(cls):
+            return "xlsx_probe"
+
+        def writer(self, schema, overwrite):
+            return ProbeWriter(schema, dict(self.options), overwrite)
+
+    spark.dataSource.register(ProbeSource)
+    patched = []
+    for i in range(2):
+        out = tmp_path / f"out{i}"
+        spark.range(3).write.format("xlsx_probe").mode("overwrite").save(str(out))
+        patched.append(json.loads((out / "probe.json").read_text()))
+    assert patched[1] is True, patched
+
+
+@pytest.mark.parametrize("in_worker", [False, True])
+def test_source_import_patches_zipimport_only_in_workers(in_worker):
+    script = (
+        "import zipimport\n"
+        "import xlsx_to_database_spark.sources.xlsx\n"
+        "print(zipimport.zipimporter.invalidate_caches.__module__)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHON_WORKER_FACTORY_SECRET"}
+    env["PYTHONPATH"] = ROOT
+    if in_worker:
+        env["PYTHON_WORKER_FACTORY_SECRET"] = "secret"
+    proc = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    patched = in_worker and sys.version_info < (3, 12)
+    assert proc.stdout.strip() == ("xlsx_to_database_spark.daemon" if patched else "zipimport")

@@ -13,6 +13,17 @@ lookup that needs it reads it again, once. On older interpreters this
 module back-ports that behaviour into the daemon before it hands over
 to ``pyspark.daemon``; the workers it forks inherit it. On 3.12 and
 later it only delegates.
+
+Spark forks the data-source planner workers (``create_data_source``,
+``plan_data_source_read``, ``write_into_data_source``,
+``commit_data_source_write``) from the stock ``pyspark.daemon`` whatever
+``spark.python.daemon.module`` says, so this module never runs there.
+They get the back-port from ``sources/xlsx.py`` instead, which applies
+it on import inside any Python worker (those carry
+``PYTHON_WORKER_FACTORY_SECRET``; the driver does not). The first call
+in each planner worker has already invalidated the caches eagerly
+before that import, so it still pays the re-read; later calls in the
+reused worker do not.
 """
 
 from __future__ import annotations

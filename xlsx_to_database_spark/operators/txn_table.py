@@ -98,6 +98,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import unicodedata
 from typing import Any, Optional
 from urllib.parse import unquote
 
@@ -184,6 +185,31 @@ def _write_sidecar(
         )
         parts.append(t.cast(fresh.schema))
     pq.write_table(pa.concat_tables(parts), os.path.join(root, dv_rel))
+
+
+#: ASCII characters ``java.net.URI`` leaves unquoted in a path.
+_URI_PATH_SAFE = frozenset(
+    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"
+    "-_.!~*'()" ":@&=+$," ";/"
+)
+
+
+def _uri_path(path: str) -> str:
+    """``path`` quoted as Hadoop's ``Path.toUri()`` quotes it (the
+    multi-argument ``java.net.URI`` constructor): ASCII outside
+    ``_URI_PATH_SAFE`` (``%`` and space included) and non-ASCII space
+    or control characters become UTF-8 ``%XX``; other non-ASCII
+    characters stay as they are. This is how ``_metadata.file_path``
+    spells a local file after its ``file:`` scheme."""
+    out = []
+    for ch in path:
+        if ch in _URI_PATH_SAFE or (
+            ch > "\x9f" and unicodedata.category(ch) not in ("Zs", "Zl", "Zp")
+        ):
+            out.append(ch)
+        else:
+            out.append("".join(f"%{b:02X}" for b in ch.encode("utf-8")))
+    return "".join(out)
 
 
 class TxnTable:
@@ -1279,53 +1305,30 @@ class TxnTable:
     def _fp_uri(self, e: dict) -> str:
         """The ``_metadata.file_path`` URI Spark reports for an
         entry's data file — the scan-side identity half."""
-        return "file:" + os.path.abspath(os.path.join(self.path, e["path"]))
+        return "file:" + _uri_path(os.path.abspath(os.path.join(self.path, e["path"])))
 
-    #: Above this many pairs, _literal_df switches from a literal plan
-    #: to an Arrow createDataFrame: a 100k-struct literal bloats the
-    #: plan tree (analysis cost grows with expression count), while
-    #: Arrow ships one batch. Below it, the literal plan avoids
-    #: createDataFrame's ~0.2-0.5 s Python-RDD schema application.
-    _LITERAL_DF_MAX = 8192
+    def _dv_fresh(self, man: dict, hits) -> Any:
+        """Sidecar rows (``path`` = the pinned DV key, ``row_index``) for
+        ``hits``, matched rows collected as Arrow with their ``__fp``
+        URI and ``__ri``. A URI that no manifest entry names raises:
+        dropping its rows would lose them silently."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-    def _literal_df(self, pairs: list[tuple], a: str, b: str) -> DataFrame:
-        """A two-string-column DataFrame from driver pairs. Small
-        (manifest-bounded) inputs become a PURE LITERAL plan
-        (struct-array explode → LocalRelation-class); past
-        ``_LITERAL_DF_MAX`` files the same contract is served by an
-        Arrow-batched ``createDataFrame`` — constant-size plan, one
-        Arrow batch, no per-expression analysis cost."""
-        if len(pairs) > self._LITERAL_DF_MAX:
-            # A pandas frame (not a list of tuples) is what actually
-            # takes the Arrow conversion path in PySpark — a plain
-            # local-relation createDataFrame from Python tuples ships
-            # pickled rows (round-8 ADVICE).
-            import pandas as pd
-
-            from pyspark.sql.types import StringType, StructField, StructType
-
-            return self.spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        a: [str(x) for x, _ in pairs],
-                        b: [str(y) for _, y in pairs],
-                    }
-                ),
-                StructType(
-                    [StructField(a, StringType()), StructField(b, StringType())]
-                ),
+        key_of = {self._fp_uri(e): self._dv_key(e) for e in man["files"]}
+        fps = hits.column("__fp")
+        unknown = [u for u in pc.unique(fps).to_pylist() if u not in key_of]
+        if unknown:
+            raise RuntimeError(
+                f"scan of {self.path} reported data files its manifest "
+                f"does not name: {unknown[:3]}"
             )
-        arr = F.array(
-            *[
-                F.struct(F.lit(x).alias(a), F.lit(y).alias(b))
-                for x, y in pairs
-            ]
-        )
-        return (
-            self.spark.range(1)
-            .select(F.explode(arr).alias("s"))
-            .select("s.*")
-        )
+        uris = pa.array(list(key_of), type=pa.string())
+        keys = pa.array(list(key_of.values()), type=pa.string())
+        return pa.table({
+            "path": pc.take(keys, pc.index_in(fps, value_set=uris)),
+            "row_index": hits.column("__ri"),
+        })
 
     def _scan_identity(
         self, entries: list[dict], man: Optional[dict] = None
@@ -2740,15 +2743,6 @@ class TxnTable:
         in the manifest stays the PHYSICAL footer count — live rows are
         ``rows - dv.deleted``."""
         man = self.manifest()
-        hits, key_map = self._dv_probe(man, pred)
-        matches = (
-            hits.select("__fp", "__ri")
-            .join(F.broadcast(key_map), "__fp")
-            .select(
-                F.col("__key").alias("path"),
-                F.col("__ri").alias("row_index"),
-            )
-        )
         # Collect-first: the full probe scan runs ONCE, streaming the
         # matches to the driver as Arrow batches (toArrow) — a
         # coalesce(1) staging write would collapse the probe scan into
@@ -2757,30 +2751,25 @@ class TxnTable:
         # Arrow, the same class of metadata work as the manifest JSON
         # itself. A delete whose match set is too big for driver
         # memory is rewrite-shaped and belongs to delete_where() (the
-        # documented contract).
-        fresh = matches.toArrow()
-        if not fresh.num_rows:
+        # documented contract). The matched URIs map to their DV keys
+        # here too, on the driver.
+        hits = self._dv_probe(man, pred).select("__fp", "__ri").toArrow()
+        if not hits.num_rows:
             return self.latest_version(), 0, 0
-        return self._dv_commit("delete_dv", man, fresh)
+        return self._dv_commit("delete_dv", man, self._dv_fresh(man, hits))
 
-    def _dv_probe(self, man: dict, pred) -> tuple[DataFrame, DataFrame]:
-        """(live rows of ``man`` matching ``pred``, key map) for the DV
-        ops. Rows carry their identity (``__fp``, ``__ri``) with
-        existing DVs applied, so re-deleting an already-deleted row is
-        a no-op and never double-counts; ``pred`` sees logical names.
-        The key map (``__fp`` -> ``__key``, the pinned DV key)
-        translates matched rows' URIs on the SMALL side (matches only),
-        keeping the scan join-free."""
-        entries = man["files"]
+    def _dv_probe(self, man: dict, pred) -> DataFrame:
+        """The live rows of ``man`` matching ``pred``, for the DV ops.
+        Rows carry their identity (``__fp``, ``__ri``) with existing DVs
+        applied, so re-deleting an already-deleted row is a no-op and
+        never double-counts; ``pred`` sees logical names. The caller
+        collects the matches and maps their URIs to DV keys
+        (``_dv_fresh``), keeping the scan join-free."""
         scan = self._to_logical(
-            self._live_scan(entries, man), man.get("columns"),
+            self._live_scan(man["files"], man), man.get("columns"),
             extra=("__fp", "__ri"),
         )
-        key_map = self._literal_df(
-            [(self._fp_uri(e), self._dv_key(e)) for e in entries],
-            "__fp", "__key",
-        )
-        return scan.filter(pred), key_map
+        return scan.filter(pred)
 
     def _dv_commit(
         self, op: str, man: dict, fresh, extra: list[dict] = ()
@@ -2864,23 +2853,22 @@ class TxnTable:
         row as an exact pre-image ``delete`` + post-image ``insert``."""
         man = self.manifest()
         cmap = man.get("columns")
-        hits, key_map = self._dv_probe(man, pred)
         # Collect-first (same as delete_where_dv): the matched set is
         # KB/MB-scale by contract, so it streams to the driver as Arrow
         # once. Only the updated-row APPEND below goes back through
         # Spark — it writes data files from the Arrow-backed local
         # relation.
-        staged_all = hits.join(F.broadcast(key_map), "__fp").toArrow()
+        staged_all = self._dv_probe(man, pred).toArrow()
         if not staged_all.num_rows:
             return self.latest_version(), 0, 0
+        # The sidecar carries the staged rows' old positions.
+        fresh = self._dv_fresh(man, staged_all)
         # coalesce(1) restores the op's contract that the updated
         # copies append as ONE new file: a local Arrow relation
         # parallelizes across default-parallelism partitions, and
         # _stage_files writes one file per partition.
         staged = self.spark.createDataFrame(staged_all).coalesce(1)
-        data_cols = [
-            c for c in staged.columns if c not in ("__fp", "__ri", "__key")
-        ]
+        data_cols = [c for c in staged.columns if c not in ("__fp", "__ri")]
         bad = sorted(set(set_exprs) - set(data_cols))
         if bad:
             raise ValueError(f"update_where_dv: unknown column(s) {bad}")
@@ -2923,8 +2911,4 @@ class TxnTable:
                 ]
             )
         new_files, _ = self._stage_logical(updated, man["version"] + 1, man)
-        # The sidecar carries the staged rows' old positions.
-        fresh = staged_all.select(["__key", "__ri"]).rename_columns(
-            ["path", "row_index"]
-        )
         return self._dv_commit("update_dv", man, fresh, new_files)

@@ -9,8 +9,11 @@ Catalyst optimizes like any other scan.
 Parallelism: ``partitions()`` returns one InputPartition per selected
 worksheet, so an N-sheet workbook decodes on N executor Python workers
 concurrently (xlsx sheets are independently-compressed zip members —
-per-sheet is the natural parallel grain; a single huge sheet streams
-within one task in O(row) memory).
+per-sheet is the natural parallel grain). A sheet whose XML exceeds
+``xlsx_io.SLICE_BYTES`` is split further into slices that start at row
+boundaries (``Workbook.sheet_slices``), one partition each, so a single
+big sheet decodes on several cores; only the first slice drops the
+header row.
 
 Two read paths run the same ``schema()``, ``partitions()`` and
 ``read()``. ``spark.read.format("xlsx")`` is the DataFrameReader/SQL
@@ -29,11 +32,20 @@ after decode and return the same rows.
 Options: ``sheet`` (name, or omitted = first sheet), ``header``
 (default true), ``sanitize`` (default true: headers → SQL identifiers),
 ``sampleRows`` (inference sample size, default 200).
+
+Python workers: Spark starts the data-source planner workers
+(``create_data_source``, ``plan_data_source_read``,
+``write_into_data_source``, ``commit_data_source_write``) from the stock
+``pyspark.daemon``, whatever ``spark.python.daemon.module`` says, so
+they miss the engine daemon's zip-import back-port. Every such worker
+unpickles this module before its call, and importing it in a worker
+applies the back-port there (see ``daemon.py``).
 """
 
 from __future__ import annotations
 
 import itertools
+import os
 from typing import Any, Iterator
 
 from pyspark.sql.datasource import (
@@ -51,12 +63,27 @@ from pyspark.sql.types import StructType
 from xlsx_to_database_spark.sources import infer as I
 from xlsx_to_database_spark.sources import xlsx_io
 
+# Python workers carry the worker factory's secret; the driver does not.
+if "PYTHON_WORKER_FACTORY_SECRET" in os.environ:
+    from xlsx_to_database_spark import daemon
+
+    daemon.backport_lazy_zip_invalidation()
+
 
 class SheetPartition(InputPartition):
-    def __init__(self, path: str, sheet: str, range_name: str | None = None):
+    """One selected sheet, or one slice of it (``piece``, an
+    ``xlsx_io.SheetSlice``), or a named range. ``first``: the partition
+    starts at the sheet's first row, the header row."""
+
+    def __init__(
+        self, path: str, sheet: str, range_name: str | None = None,
+        piece: xlsx_io.SheetSlice | None = None, first: bool = True,
+    ):
         self.path = path
         self.sheet = sheet
         self.range_name = range_name
+        self.piece = piece
+        self.first = first
 
 
 def _range_opt(options: dict) -> str | None:
@@ -66,13 +93,8 @@ def _range_opt(options: dict) -> str | None:
     return options.get("range") or None
 
 
-def _selected_sheets(path: str, options: dict) -> list[str]:
-    wb = xlsx_io.read_workbook(path)
-    try:
-        names = list(wb.sheets)
-        hidden = wb.hidden_sheets
-    finally:
-        wb.close()
+def _selected_sheets(wb: xlsx_io.Workbook, options: dict) -> list[str]:
+    names, hidden, path = list(wb.sheets), wb.hidden_sheets, wb.path
     # visibleOnly (default true) drops state="hidden"/"veryHidden"
     # sheets from DEFAULT and WILDCARD selection — scratch sheets don't
     # silently pollute a union read. Explicitly-named sheets are always
@@ -153,7 +175,11 @@ class XlsxDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("xlsx source requires a path")
-        sheets = _selected_sheets(path, self.options)
+        wb = xlsx_io.read_workbook(path)
+        try:
+            sheets = _selected_sheets(wb, self.options)
+        finally:
+            wb.close()
         if not sheets:
             raise ValueError(f"workbook {path} has no sheets")
         # Schema from the first selected sheet; multi-sheet reads union
@@ -197,7 +223,19 @@ class XlsxReader(DataSourceReader):
         rng = _range_opt(self.options)
         if rng:  # a named range is one rectangle: one partition
             return [SheetPartition(self.path, "", range_name=rng)]
-        return [SheetPartition(self.path, s) for s in _selected_sheets(self.path, self.options)]
+        fill = _fill_merged(self.options)
+        parts = []
+        wb = xlsx_io.read_workbook(self.path)
+        try:
+            for sheet in _selected_sheets(wb, self.options):
+                slices = wb.sheet_slices(sheet, fill)
+                parts += [
+                    SheetPartition(self.path, sheet, piece=piece, first=i == 0)
+                    for i, piece in enumerate(slices)
+                ] or [SheetPartition(self.path, sheet)]
+        finally:
+            wb.close()
+        return parts
 
     def read(self, partition: SheetPartition) -> Iterator[tuple]:
         has_header = str(self.options.get("header", "true")).lower() != "false"
@@ -214,14 +252,17 @@ class XlsxReader(DataSourceReader):
         ]
         wb = xlsx_io.read_workbook(partition.path)
         try:
-            rows = (
-                wb.iter_range(partition.range_name)
-                if partition.range_name
-                else wb.iter_rows(
-                    partition.sheet, fill_merged=_fill_merged(self.options)
+            if partition.range_name:
+                rows = wb.iter_range(partition.range_name)
+            else:
+                rows = (
+                    row
+                    for batch in wb.row_batches(
+                        partition.sheet, _fill_merged(self.options), partition.piece
+                    )
+                    for _, row in batch
                 )
-            )
-            if has_header:
+            if has_header and partition.first:
                 next(rows, None)
             for row in rows:
                 vals = tuple(

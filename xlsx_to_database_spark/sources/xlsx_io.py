@@ -2,7 +2,8 @@
 
 No openpyxl in this environment (SURVEY.md §5.4), and the reference
 class of tools parses the format directly, so this module implements
-the needed subset over ``zipfile`` + ``xml.etree``:
+the needed subset over ``zipfile`` + ``pyexpat`` (+ ``xml.etree`` for
+the small workbook, relationship and style parts):
 
 reader: workbook/sheet enumeration, shared strings, inline strings,
 cell type codes (s/b/str/inlineStr/e, default numeric), style-driven
@@ -13,22 +14,52 @@ writer: multi-sheet workbooks with shared strings, typed cells
 (bool/number/string/datetime with a date style) — used for round-trip
 tests and for staging oracle-checkable workbooks from the testdata.
 
-Both sides stream row-by-row (iterparse / incremental write); memory is
-O(row + shared strings), never O(sheet) — the property that lets one
-Spark task decode one big sheet.
+Memory. The reader inflates a worksheet in ``_CHUNK``-byte pieces into
+one namespace-aware ``pyexpat`` parser and hands the rows decoded from
+each piece to the caller, so a sheet decodes in O(chunk + the rows of
+one piece + shared strings) whatever its size. A slice of a sheet
+(``sheet_slices``) is decoded the same way, from the document head plus
+its own rows, within the same bound. The writer is not streaming:
+``write_workbook`` builds each sheet's XML as one string, so it holds
+every row of the workbook plus their XML, O(workbook). The xlsx sink
+(``XlsxWriter.write``) lists its whole Spark partition and writes it as
+one workbook, so an export partition must fit in a worker's memory.
+
+Slicing. A sheet whose uncompressed XML exceeds ``SLICE_BYTES`` is read
+as several byte ranges, each starting at a ``<row`` start tag, so one
+big sheet decodes on several cores. ``ZipInfo.file_size`` gives the size
+without inflating anything. 384 KiB of sheet XML is about a thousand
+rows of an 11-column numeric sheet, some 30 ms of decode on one core; a
+much smaller slice would spend about as long on its task's fixed cost
+(scheduling, opening the workbook, reading its shared strings and
+styles) as on decoding. Sheets of a few hundred KB stay whole.
 """
 
 from __future__ import annotations
 
+import math
+import pyexpat
 import re
 import zipfile
 from datetime import datetime, timedelta
-from typing import Any, Iterator
+from typing import Any, Iterator, NamedTuple
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape, quoteattr
 
-NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
+_MAIN = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+NS = "{" + _MAIN + "}"
 REL_NS = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
+
+#: Uncompressed worksheet XML above which a sheet is read in slices.
+SLICE_BYTES = 384 << 10
+
+#: Bytes of a zip member inflated and parsed per step.
+_CHUNK = 1 << 16
+
+# pyexpat names a namespaced element "<namespace URI> <local name>".
+_NAMES = (_ROW, _C, _V, _IS, _R, _T, _SI, _MERGE) = tuple(
+    f"{_MAIN} {n}" for n in ("row", "c", "v", "is", "r", "t", "si", "mergeCell")
+)
 
 #: Excel built-in number-format ids that render as dates/times.
 _DATE_BUILTIN_FMTS = set(range(14, 23)) | set(range(45, 48))
@@ -51,23 +82,10 @@ def escape_oox(s: str) -> str:
 
 def unescape_oox(s: str) -> str:
     """Inverse of :func:`escape_oox` (also decodes files Excel wrote)."""
+    if "_x" not in s:
+        return s
     return _OOX_SEQ.sub(lambda m: chr(int(m.group(1), 16)), s)
 
-
-def _rich_text(el) -> str:
-    """Visible text of an ``<si>`` or ``<is>`` element: the direct
-    ``<t>`` plus rich-text run ``<r><t>`` children — NOT a blanket
-    ``iter('t')``, which would also pick up phonetic ``<rPh>`` furigana
-    runs and corrupt values from IME-authored files."""
-    parts = []
-    t = el.find(f"{NS}t")
-    if t is not None:
-        parts.append(t.text or "")
-    for r in el.findall(f"{NS}r"):
-        rt = r.find(f"{NS}t")
-        if rt is not None:
-            parts.append(rt.text or "")
-    return "".join(parts)
 
 # Epochs for Excel's 1900 date system. Serials ≥ 61 are relative to
 # 1899-12-30 (absorbing the phantom 1900-02-29); serials ≤ 59 to
@@ -135,6 +153,277 @@ def _is_date_format(fmt_code: str) -> bool:
     return bool(_DATE_TOKEN_RE.search(_STRIP_RE.sub("", fmt_code)))
 
 
+class _RichText:
+    """Visible text of one ``<si>`` or ``<is>`` element, fed the events
+    of its descendants: its first direct ``<t>``, then the first
+    ``<t>`` of each rich-text run ``<r>``. Phonetic ``<rPh>`` runs
+    (furigana in IME-authored files) are left out — a blanket
+    collection of every ``<t>`` would corrupt such values. ``texts`` is
+    the list the parser appends character data to."""
+
+    __slots__ = ("texts", "path", "direct", "runs", "mark", "depth", "run_done")
+
+    def __init__(self, texts: list[str]):
+        self.texts = texts
+        self.path: list[str] = []  # open elements below the container
+        self.direct: str | None = None
+        self.runs: list[str] = []
+        self.mark = -1  # where in texts the <t> being read starts
+        self.depth = 0  # len(path) of that <t>
+        self.run_done = False
+
+    def start(self, name: str) -> None:
+        path = self.path
+        path.append(name)
+        depth = len(path)
+        if depth == 1:
+            if name is _R:
+                self.run_done = False
+            elif name is _T and self.direct is None and self.mark < 0:
+                self.mark, self.depth = len(self.texts), 1
+        elif depth == 2 and name is _T and path[0] is _R and not self.run_done:
+            self.mark, self.depth = len(self.texts), 2
+
+    def end(self) -> None:
+        if self.mark >= 0 and len(self.path) == self.depth:
+            text = "".join(self.texts[self.mark:])
+            if self.depth == 1:
+                self.direct = text
+            else:
+                self.runs.append(text)
+                self.run_done = True
+            self.mark = -1
+        self.path.pop()
+
+    def text(self) -> str:
+        runs = "".join(self.runs)
+        return runs if self.direct is None else self.direct + runs
+
+
+def _parser(start, end=None, chars=None):
+    # Names arrive interned as the constants above, so they compare by
+    # identity first.
+    p = pyexpat.ParserCreate(namespace_separator=" ", intern={n: n for n in _NAMES})
+    p.buffer_text = True
+    p.ordered_attributes = True
+    p.StartElementHandler = start
+    if end is not None:
+        p.EndElementHandler = end
+    if chars is not None:
+        p.CharacterDataHandler = chars
+    return p
+
+
+def _attr(attrs: list[str], key: str) -> str | None:
+    for i in range(0, len(attrs), 2):
+        if attrs[i] == key:
+            return attrs[i + 1]
+    return None
+
+
+def _pieces(f, skip: int = 0, length: int | None = None) -> Iterator[bytes]:
+    """``length`` bytes (or the rest) of stream ``f`` after ``skip``
+    bytes, in pieces of at most ``_CHUNK``; the skipped bytes are
+    inflated and dropped, never held."""
+    while skip > 0:
+        got = f.read(min(_CHUNK, skip))
+        if not got:
+            return
+        skip -= len(got)
+    while length is None or length > 0:
+        got = f.read(_CHUNK if length is None else min(_CHUNK, length))
+        if not got:
+            return
+        if length is not None:
+            length -= len(got)
+        yield got
+
+
+#: Integers up to this size survive a round trip through float64.
+_EXACT_INT = 1 << 53
+_DIGITS = "0123456789"
+
+
+def _number(raw: str) -> int | float:
+    """A numeric cell's ``<v>``: an int when the text is an integer
+    literal, else a float. An integer too big for float64 to hold
+    exactly is read through float, as Excel itself stores it."""
+    try:
+        v = int(raw)
+    except ValueError:
+        return float(raw)
+    if len(raw) < 16 or -_EXACT_INT <= v <= _EXACT_INT:
+        return v
+    num = float(raw)
+    return int(num) if num.is_integer() else num
+
+
+def _row_parser(shared: list[str], date_styles: set[int], date1904: bool):
+    """A pyexpat parser for worksheet XML and the list it appends each
+    decoded ``<row>`` to, as (0-based row number, cell values)."""
+    out: list[tuple[int, list[Any]]] = []
+    texts: list[str] = []  # character data since the last row ended
+    is_date: dict[str, bool] = {}  # s attribute -> date number format
+    columns: dict[str, int] = {}  # column letters of a cell ref -> index
+    row: list[Any] = []
+    rn = -1
+    # The open cell: its t and s attributes, the text of its first
+    # <v> (None before one) and of its <is>.
+    kind, style, raw, inline = "n", None, None, None
+    mark = -1  # where in texts the cell's first <v> starts, while open
+    rich: _RichText | None = None  # the <is> being read
+
+    def start(name, attrs):  # attrs: [name, value, name, value, ...]
+        nonlocal row, rn, kind, style, raw, inline, mark, rich
+        if rich is not None:
+            rich.start(name)
+        elif name is _C:
+            raw = inline = None
+            if len(attrs) == 2 and attrs[0] == "r":
+                ref, kind, style = attrs[1], "n", None
+            else:
+                ref, kind, style = _attr(attrs, "r"), _attr(attrs, "t") or "n", _attr(attrs, "s")
+            if ref:
+                letters = ref.rstrip(_DIGITS)
+                idx = columns.get(letters)
+                if idx is None:
+                    idx = columns[letters] = _col_index(letters)
+                if idx > len(row):
+                    row.extend([None] * (idx - len(row)))
+        elif name is _V:
+            if raw is None:
+                mark = len(texts)
+        elif name is _ROW:
+            r = _attr(attrs, "r")
+            rn = int(r) - 1 if r is not None else rn + 1
+            row = []
+        elif name is _IS and inline is None:
+            rich = _RichText(texts)
+
+    def end(name):
+        nonlocal raw, inline, mark, rich
+        if rich is not None:
+            if rich.path:
+                rich.end()
+            else:
+                inline, rich = rich.text(), None
+        elif name is _V:
+            if mark >= 0:
+                raw = texts[mark] if len(texts) == mark + 1 else "".join(texts[mark:])
+                mark = -1
+        elif name is _C:
+            if kind == "inlineStr":
+                v = None if inline is None else unescape_oox(inline)
+            elif not raw:
+                v = None
+            elif kind == "n":
+                if style is not None and (
+                    is_date[style] if style in is_date
+                    else is_date.setdefault(style, int(style) in date_styles)
+                ):
+                    v = excel_serial_to_datetime(float(raw), date1904)
+                elif "." in raw or "e" in raw or "E" in raw:
+                    v = float(raw)
+                else:
+                    v = _number(raw)
+            elif kind == "s":
+                v = shared[int(raw)]
+            elif kind == "str":
+                v = unescape_oox(raw)
+            elif kind == "b":
+                v = raw == "1"
+            elif kind == "e":
+                v = None
+            else:
+                v = _number(raw)
+            row.append(v)
+        elif name is _ROW:
+            out.append((rn, row))
+            texts.clear()
+
+    return _parser(start, end, texts.append), out
+
+
+class _Layout(NamedTuple):
+    """Where a worksheet's rows sit in its XML (``_scan_sheet``)."""
+
+    head: bytes  # up to and including the <sheetData> start tag
+    cuts: list[tuple[int, int]]  # (offset, 0-based row number) of row starts
+    tail: bytes  # from the </sheetData> end tag on
+
+
+_SHEET_DATA = re.compile(rb"<((?:[^\s<>/:?!]+:)?)sheetData(?=[\s/>])[^>]*>")
+_ROW_NUMBER = re.compile(rb"\sr\s*=\s*[\"'](\d+)")
+_WINDOW = 4096  # bytes kept between pieces: a start tag split across two
+
+
+def _scan_sheet(f, targets: list[int] = ()) -> _Layout | None:
+    """One streaming pass over worksheet XML. ``cuts`` holds, for each
+    target offset, the first ``<row>`` start tag at or after it whose
+    ``r`` attribute gives its row number (a target with none before the
+    end of ``<sheetData>`` gets no cut). None when the sheet has no
+    ``<sheetData>`` with rows in it."""
+    pieces = _pieces(f)
+    data = b""
+    for piece in pieces:
+        data += piece
+        m = _SHEET_DATA.search(data)
+        if m is not None:
+            break
+    else:
+        return None
+    if m.group(0).endswith(b"/>"):
+        return None
+    prefix, head_end = m.group(1), m.end()
+    head = data[:head_end]
+    row_tag = re.compile(b"<" + re.escape(prefix) + rb"row(?=[\s/>])[^>]*>")
+    end_tag = b"</" + prefix + b"sheetData"
+    cuts: list[tuple[int, int]] = []
+    pending = [t for t in targets if t > head_end]
+    base, pos = 0, head_end  # data holds bytes [base, base + len(data))
+    while True:
+        stop = data.find(end_tag)
+        while pending:
+            tag = row_tag.search(data, max(pending[0], pos, base) - base)
+            if tag is None or (stop >= 0 and tag.start() > stop):
+                break
+            pending.pop(0)
+            number = _ROW_NUMBER.search(tag.group(0))
+            if number is not None:
+                cuts.append((base + tag.start(), int(number.group(1)) - 1))
+                pos = base + tag.end()
+        if stop >= 0:
+            return _Layout(head, cuts, data[stop:] + b"".join(pieces))
+        piece = next(pieces, None)
+        if piece is None:
+            return _Layout(head, cuts, b"")
+        keep = min(len(data), _WINDOW)
+        base += len(data) - keep
+        data = data[len(data) - keep:] + piece
+
+
+class SheetSlice(NamedTuple):
+    """A run of rows of one worksheet (``Workbook.sheet_slices``)."""
+
+    span: tuple[int, int, int | None]  # head end, first byte, end byte
+    merges: list[tuple[int, int, int, int]]  # the sheet's merged ranges
+    fills: dict[int, Any]  # merged range -> top-left value carried in
+
+
+def _fill_merged_row(ranges, fills: dict[int, Any], rn: int, row: list[Any]) -> None:
+    """Propagate each merged range's top-left value across its cells in
+    row ``rn``; ``fills`` holds the top-left values seen so far."""
+    for k, (r1, c1, r2, c2) in enumerate(ranges):
+        if rn == r1 and len(row) > c1 and row[c1] is not None:
+            fills[k] = row[c1]
+        if r1 <= rn <= r2 and k in fills:
+            while len(row) <= c2:
+                row.append(None)
+            for cc in range(c1, c2 + 1):
+                if row[cc] is None:
+                    row[cc] = fills[k]
+
+
 class Workbook:
     """Lazily-parsed xlsx workbook."""
 
@@ -176,13 +465,36 @@ class Workbook:
     @property
     def shared_strings(self) -> list[str]:
         if self._shared is None:
-            self._shared = []
+            out: list[str] = []
+            texts: list[str] = []
+            rich: _RichText | None = None
+
+            def start(name, attrs):
+                nonlocal rich
+                if rich is not None:
+                    rich.start(name)
+                elif name is _SI:
+                    rich = _RichText(texts)
+
+            def end(name):
+                nonlocal rich
+                if rich is None:
+                    return
+                if rich.path:
+                    rich.end()
+                else:
+                    out.append(unescape_oox(rich.text()))
+                    rich = None
+                    texts.clear()
+
             name = "xl/sharedStrings.xml"
             if name in self._zf.namelist():
-                for _, el in ET.iterparse(self._zf.open(name)):
-                    if el.tag == f"{NS}si":
-                        self._shared.append(unescape_oox(_rich_text(el)))
-                        el.clear()
+                p = _parser(start, end, texts.append)
+                with self._zf.open(name) as f:
+                    for piece in _pieces(f):
+                        p.Parse(piece, False)
+                p.Parse(b"", True)
+            self._shared = out
         return self._shared
 
     @property
@@ -267,19 +579,66 @@ class Workbook:
 
     def merged_ranges(self, sheet_name: str) -> list[tuple[int, int, int, int]]:
         """(row1, col1, row2, col2) 0-based inclusive bounds of each
-        ``<mergeCell ref="A2:B4"/>`` on the sheet. One cheap streaming
-        pre-pass; sheets without merges return []."""
+        ``<mergeCell ref="A2:B4"/>`` on the sheet. ``<mergeCells>``
+        follows ``<sheetData>``, so only the document around the rows is
+        parsed; the rows are inflated and skipped. Sheets without
+        merges return []."""
         out: list[tuple[int, int, int, int]] = []
-        for _, el in ET.iterparse(self._zf.open(self.sheets[sheet_name])):
-            if el.tag == f"{NS}mergeCell":
-                ref = el.get("ref", "")
+
+        def start(name, attrs):
+            if name is _MERGE:
+                ref = _attr(attrs, "ref") or ""
                 if ":" in ref:
                     a, b = ref.split(":", 1)
                     r1 = int("".join(ch for ch in a if ch.isdigit())) - 1
                     r2 = int("".join(ch for ch in b if ch.isdigit())) - 1
                     out.append((r1, _col_index(a), r2, _col_index(b)))
-            el.clear()
+
+        member = self.sheets[sheet_name]
+        with self._zf.open(member) as f:
+            layout = _scan_sheet(f)
+        doc = self._zf.read(member) if layout is None else layout.head + layout.tail
+        _parser(start).Parse(doc, True)
         return out
+
+    def row_batches(
+        self, sheet_name: str, fill_merged: bool = False,
+        piece: SheetSlice | None = None,
+    ) -> Iterator[list[tuple[int, list[Any]]]]:
+        """The sheet's rows as lists of (0-based row number, values),
+        one list per inflated piece of XML. ``piece`` (one of
+        ``sheet_slices``) limits the rows to that slice: the parser is
+        fed the document head and then the slice's bytes, and merged
+        ranges fill from the top-left values the slice carries in."""
+        if piece is not None:
+            return self._rows(sheet_name, piece.merges, dict(piece.fills), piece.span)
+        ranges = self.merged_ranges(sheet_name) if fill_merged else []
+        return self._rows(sheet_name, ranges, {}, None)
+
+    def _rows(self, sheet_name, ranges, fills, span):
+        p, out = _row_parser(self.shared_strings, self.date_styles, self.date1904)
+        with self._zf.open(self.sheets[sheet_name]) as f:
+            if span is None:
+                pieces, last = _pieces(f), True
+            else:
+                head_end, begin, end = span
+                last = end is None
+                if begin == head_end:
+                    pieces = _pieces(f, 0, end)
+                else:
+                    p.Parse(f.read(head_end), False)
+                    pieces = _pieces(f, begin - head_end, None if last else end - begin)
+            for data in pieces:
+                p.Parse(data, False)
+                if out:
+                    batch = out.copy()
+                    out.clear()
+                    if ranges:
+                        for rn, row in batch:
+                            _fill_merged_row(ranges, fills, rn, row)
+                    yield batch
+            if last:
+                p.Parse(b"", True)
 
     def iter_rows(
         self, sheet_name: str, fill_merged: bool = False,
@@ -295,60 +654,51 @@ class Workbook:
         ``fill_merged=True`` propagates each merged range's top-left
         value to every cell of the range — the report-layout unpivot
         every spreadsheet ETL needs (a region label merged down its
-        group's rows becomes a proper column). Costs one extra streaming
-        pass to collect ``<mergeCells>`` (they live AFTER sheetData);
+        group's rows becomes a proper column). ``<mergeCells>`` live
+        AFTER sheetData, so they are collected first (``merged_ranges``);
         row-major order guarantees the top-left value is seen before any
         cell it must fill, so the fill is one dict of active ranges."""
-        member = self.sheets[sheet_name]
-        shared, date_styles = self.shared_strings, self.date_styles
-        ranges = self.merged_ranges(sheet_name) if fill_merged else []
-        fills: dict[int, Any] = {}  # range index -> top-left value
-        rn = -1
-        for _, el in ET.iterparse(self._zf.open(member)):
-            if el.tag != f"{NS}row":
-                continue
-            rn = int(el.get("r", rn + 2)) - 1
-            row: list[Any] = []
-            for c in el.iter(f"{NS}c"):
-                idx = _col_index(c.get("r", "")) if c.get("r") else len(row)
-                while len(row) < idx:
-                    row.append(None)
-                row.append(self._decode_cell(c, shared, date_styles))
-            if ranges:
-                for k, (r1, c1, r2, c2) in enumerate(ranges):
-                    if rn == r1 and len(row) > c1 and row[c1] is not None:
-                        fills[k] = row[c1]
-                    if r1 <= rn <= r2 and k in fills:
-                        while len(row) <= c2:
-                            row.append(None)
-                        for cc in range(c1, c2 + 1):
-                            if row[cc] is None:
-                                row[cc] = fills[k]
-            yield (rn, row) if numbered else row
-            el.clear()
+        for batch in self.row_batches(sheet_name, fill_merged):
+            if numbered:
+                yield from batch
+            else:
+                for _, row in batch:
+                    yield row
 
-    def _decode_cell(self, c, shared: list[str], date_styles: set[int]) -> Any:
-        t = c.get("t", "n")
-        if t == "inlineStr":
-            is_el = c.find(f"{NS}is")
-            return unescape_oox(_rich_text(is_el)) if is_el is not None else None
-        v = c.find(f"{NS}v")
-        if v is None or v.text is None:
-            return None
-        raw = v.text
-        if t == "s":
-            return shared[int(raw)]
-        if t == "str":
-            return unescape_oox(raw)
-        if t == "b":
-            return raw == "1"
-        if t == "e":
-            return None
-        # numeric; date if the cell style carries a date number format
-        num = float(raw)
-        if int(c.get("s", "-1")) in date_styles:
-            return excel_serial_to_datetime(num, self.date1904)
-        return int(num) if num.is_integer() and "e" not in raw.lower() and "." not in raw else num
+    def sheet_slices(self, sheet_name: str, fill_merged: bool = False) -> list[SheetSlice]:
+        """Split a sheet whose XML exceeds ``SLICE_BYTES`` into
+        ceil(size / SLICE_BYTES) slices that start at ``<row>`` start
+        tags; [] when the sheet stays whole. Under ``fill_merged`` a
+        merged range that crosses into a slice carries its top-left
+        value in: the slices holding such values are decoded here."""
+        member = self.sheets[sheet_name]
+        size = self._zf.getinfo(member).file_size
+        n = math.ceil(size / SLICE_BYTES)
+        if n < 2:
+            return []
+        with self._zf.open(member) as f:
+            layout = _scan_sheet(f, [size * k // n for k in range(1, n)])
+        if layout is None or not layout.cuts:
+            return []
+        head_end = len(layout.head)
+        starts = [head_end] + [at for at, _ in layout.cuts]
+        spans = list(zip([head_end] * len(starts), starts, starts[1:] + [None]))
+        if not fill_merged:
+            return [SheetSlice(s, [], {}) for s in spans]
+        ranges = self.merged_ranges(sheet_name)
+        firsts = [-1] + [rn for _, rn in layout.cuts]
+        out, carried = [], {}
+        for j, span in enumerate(spans):
+            lo = firsts[j]
+            hi = firsts[j + 1] if j + 1 < len(firsts) else math.inf
+            fills = {k: v for k, v in carried.items() if ranges[k][2] >= lo}
+            out.append(SheetSlice(span, ranges, fills))
+            if any(lo <= r1 < hi <= r2 for r1, _, r2, _ in ranges):
+                fills = dict(fills)  # decoding the slice adds its top-left values
+                for _ in self._rows(sheet_name, ranges, fills, span):
+                    pass
+            carried = fills
+        return out
 
     def close(self) -> None:
         self._zf.close()
