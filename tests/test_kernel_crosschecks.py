@@ -6,7 +6,9 @@ oracle parity alone can never catch a defect in the kernel itself
 (both engines would agree on the same wrong answer). These tests pin
 each kernel against a reference derived a DIFFERENT way: classic
 bisection for geohash, per-bit interleave for the Morton key, known
-geodesic distances for haversine.
+geodesic distances for haversine. The IVF probe ranking exists in two
+forms, a query-row expression and a driver-side helper; they are
+checked against each other.
 
 All checks batch their sample points into ONE literal frame per test
 (a single Spark job), not one job per example.
@@ -15,8 +17,6 @@ All checks batch their sample points into ONE literal frame per test
 from __future__ import annotations
 
 import random
-
-from pyspark.sql import functions as F
 
 _B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
@@ -85,7 +85,7 @@ def test_zvalue_matches_bit_interleave_and_is_injective(spark):
               (2 ** 16 - 1, 0), (1, 0), (0, 1)]
     pairs = list(dict.fromkeys(pairs))
     df = spark.createDataFrame(pairs, "a long, b long").select(
-        "a", "b", _zvalue(F.col("a"), F.col("b")).alias("z")
+        "a", "b", _zvalue("a", "b").alias("z")
     )
     got = df.collect()
 
@@ -127,3 +127,70 @@ def test_haversine_matches_known_geodesics(spark):
     got = [r.km for r in df.collect()]
     for (_, _, _, _, want), km in zip(cases, got):
         assert abs(km - want) < 0.01, (want, km)
+
+
+def _probe_both_sides(spark, cents, queries, nprobe):
+    """(driver-side cells, query-row expression cells) per query."""
+    from xlsx_to_database_spark.operators.similarity import (
+        _probe_cells,
+        _probe_cells_expr,
+    )
+
+    rows = spark.createDataFrame(
+        list(enumerate(queries)), "qid int, embedding array<double>"
+    ).select("qid", _probe_cells_expr(cents, "embedding", nprobe).alias("p"))
+    expr = {r.qid: list(r.p) for r in rows.collect()}
+    return [
+        (_probe_cells(cents, q, nprobe), expr[i])
+        for i, q in enumerate(queries)
+    ]
+
+
+def test_probe_cells_agree_on_ivf_centroids(spark, sf_dir):
+    """The driver-side probe (serving ops) and the query-row probe
+    expression (ops whose query is a row) pick the same cells, in the
+    same order, for the sf0.001 positional and trained IVF centroids
+    against 50 seeded query vectors."""
+    from xlsx_to_database_spark.catalog import table
+    from xlsx_to_database_spark.operators.similarity import (
+        _collect_codebook,
+        ivf_train_centroids,
+    )
+
+    e = table(spark, sf_dir, "embeddings")
+    rng = random.Random(2024)
+    for cents in (
+        _collect_codebook(e, 8, "vec_id", "embedding"),
+        ivf_train_centroids(e, 8),
+    ):
+        d = len(cents[0][1])
+        queries = [
+            [round(rng.uniform(-1, 1), 4) for _ in range(d)] for _ in range(50)
+        ]
+        for nprobe in (2, len(cents)):
+            for host, expr in _probe_both_sides(spark, cents, queries, nprobe):
+                assert host == expr and len(host) == nprobe, (host, expr)
+
+
+def test_probe_cells_agree_on_ties(spark):
+    """Ties at 6 decimal places and exact ties both rank by centroid
+    id, on both sides of the probe contract."""
+    cents = sorted([
+        (7, [1.0, 0.0, 0.0]),
+        (2, [1.0, 1e-4, 0.0]),   # cosine 1 - 5e-9: 1.000000 at 6dp
+        (4, [2.0, 4e-4, 0.0]),   # 1 - 2e-8, scaled: 1.000000 at 6dp
+        (1, [0.0, 1.0, 0.0]),
+        (6, [1.0, 1.0, 0.0]),
+        (3, [3.0, 3.0, 0.0]),    # same direction as 6: an exact tie
+        (8, [-1.0, 0.0, 0.0]),
+        (5, [1.0, 1.0, 1e-4]),   # 0.707107 at 6dp, ties with 3 and 6
+    ])
+    queries = [[1.0, 0.0, 0.0], [0.5, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    pairs = _probe_both_sides(spark, cents, queries, len(cents))
+    assert pairs[0][0] == [2, 4, 7, 3, 5, 6, 1, 8]
+    assert pairs[1][0] == pairs[0][0]
+    for host, expr in pairs:
+        assert host == expr, (host, expr)
+    for nprobe in (1, 3, 5):
+        for host, expr in _probe_both_sides(spark, cents, queries, nprobe):
+            assert host == expr, (host, expr)

@@ -19,7 +19,12 @@ from xlsx_to_database_spark.operators import (
     tfidf,
     tokenize_stats,
 )
-from xlsx_to_database_spark.operators.similarity import cosine_sim
+from xlsx_to_database_spark.operators.similarity import (
+    _cos_sim_sql,
+    _dot_sql,
+    _norm_sql,
+    _sq_l2_sql,
+)
 
 
 def _docs(spark, rows):
@@ -107,10 +112,50 @@ def test_cosine_sim_known_vectors(spark):
         [([1.0, 0.0], [0.0, 1.0]), ([1.0, 1.0], [1.0, 1.0]), ([1.0, 0.0], [1.0, 1.0])],
         "a array<float>, b array<float>",
     )
-    got = [r.c for r in df.select(cosine_sim(F.col("a"), F.col("b")).alias("c")).collect()]
+    got = [r.c for r in df.select(F.expr(_cos_sim_sql("a", "b")).alias("c")).collect()]
     assert got[0] == 0.0
     assert got[1] == 1.0
     assert abs(got[2] - round(1 / math.sqrt(2), 6)) < 1e-9
+
+    # The dot, norm and squared-L2 kernels are sequential left-to-right
+    # float64 folds from 0.0: bit-equal to the same fold in Python, for
+    # column and literal operands alike. [1e16, 1, -1e16] tells the
+    # order apart (a pairwise or reordered sum keeps the 1).
+    import random
+
+    rng = random.Random(7)
+    rows = [([1e16, 1.0, -1e16], [1.0, 1.0, 1.0]), ([3.0, 4.0], [0.5, -2.0])]
+    rows += [
+        ([rng.uniform(-1, 1) for _ in range(64)],
+         [rng.uniform(-1, 1) for _ in range(64)])
+        for _ in range(20)
+    ]
+    lit = rows[5][1]
+    vd = spark.createDataFrame(rows, "a array<double>, b array<double>")
+    got = vd.selectExpr(
+        "a", "b",
+        f"{_dot_sql('a', 'b')} AS dot",
+        f"{_norm_sql('a')} AS norm",
+        f"{_sq_l2_sql('a', 'b')} AS l2",
+        f"{_dot_sql('a', lit)} AS dot_lit",
+        f"{_sq_l2_sql('a', lit)} AS l2_lit",
+    ).collect()
+
+    def fold(terms):
+        acc = 0.0
+        for t in terms:
+            acc += t
+        return acc
+
+    for r in got:
+        a, b = list(r.a), list(r.b)
+        assert r.dot == fold(x * y for x, y in zip(a, b)), a
+        assert r.norm == math.sqrt(fold(x * x for x in a)), a
+        assert r.l2 == fold((x - y) * (x - y) for x, y in zip(a, b)), a
+        if len(a) == len(lit):
+            assert r.dot_lit == fold(x * y for x, y in zip(a, lit)), a
+            assert r.l2_lit == fold((x - y) * (x - y) for x, y in zip(a, lit)), a
+    assert got[0].dot == 0.0  # 1e16 + 1 rounds to 1e16 before the -1e16
 
 
 def test_tfidf_hand_computed(spark):
@@ -719,7 +764,7 @@ def test_simhash_pigeonhole_completeness(spark, sf_dir):
     sh = {
         r["doc"]: r["sh"]
         for r in docs.select(
-            F.col("doc_id").alias("doc"), simhash64(F.col("text")).alias("sh")
+            F.col("doc_id").alias("doc"), simhash64("text").alias("sh")
         ).collect()
     }
     ids = sorted(sh)
@@ -4072,7 +4117,8 @@ def test_recall_report_matches_set_intersections(spark, sf_dir):
     exact_l2 = {
         r.vec_id
         for r in e4.select(
-            "vec_id", S._sq_l2(F.col("embedding"), ql2).alias("d"))
+            "vec_id",
+            F.expr(f"round({S._sq_l2_sql('embedding', ql2)}, 6)").alias("d"))
         .orderBy("d", "vec_id").limit(10).collect()
     }
     cb = S.pq_train_codebook(e4, 4, 8)

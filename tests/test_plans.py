@@ -710,7 +710,7 @@ def test_plan_hazard_sweep_no_unexpected(spark, sf_dir, qs):
     # hand-picked plan assertions above stay in the default tier for
     # every benched/headline op.
     unexpected = {}
-    for name in battery_subset(qs):
+    for name in battery_subset(qs, residue=2):
         if name.startswith("stream_"):
             continue
         plan = explain_str(qs[name](spark, sf_dir))

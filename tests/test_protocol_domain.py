@@ -86,7 +86,7 @@ def test_no_oracle_emits_float_unsafe_integers():
     # Default tier: fixed quarter-subset of the 457 oracles (~25 s
     # instead of ~100 s of DuckDB compute); full sweep with
     # SPARK_GRAFT_SLOW_TESTS=1 (r14).
-    for name in battery_subset(oracles):
+    for name in battery_subset(oracles, residue=0):
         sql = oracles[name]
         op_con = con
         if not at_oracle_scale and name in BOUNDED_INPUT_OPS:

@@ -323,7 +323,7 @@ def test_compact_order_by_zorder_narrows_both_dims(spark, tmp_path):
 
     # hash layout: every file spans essentially the whole 0..63 domain
     assert spans("x") > 50 and spans("y") > 50
-    z = _zvalue(F.col("x").cast("int"), F.col("y").cast("int"), bits=6)
+    z = _zvalue("CAST(x AS INT)", "CAST(y AS INT)", bits=6)
     v, n_before = t.compact(target_files=8, order_by=z)
     assert v == 1 and n_before == 8
     assert spans("x") < 0.6 * 64 and spans("y") < 0.6 * 64

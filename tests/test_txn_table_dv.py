@@ -24,8 +24,9 @@ from xlsx_to_database_spark.operators.txn_table import (
 
 
 #: Table directory names that ``_metadata.file_path`` percent-encodes
-#: (space, ``%``) or keeps although a plain URL quote would encode them.
-ENCODED_DIRS = ["a b", "p%41", "x+y(1)", "é,;=@$&!'~*"]
+#: (space, ``%``, brackets, braces) or keeps although a plain URL quote
+#: would encode them, and names Spark's reader would take as a glob.
+ENCODED_DIRS = ["a b", "p%41", "x+y(1)", "é,;=@$&!'~*", "t[u]{v}"]
 
 
 def _mk(spark, tmp_path, n=1000, parts=4, name="tbl"):

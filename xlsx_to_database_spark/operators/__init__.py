@@ -13,7 +13,7 @@ from xlsx_to_database_spark.operators.dedup import (
     minhash_lsh_pairs,
     simhash_pairs,
 )
-from xlsx_to_database_spark.operators.similarity import cosine_sim, knn_join_blocked
+from xlsx_to_database_spark.operators.similarity import knn_join_blocked
 from xlsx_to_database_spark.operators.text import (
     document_fingerprint,
     language_id,
@@ -29,7 +29,6 @@ __all__ = [
     "minhash_lsh_pairs",
     "simhash_pairs",
     "embedding_near_pairs",
-    "cosine_sim",
     "knn_join_blocked",
     "tokenize_stats",
     "tfidf",

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from xlsx_to_database_spark.operators.similarity import _quote, cosine_sim
+from xlsx_to_database_spark.operators.similarity import _cos_sim_sql, _quote
 
 
 def dedup_exact(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
@@ -426,64 +426,32 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash64(text_col, weight_by_count: bool = False):
-    """64-bit SimHash of a space-tokenized text column, as a long.
+def simhash64(text_col: str, weight_by_count: bool = False):
+    """64-bit SimHash of the space-tokenized text column named
+    ``text_col``, as a long.
 
     bit_i(simhash) = 1 iff Σ_tokens (2·bit_i(xxhash64(token)) − 1) > 0.
     Pure expression tree (64 shifted-sum terms over the token array) —
-    codegen'd JVM math, one pass, no shuffle.
-
-    Pass the COLUMN NAME (str) for the fast parse-once path (r13: the
-    64-term Column-DSL tree cost ~2 s of py4j round-trips per call —
-    same finding as minhash); a Column argument keeps the equivalent
-    DSL construction for expression-valued inputs.
+    codegen'd JVM math, one pass, no shuffle. The tree is SQL text, so
+    it parses in one py4j call. Each token is hashed once into a shared
+    hashes array; the 64 per-bit aggregates reference that identical
+    subtree, which whole-stage codegen's subexpression elimination
+    evaluates once per row (measured ~10% faster than hashing inside
+    each bit's lambda; a 64-element bit-vector ``zip_with`` variant
+    measured 2× slower). ``shiftleft(1L, 63)`` wraps to the sign
+    bit, the correct bit-63 mask.
     """
-    if isinstance(text_col, str):
-        toks_s = f"split({_quote(text_col)}, ' ')"
-        if not weight_by_count:
-            toks_s = f"array_distinct({toks_s})"
-        hashes_s = f"transform({toks_s}, t -> xxhash64(t))"
-
-        def bit_sum_s(i: int) -> str:
-            return (
-                f"aggregate({hashes_s}, 0L, "
-                f"(a, h) -> a + ((shiftright(h, {i}) & 1) * 2 - 1))"
-            )
-
-        terms = " + ".join(
-            f"CASE WHEN {bit_sum_s(i)} > 0 "
-            f"THEN shiftleft(1L, {i}) ELSE 0L END"
-            for i in range(64)
-        )
-        return F.expr(f"0L + {terms}")
-    toks = F.split(text_col, " ")
+    toks = f"split({_quote(text_col)}, ' ')"
     if not weight_by_count:
-        toks = F.array_distinct(toks)
-
-    # Hash each token once into a shared hashes array; the 64 per-bit
-    # aggregates then reference that identical subtree, which whole-stage
-    # codegen's subexpression elimination evaluates a single time per row
-    # (measured ~10% faster than embedding xxhash64 in each bit's lambda,
-    # and structurally independent of the CSE heuristics; an explicit
-    # 64-element-bit-vector zip_with variant measured 2× SLOWER — the
-    # per-token array allocations dominate).
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def _bit_sum(bit: int):
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda a, h: a + (F.shiftright(h, bit).bitwiseAND(F.lit(1)) * 2 - 1),
-        )
-
-    acc = F.lit(0).cast("long")
-    for i in range(64):
-        # shiftleft(1L, 63) wraps to the sign bit — the correct bit-63
-        # mask (a 2**63 literal would overflow LongType).
-        acc = acc + F.when(_bit_sum(i) > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-    return acc
+        toks = f"array_distinct({toks})"
+    hashes = f"transform({toks}, t -> xxhash64(t))"
+    terms = " + ".join(
+        f"CASE WHEN aggregate({hashes}, 0L, "
+        f"(a, h) -> a + ((shiftright(h, {i}) & 1) * 2 - 1)) > 0 "
+        f"THEN shiftleft(1L, {i}) ELSE 0L END"
+        for i in range(64)
+    )
+    return F.expr(f"0L + {terms}")
 
 
 def simhash_pairs(
@@ -624,6 +592,6 @@ def embedding_near_pairs(
     b = df.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"), F.col(block_col).alias("blk_b") if block_col else F.lit(0).alias("blk_b"))
     return (
         a.join(b, (F.col("blk_a") == F.col("blk_b")) & (F.col("vec_a") < F.col("vec_b")))
-        .select("vec_a", "vec_b", cosine_sim(F.col("va"), F.col("vb")).alias("cos_sim"))
+        .select("vec_a", "vec_b", F.expr(_cos_sim_sql("va", "vb")).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )

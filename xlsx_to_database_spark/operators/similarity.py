@@ -2,7 +2,14 @@
 
 Cosine similarity is computed with built-in higher-order array functions
 (`zip_with` + `aggregate`) in float64 — JVM-side, whole-stage-codegen,
-no Python in the row path. The brute-force paths here are the exact
+no Python in the row path. The kernels below (`_dot_sql`, `_norm_sql`,
+`_sq_l2_sql`, `_cos_sim_sql`) are the package's only implementation of
+each vector fold; every op that scores vectors builds on them, so every
+call site computes the same value. They are SQL text because a whole
+expression, however many centroid literals it inlines, then parses in
+one py4j call, where the Column DSL pays a round-trip per node.
+
+The brute-force paths here are the exact
 baselines; `knn_join_blocked` shows the blocking pattern that scales:
 restrict candidate pairs by a partition key (label, LSH bucket, IVF
 cell) so the cross product is per-block, then rank within blocks.
@@ -24,30 +31,78 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Float64 dot product of two array<float> columns (sequential
-    left-to-right accumulation — deterministic and engine-portable)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+# -- Kernels ------------------------------------------------------------------
+#
+# The one implementation of each vector fold. Every float64 fold runs
+# sequentially left to right from 0.0D, the order the DuckDB oracles'
+# list_sum uses. Callers round the dot, norm and squared-L2 results as
+# their op's contract says; the cosine rounds to 6 places. Operands are
+# SQL text: a column reference
+# (``_quote``d name or qualified ``a.v``), any array expression, or a
+# Python sequence, which ``_arr_sql`` renders as exact double literals.
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+def _quote(name: str) -> str:
+    """Backtick-quote an identifier for SQL-text interpolation,
+    escaping embedded backticks."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _dlit(v: float) -> str:
+    """Exact SQL double literal (repr round-trips; D forces DoubleType).
+    Non-finite values would render as 'nanD'/'infD' and fail the SQL
+    parse deep inside expression build — reject them here with a
+    diagnosable message instead."""
+    v = float(v)
+    if not math.isfinite(v):
+        raise ValueError(
+            f"non-finite value {v!r} cannot be rendered as a SQL double "
+            "literal (bad codebook/centroid input?)"
         )
+    return f"{v!r}D"
+
+
+def _arr_sql(vals) -> str:
+    """SQL text of an array operand: SQL text passes through, a
+    sequence of numbers becomes an array of exact double literals."""
+    if isinstance(vals, str):
+        return vals
+    return "array(" + ", ".join(_dlit(v) for v in vals) + ")"
+
+
+def _dot_sql(a, b) -> str:
+    """Float64 dot product of two array operands."""
+    return (
+        f"aggregate(zip_with({_arr_sql(a)}, {_arr_sql(b)}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0.0D, (acc, x) -> acc + x)"
     )
 
 
-def cosine_sim(a: Column, b: Column, decimals: int = 6) -> Column:
-    """Cosine similarity rounded to `decimals` (rounding makes the value
-    stable across engines/accumulation orders for oracle checks)."""
-    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), decimals)
+def _norm_sql(a) -> str:
+    """Float64 L2 norm of an array operand."""
+    return (
+        f"sqrt(aggregate(transform({_arr_sql(a)}, "
+        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
+        "0.0D, (acc, x) -> acc + x))"
+    )
+
+
+def _sq_l2_sql(a, b) -> str:
+    """Unrounded float64 squared L2 distance of two array operands."""
+    return (
+        f"aggregate(zip_with({_arr_sql(a)}, {_arr_sql(b)}, "
+        "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
+        "0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def _cos_sim_sql(a, b) -> str:
+    """Cosine similarity of two array operands, rounded to 6 places
+    (the rounding makes the value stable across engines and
+    accumulation orders for oracle checks)."""
+    a, b = _arr_sql(a), _arr_sql(b)
+    return f"round({_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)}), 6)"
 
 
 def cosine_topk(
@@ -65,7 +120,7 @@ def cosine_topk(
     """
     scored = embeddings.crossJoin(F.broadcast(query_vec)).select(
         F.col(id_col),
-        cosine_sim(F.col(vec_col), F.col("qvec")).alias("cos_sim"),
+        F.expr(_cos_sim_sql(_quote(vec_col), "qvec")).alias("cos_sim"),
     )
     return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)
 
@@ -133,7 +188,7 @@ def lsh_topk(
     cand = embeddings.withColumn("bucket", lsh_bucket(F.col(vec_col), n_planes))
     scored = cand.join(F.broadcast(q), on="bucket").select(
         F.col(id_col),
-        cosine_sim(F.col(vec_col), F.col("qvec")).alias("cos_sim"),
+        F.expr(_cos_sim_sql(_quote(vec_col), "qvec")).alias("cos_sim"),
     )
     return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)
 
@@ -161,7 +216,7 @@ def knn_join_blocked(
     pairs = (
         a.join(b, on="blk")
         .filter(F.col("qid") != F.col("nid"))
-        .select("blk", "qid", "nid", cosine_sim(F.col("qv"), F.col("nv")).alias("cos_sim"))
+        .select("blk", "qid", "nid", F.expr(_cos_sim_sql("qv", "nv")).alias("cos_sim"))
     )
     w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("nid").asc())
     return (
@@ -194,39 +249,18 @@ def ivf_topk(
     merge (TakeOrderedAndProject). Cell assignment ranks by
     (rounded cosine DESC, centroid id ASC) — total order, engine-portable.
     """
-    cents = sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in embeddings.filter(
-            F.col(id_col).between(1, n_centroids)
-        ).select(id_col, vec_col).collect()
-    )
-
-    # Per-row array of (similarity, -centroid_id) structs: lexicographic
-    # struct ordering gives argmax with a smallest-id tie-break.
-    # Parsed-SQL form (r13) — see the _sq_l2_sql block comment.
-    ranked = F.expr(
-        "array("
-        + ", ".join(
-            f"struct({_cos_sim_sql(_quote(vec_col), cv)} AS s, "
-            f"CAST({-cid} AS BIGINT) AS nc)"
-            for cid, cv in cents
-        )
-        + ")"
-    )
-    cell = (-F.array_max(ranked)["nc"]).alias("cell")
-    assigned = embeddings.select(F.col(id_col), F.col(vec_col), cell)
-
-    probe_cells = F.slice(
-        F.transform(F.sort_array(ranked, asc=False), lambda x: -x["nc"]), 1, nprobe
-    )
+    cents = _collect_codebook(embeddings, n_centroids, id_col, vec_col)
+    cell = F.expr(f"-array_max({_cell_sims_sql(cents, vec_col)}).nc")
+    assigned = embeddings.select(F.col(id_col), F.col(vec_col), cell.alias("cell"))
     qdf = embeddings.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("qvec"), probe_cells.alias("probe_cells")
+        F.col(vec_col).alias("qvec"),
+        _probe_cells_expr(cents, vec_col, nprobe).alias("probe_cells"),
     )
     cand = assigned.crossJoin(F.broadcast(qdf)).filter(
         F.array_contains(F.col("probe_cells"), F.col("cell"))
     )
     scored = cand.select(
-        F.col(id_col), cosine_sim(F.col(vec_col), F.col("qvec")).alias("cos_sim")
+        F.col(id_col), F.expr(_cos_sim_sql(_quote(vec_col), "qvec")).alias("cos_sim")
     )
     return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)
 
@@ -240,7 +274,7 @@ def ivf_assign_matrix(
     """Centroid-cell assignment for REAL centroid counts — the scale
     path beside :func:`ivf_topk`'s literal-codegen assignment.
 
-    The literal path inlines one ``cosine_sim`` expression PER
+    The literal path inlines one cosine expression PER
     centroid; right at n_centroids≈8, but the analyzer cost grows with
     expression count, so the docstring's 65,536-centroid regime cannot
     inline (round-10 verdict #2). Here the centroid matrix ships ONCE
@@ -317,7 +351,7 @@ def ivf_topk_matrix(
         F.array_contains(F.col("probe_cells"), F.col("cell"))
     )
     scored = cand.select(
-        F.col(id_col), cosine_sim(F.col(vec_col), F.col("qvec")).alias("cos_sim")
+        F.col(id_col), F.expr(_cos_sim_sql(_quote(vec_col), "qvec")).alias("cos_sim")
     )
     return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)
 
@@ -342,19 +376,43 @@ def _probe_cells_expr(
     cents: list[tuple[int, list[float]]], vec_col: str, nprobe: int
 ) -> Column:
     """The query row's ``nprobe`` closest cells, as one codegen'd
-    expression: rank (rounded-6dp cosine DESC, centroid id ASC) via
-    lexicographic struct sort, slice the head. Shared by every
-    IVF-probed serving op so the probe contract (rounding, tie-break)
-    lives in one place."""
-    structs = ", ".join(
+    expression: rank (``_cos_sim_sql`` DESC, centroid id ASC) via
+    lexicographic struct sort, slice the head. This and
+    :func:`_probe_cells` are the probe contract: the query-row form
+    for ops whose query vector is a row, the driver form for serving
+    ops whose query vector is a Python list. Both pick the same cells
+    (tests/test_kernel_crosschecks.py)."""
+    return F.expr(
+        f"slice(transform(sort_array({_cell_sims_sql(cents, vec_col)}, "
+        f"false), x -> -x.nc), 1, {nprobe})"
+    )
+
+
+def _cell_sims_sql(cents: list[tuple[int, list[float]]], vec_col: str) -> str:
+    """Per-row array of (similarity, -centroid id) structs: struct
+    ordering ranks cells by cosine with a smallest-id tie-break."""
+    return "array(" + ", ".join(
         f"struct({_cos_sim_sql(_quote(vec_col), cv)} AS s, "
         f"CAST({-cid} AS BIGINT) AS nc)"
         for cid, cv in cents
-    )
-    return F.expr(
-        f"slice(transform(sort_array(array({structs}), false), "
-        f"x -> -x.nc), 1, {nprobe})"
-    )
+    ) + ")"
+
+
+def _probe_cells(
+    cents: list[tuple[int, list[float]]], q: list[float], nprobe: int
+) -> list[int]:
+    """:func:`_probe_cells_expr` evaluated on the driver for a query
+    vector already there (no Spark job): the same sequential float64
+    dot/norm folds, rounded to 6 places, ranked cosine DESC, id ASC."""
+    ranked = []
+    for cid, cv in cents:
+        dot = nq = nc = 0.0
+        for a, b in zip(q, cv):
+            dot += a * b
+            nq += a * a
+            nc += b * b
+        ranked.append((-round(dot / (math.sqrt(nq) * math.sqrt(nc)), 6), cid))
+    return [cid for _, cid in sorted(ranked)[:nprobe]]
 
 
 def _code_cols(cb: "Codebook", vec_col: str) -> list[Column]:
@@ -446,9 +504,6 @@ def pq_train_codebook(
     )
     seg = len(cb[0][0][1])
     for _ in range(iters):
-        # One parsed SQL expression per iteration (r13): the DSL form
-        # of these codebook-literal branches cost seconds of py4j
-        # round-trips per call — see the _sq_l2_sql block comment.
         branches = ", ".join(
             "struct(CAST({s} AS INT) AS s, {best}.c AS c, {sub} AS x)".format(
                 s=s,
@@ -547,7 +602,6 @@ def _adc_expr(table: dict[int, dict[int, float]]) -> Column:
     ``c0..cm-1`` — the ADC serving expression shared by the corpus
     sweep and the persisted-index scan (pure codegen'd literals; no
     shuffle, no Python at execution time)."""
-    # Parsed-SQL form (r13) — see the _sq_l2_sql block comment.
     terms = " + ".join(
         "element_at(map("
         + ", ".join(
@@ -559,113 +613,15 @@ def _adc_expr(table: dict[int, dict[int, float]]) -> Column:
     return F.expr(f"0.0D + {terms}")
 
 
-def _sq_l2(a: Column, b_vals: list[float]) -> Column:
-    """Rounded squared L2 distance between an array column and a
-    literal vector — float64, sequential fold, 6dp (engine-stable)."""
-    lit = F.array(*[F.lit(v) for v in b_vals])
-    return F.round(
-        F.aggregate(
-            F.zip_with(
-                a, lit,
-                lambda x, y: (x.cast("double") - y)
-                * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-
-
-# -- SQL-string expression builders (r13) -----------------------------------
-#
-# The Column-DSL forms above cost one py4j round-trip PER OPERATION
-# (~0.2–3 ms each on this host), so a codebook-literal expression —
-# n_codes structs × seg-dim literal arrays × lambdas — takes SECONDS of
-# driver latency to BUILD before any job runs (measured: the registered
-# residual-index build spent ~40 s at sf0.001, almost all of it plan
-# construction). These helpers emit the IDENTICAL expressions as SQL
-# text parsed JVM-side in one call; outputs are verified value-identical
-# by the ANN unit batteries and the oracle mirrors. Double literals use
-# repr() (shortest round-trip form) with the D suffix, so the parsed
-# double is bit-identical to F.lit's.
-
-
-def _quote(name: str) -> str:
-    """Backtick-quote an identifier for SQL-text interpolation,
-    escaping embedded backticks (r13 ADVICE) — the property the
-    Column-DSL forms had for free."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _dlit(v: float) -> str:
-    """Exact SQL double literal (repr round-trips; D forces DoubleType).
-    Non-finite values would render as 'nanD'/'infD' and fail the SQL
-    parse deep inside expression build (r13 ADVICE) — reject them
-    here with a diagnosable message instead."""
-    v = float(v)
-    if not math.isfinite(v):
-        raise ValueError(
-            f"non-finite value {v!r} cannot be rendered as a SQL double "
-            "literal (bad codebook/centroid input?)"
-        )
-    return f"{v!r}D"
-
-
-def _arr_sql(vals) -> str:
-    return "array(" + ", ".join(_dlit(v) for v in vals) + ")"
-
-
-def _sq_l2_sql(a_sql: str, b_vals) -> str:
-    """SQL-text twin of :func:`_sq_l2` — same fold, same 6dp round."""
-    return (
-        f"round(aggregate(zip_with({a_sql}, {_arr_sql(b_vals)}, "
-        "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        "0.0D, (acc, x) -> acc + x), 6)"
-    )
-
-
-def _dot_sql(a_sql: str, b_sql: str) -> str:
-    """SQL-text twin of :func:`_dot` — same casts, same sequential
-    left-to-right 0.0D fold. Shared by every SQL-text cosine/dot site
-    (r14: the per-op private copies were a drift surface for the
-    bit-identical-cosine contract)."""
-    return (
-        f"aggregate(zip_with({a_sql}, {b_sql}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def _norm_sql(a_sql: str) -> str:
-    """SQL-text twin of :func:`_norm`."""
-    return (
-        f"sqrt(aggregate(transform({a_sql}, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        "0.0D, (acc, x) -> acc + x))"
-    )
-
-
-def _cos_sim_sql(a_sql: str, b_vals, decimals: int = 6) -> str:
-    """SQL-text twin of ``cosine_sim(col, literal-array)`` — identical
-    dot/norm folds, identical rounding."""
-    arr = _arr_sql(b_vals)
-    return (
-        f"round({_dot_sql(a_sql, arr)} / "
-        f"({_norm_sql(a_sql)} * {_norm_sql(arr)}), {decimals})"
-    )
-
-
 def _slice_sql(vec_col: str, s: int, seg: int) -> str:
     return f"slice({_quote(vec_col)}, {s * seg + 1}, {seg})"
 
 
 def _best_code_sql(sub_sql: str, codewords) -> str:
     """argmin codeword struct over ``codewords`` = [(cid, seg_vals)]:
-    lexicographic struct min on (rounded-6dp squared L2, codeword id) —
-    the same (distance, id) tie-break contract as the DSL form."""
+    lexicographic struct min on (rounded-6dp squared L2, codeword id)."""
     structs = ", ".join(
-        f"struct({_sq_l2_sql(sub_sql, seg_vals)} AS d, "
+        f"struct(round({_sq_l2_sql(sub_sql, seg_vals)}, 6) AS d, "
         f"CAST({cid} AS BIGINT) AS c)"
         for cid, seg_vals in codewords
     )
@@ -706,11 +662,9 @@ def pq_encode(
             embeddings, n_subspaces, n_codes, id_col, vec_col
         )
     seg = len(codebook[0][0][1])
-    # Parsed-SQL form (r13, same rationale as _sq_l2_sql): the best
-    # struct's text appears once per code column and once per
+    # The best struct's text appears once per code column and once per
     # distortion term — byte-identical subtrees that whole-stage
-    # codegen CSE evaluates once, exactly as the DSL's reused Column
-    # object planned.
+    # codegen CSE evaluates once.
     bests = [
         _best_code_sql(_slice_sql(vec_col, s, seg), codebook[s])
         for s in range(n_subspaces)
@@ -889,21 +843,7 @@ def ivfpq_index_serve(
         )
     q = [float(x) for x in query_vec]
 
-    def cos6(cv: list[float]) -> float:
-        # Sequential float64 folds — the same accumulation order the
-        # oracle's list_sum uses; 6dp rounding absorbs the rest.
-        dot = 0.0
-        nq = 0.0
-        nc = 0.0
-        for a, b in zip(q, cv):
-            dot += a * b
-            nq += a * a
-            nc += b * b
-        return round(dot / ((nq ** 0.5) * (nc ** 0.5)), 6)
-
-    probed = [
-        cid for _, cid in sorted((-cos6(cv), cid) for cid, cv in cents)
-    ][:nprobe]
+    probed = _probe_cells(cents, q, nprobe)
     table = _adc_table(q, cb)
     scan = spark.read.parquet(path).filter(F.col("cell").isin(probed))
     return (
@@ -941,9 +881,6 @@ def _residual_encode(
     the init to identical zero codewords)."""
     cents = _collect_codebook(embeddings, n_centroids, id_col, vec_col)
     assigned = ivf_assign_matrix(embeddings, cents, id_col, vec_col)
-    # Parsed-SQL centroid map + residual transform (r13): the DSL form
-    # was n_centroids × d F.lit round-trips (~1.4 s of driver latency
-    # at 8×64) — see the _sq_l2_sql block comment.
     cmap = (
         "map("
         + ", ".join(f"{cid}, {_arr_sql(cv)}" for cid, cv in cents)
@@ -1017,7 +954,6 @@ def _percell_adc_topk(
         )
         for c in probed
     }
-    # Parsed-SQL form (r13) — see the _sq_l2_sql block comment.
     def _case(s: int) -> str:
         whens = " ".join(
             "WHEN cell = {c} THEN element_at(map({pairs}), c{s})".format(
@@ -1136,7 +1072,7 @@ def ivfpq_residual_index_serve(
 ) -> DataFrame:
     """SERVE top-k from a persisted :func:`ivfpq_residual_index_build`
     index: rank probe cells driver-side against the metadata centroids
-    (same cos6 contract as :func:`ivfpq_index_serve`), scan ONLY the
+    (:func:`_probe_cells`, as in :func:`ivfpq_index_serve`), scan ONLY the
     probed cells' directories (partition pruning), and rank by
     PER-CELL ADC tables built from the query's per-cell residuals.
     The scan never touches a vector; the TakeOrdered top-k is the only
@@ -1149,19 +1085,7 @@ def ivfpq_residual_index_serve(
     cb: Codebook = meta["codebook"]
     q = [float(x) for x in query_vec]
 
-    def cos6(cv: list[float]) -> float:
-        dot = 0.0
-        nq = 0.0
-        nc = 0.0
-        for a, b in zip(q, cv):
-            dot += a * b
-            nq += a * a
-            nc += b * b
-        return round(dot / ((nq ** 0.5) * (nc ** 0.5)), 6)
-
-    probed = [
-        cid for _, cid in sorted((-cos6(cv), cid) for cid, cv in cents)
-    ][:nprobe]
+    probed = _probe_cells(cents, q, nprobe)
     scan = spark.read.parquet(path).filter(F.col("cell").isin(probed))
     return _percell_adc_topk(scan, q, cents, cb, probed, k, id_col)
 
@@ -1188,7 +1112,7 @@ def batch_cosine_topk(
     scored = embeddings.crossJoin(F.broadcast(queries)).select(
         F.col(q_id_col),
         F.col(id_col),
-        F.round(cosine_sim(F.col(vec_col), F.col(q_vec_col)), 6).alias("cos_sim"),
+        F.expr(_cos_sim_sql(_quote(vec_col), _quote(q_vec_col))).alias("cos_sim"),
     )
     w = Window.partitionBy(q_id_col).orderBy(
         F.col("cos_sim").desc(), F.col(id_col).asc()
@@ -1452,21 +1376,7 @@ def sq_index_serve(
     lo, hi = meta["bounds"]
     q = [float(x) for x in query_vec]
 
-    def cos6(cv: list[float]) -> float:
-        # Sequential float64 folds — the same accumulation order the
-        # oracle's list_sum uses; 6dp rounding absorbs the rest.
-        dot = 0.0
-        nq = 0.0
-        nc = 0.0
-        for a, b in zip(q, cv):
-            dot += a * b
-            nq += a * a
-            nc += b * b
-        return round(dot / ((nq ** 0.5) * (nc ** 0.5)), 6)
-
-    probed = [
-        cid for _, cid in sorted((-cos6(cv), cid) for cid, cv in cents)
-    ][:nprobe]
+    probed = _probe_cells(cents, q, nprobe)
     qi = [round(v * 10000) for v in q]
     scan = spark.read.parquet(path).filter(F.col("cell").isin(probed))
     return (
@@ -1597,7 +1507,7 @@ def binary_rerank_topk(
         .crossJoin(F.broadcast(qdf))
         .select(
             F.col(id_col),
-            cosine_sim(F.col(vec_col), F.col("qvec")).alias("cos_sim"),
+            F.expr(_cos_sim_sql(_quote(vec_col), "qvec")).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
         .limit(k)
@@ -1641,7 +1551,7 @@ def pq_refine_topk(
         embeddings.join(F.broadcast(sl), on=id_col)
         .select(
             F.col(id_col),
-            _sq_l2(F.col(vec_col), q).alias("l2_dist"),
+            F.expr(f"round({_sq_l2_sql(_quote(vec_col), q)}, 6)").alias("l2_dist"),
         )
         .orderBy(F.col("l2_dist").asc(), F.col(id_col).asc())
         .limit(k)
@@ -1750,7 +1660,7 @@ def ivf_topk_trained(
     )
     scored = cand.select(
         F.col(id_col),
-        cosine_sim(F.col(vec_col), F.col("qvec")).alias("cos_sim"),
+        F.expr(_cos_sim_sql(_quote(vec_col), "qvec")).alias("cos_sim"),
     )
     return scored.orderBy(
         F.col("cos_sim").desc(), F.col(id_col).asc()
@@ -1805,21 +1715,7 @@ def ivfflat_index_serve(
     cents: list[tuple[int, list[float]]] = meta["centroids"]
     q = [float(x) for x in query_vec]
 
-    def cos6(cv: list[float]) -> float:
-        # Sequential float64 folds — the same accumulation order the
-        # oracle's list_sum uses; 6dp rounding absorbs the rest.
-        dot = 0.0
-        nq = 0.0
-        nc = 0.0
-        for a, b in zip(q, cv):
-            dot += a * b
-            nq += a * a
-            nc += b * b
-        return round(dot / ((nq ** 0.5) * (nc ** 0.5)), 6)
-
-    probed = [
-        cid for _, cid in sorted((-cos6(cv), cid) for cid, cv in cents)
-    ][:nprobe]
+    probed = _probe_cells(cents, q, nprobe)
     scan = spark.read.parquet(path).filter(F.col("cell").isin(probed))
     return (
         scan.select(

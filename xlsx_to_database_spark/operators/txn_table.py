@@ -212,6 +212,17 @@ def _uri_path(path: str) -> str:
     return "".join(out)
 
 
+def _read_parquet(reader, paths: list[str]) -> DataFrame:
+    """``reader.parquet`` over ``paths``, read literally: the one place
+    table paths reach Spark. Spark expands any path holding one of
+    ``{}[]*?\\`` as a Hadoop glob (a table under ``t[u]`` would read
+    ``tu``), so each of them is backslash-escaped."""
+    return reader.parquet(*[
+        "".join("\\" + ch if ch in "{}[]*?\\" else ch for ch in p)
+        for p in paths
+    ])
+
+
 class TxnTable:
     """Handle to a transaction-logged parquet table.
 
@@ -859,7 +870,7 @@ class TxnTable:
             for e in entries:
                 e["types"] = types
             return entries
-        back = self.spark.read.parquet(out)
+        back = _read_parquet(self.spark.read, [out])
         rows = (
             back.groupBy(F.input_file_name().alias("f"))
             .agg(
@@ -943,7 +954,7 @@ class TxnTable:
             return None
         stats_col = self.stats_col if stats_col is None else stats_col
         entries = []
-        for f in sorted(_glob.glob(os.path.join(out, "*.parquet"))):
+        for f in sorted(_glob.glob(os.path.join(_glob.escape(out), "*.parquet"))):
             try:
                 pf = _pq.ParquetFile(f)
                 md = pf.metadata
@@ -1127,8 +1138,8 @@ class TxnTable:
         parts = []
         if plain:
             parts.append(
-                reader.parquet(
-                    *[os.path.join(self.path, e["path"]) for e in plain]
+                _read_parquet(
+                    reader, [os.path.join(self.path, e["path"]) for e in plain]
                 ).select(
                     "*", F.col("_metadata.file_path").alias("__fp")
                 )
@@ -1342,8 +1353,9 @@ class TxnTable:
         between the URI and the manifest's pinned DV key happens on the
         SMALL (sidecar) side only, in ``_dv_rows``. ``man`` pins the
         read schema exactly as in ``_read_files``."""
-        return self._reader(man).parquet(
-            *[os.path.join(self.path, e["path"]) for e in entries]
+        return _read_parquet(
+            self._reader(man),
+            [os.path.join(self.path, e["path"]) for e in entries],
         ).select(
             "*",
             F.col("_metadata.file_path").alias("__fp"),
@@ -1838,7 +1850,9 @@ class TxnTable:
                 continue  # concurrent vacuum got it first
             deleted += 1
         # Sweep crashed writers' orphaned .tmp manifests from the log.
-        for tmp in _glob.glob(os.path.join(_log_dir(self.path), "*.tmp")):
+        for tmp in _glob.glob(
+            os.path.join(_glob.escape(_log_dir(self.path)), "*.tmp")
+        ):
             try:
                 if now - os.path.getmtime(tmp) >= 300:
                     os.unlink(tmp)

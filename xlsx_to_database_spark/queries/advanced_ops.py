@@ -1033,19 +1033,14 @@ def ml_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
 
     def assign(cents: dict[int, list[float]], with_dist: bool):
-        """Map-only argmin over literal centroids (codegen, no shuffle).
-        r14: the k × d centroid-literal argmin tree is emitted as ONE
-        parsed SQL string (guide §1.2 driver-latency class — the
-        Column-DSL form cost ~1,900 py4j round-trips / ~0.8 s of plan
-        construction per assign pass); same ANN-family `_arr_sql`
-        double literals (repr + D, bit-identical to F.lit), same
-        (d, cid) struct-min tie-break, same 4dp round."""
-        from xlsx_to_database_spark.operators.similarity import _arr_sql
+        """Map-only argmin over literal centroids (codegen, no shuffle),
+        as one parsed SQL string. The argmin runs over UNROUNDED
+        squared distances, (d, cid) struct-min tie-break; only the
+        reported distance is rounded, to 4 places."""
+        from xlsx_to_database_spark.operators.similarity import _sq_l2_sql
 
         structs = ", ".join(
-            f"struct(aggregate(zip_with(e, {_arr_sql(cents[cid])}, "
-            "(a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x)"
-            f" AS d, {cid} AS cid)"
+            f"struct({_sq_l2_sql('e', cents[cid])} AS d, {cid} AS cid)"
             for cid in sorted(cents)
         )
         best = f"array_min(array({structs}))"

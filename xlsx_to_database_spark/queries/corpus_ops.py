@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xlsx_to_database_spark.catalog import table
+from xlsx_to_database_spark.operators.similarity import _arr_sql, _dot_sql, _norm_sql
 from xlsx_to_database_spark.registry import query
 
 #: Context-window token budget for seq_pack (tokens per packed chunk).
@@ -590,17 +591,9 @@ def vec_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-half-to-even drift AND double->string format divergence; same
     trick as vec_quantize_int8)."""
     e = table(spark, sf_dir, "embeddings")
-    xd = lambda x: x.cast("double")  # noqa: E731
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("embedding"),
-            F.lit(0.0),
-            lambda acc, x: acc + xd(x) * xd(x),
-        )
-    )
-    comp = lambda x: F.floor(xd(x) / F.col("l2n") * 1000000 + 0.5).cast("long").cast("string")  # noqa: E731
+    comp = lambda x: F.floor(x.cast("double") / F.col("l2n") * 1000000 + 0.5).cast("long").cast("string")  # noqa: E731
     return (
-        e.withColumn("l2n", norm)
+        e.withColumn("l2n", F.expr(_norm_sql("embedding")))
         .select(
             "vec_id",
             F.round(F.col("l2n"), 6).alias("l2_norm"),
@@ -960,25 +953,14 @@ def vec_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         if w[i, j] < 0:
             w[:, j] = -w[:, j]
 
-    centered = F.transform(
-        F.col("embedding"),
-        lambda x, i: x.cast("double") - F.element_at(
-            F.array(*[F.lit(float(m)) for m in mu]), i + 1
-        ),
+    centered = (
+        "transform(embedding, (x, i) -> CAST(x AS DOUBLE) - "
+        f"element_at({_arr_sql(mu)}, i + 1))"
     )
-    comps = [
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    centered,
-                    F.array(*[F.lit(float(w[i, j])) for i in range(d)]),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            5,
-        ).alias(f"pc{j + 1}")
-        for j in range(n_comp)
-    ]
-    return emb.select("vec_id", *comps)
+    return emb.selectExpr(
+        "vec_id",
+        *[
+            f"round({_dot_sql(centered, w[:, j])}, 5) AS pc{j + 1}"
+            for j in range(n_comp)
+        ],
+    )

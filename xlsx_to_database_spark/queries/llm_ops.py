@@ -1577,18 +1577,13 @@ def multimodal_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One table carrying text + vector + scalars: documents⋈embeddings
     with per-modality derived columns in a single projection."""
     d, e = table(spark, sf_dir, "documents"), table(spark, sf_dir, "embeddings")
-    norm_sq = F.aggregate(
-        F.transform(F.col("embedding"), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return d.join(e, d.doc_id == e.vec_id).select(
         "doc_id",
         "lang",
         "n_chars",
         "label",
         F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
-        F.round(F.sqrt(norm_sq), 6).alias("vec_norm"),
+        F.expr(f"round({S._norm_sql('embedding')}, 6)").alias("vec_norm"),
     )
 
 

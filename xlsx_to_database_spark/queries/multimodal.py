@@ -29,6 +29,7 @@ from xlsx_to_database_spark.operators.multimodal import (
     resize_media,
     sample_frames,
 )
+from xlsx_to_database_spark.operators.similarity import _norm_sql
 from xlsx_to_database_spark.registry import query
 
 
@@ -111,13 +112,8 @@ def media_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     per asset — the media → array<float> → similarity-search bridge."""
     media = fake_media_table(spark, n_assets=50)
     feats = media_features(media, n_bins=16)
-    norm = F.aggregate(
-        F.transform("features", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
     return feats.select(
         "asset_id",
         F.size("features").alias("dim"),
-        F.round(F.sqrt(norm), 6).alias("feat_norm"),
+        F.expr(f"round({_norm_sql('features')}, 6)").alias("feat_norm"),
     ).orderBy("asset_id")

@@ -9,12 +9,12 @@ family); new never-attested ops must queue behind it, not displace it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xlsx_to_database_spark.catalog import table
 from xlsx_to_database_spark.operators import dedup as D
-from xlsx_to_database_spark.operators.similarity import cosine_sim
+from xlsx_to_database_spark.operators.similarity import _cos_sim_sql
 from xlsx_to_database_spark.registry import query
 
 
@@ -101,33 +101,42 @@ def dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.jaccard_join(batch, corpus, threshold=0.9)
 
 
-def _zvalue(a, b, bits: int = 16):
-    """Morton (Z-order) interleave of two non-negative int columns'
-    low ``bits`` bits — a pure codegen expression chain (2·bits shift
-    terms), no UDF. Given SQL-text operands (both strings), the whole
-    chain is emitted as ONE SQL string parsed JVM-side (r14, guide
-    §1.2 driver-latency class: the Column-DSL form cost 2·bits·~5
-    py4j round-trips of plan construction per call); Column operands
-    keep the DSL. Both forms resolve to the identical expression tree
-    (same shiftright/&1/shiftleft/add chain, same term order)."""
-    if isinstance(a, str) and isinstance(b, str):
-        terms = []
-        for i in range(bits):
-            terms.append(
-                f"shiftleft(CAST(shiftright({a}, {i}) & 1 AS BIGINT), {2 * i})"
-            )
-            terms.append(
-                f"shiftleft(CAST(shiftright({b}, {i}) & 1 AS BIGINT), {2 * i + 1})"
-            )
-        return F.expr("CAST(0 AS BIGINT) + " + " + ".join(terms))
-    z = F.lit(0).cast("long")
+def _zvalue(a_sql: str, b_sql: str, bits: int = 16) -> Column:
+    """Morton (Z-order) interleave of the low ``bits`` bits of two
+    non-negative int SQL expressions — a pure codegen expression chain
+    (2·bits shift terms), no UDF, emitted as one SQL string so it
+    parses in one py4j call."""
+    terms = []
     for i in range(bits):
-        z = (
-            z
-            + F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)).cast("long"), 2 * i)
-            + F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)).cast("long"), 2 * i + 1)
+        terms.append(
+            f"shiftleft(CAST(shiftright({a_sql}, {i}) & 1 AS BIGINT), {2 * i})"
         )
-    return z
+        terms.append(
+            f"shiftleft(CAST(shiftright({b_sql}, {i}) & 1 AS BIGINT), {2 * i + 1})"
+        )
+    return F.expr("CAST(0 AS BIGINT) + " + " + ".join(terms))
+
+
+def _orders_morton_key(lo_c: int, hi_c: int, lo_d: int, hi_d: int) -> Column:
+    """Morton key of an orders row: custkey and orderdate (as days
+    since 1992-01-01), each quantized to 8 bits against its (lo, hi)
+    bounds, so both dims contribute comparable high bits. The key
+    decides layout only, never row values."""
+
+    def quant(col_sql: str, lo: int, hi: int) -> str:
+        # Widen to long BEFORE the ×256: for int32 key domains past ~8.4M
+        # (SF ≳ 56) the product overflows 32-bit — silently wrapping
+        # (non-ANSI) into a near-random layout, or erroring under ANSI.
+        return (
+            f"CAST(floor(CAST(({col_sql}) - {lo} AS BIGINT) * 256 "
+            f"/ {hi - lo + 1}) AS INT)"
+        )
+
+    return _zvalue(
+        quant("o_custkey", lo_c, hi_c),
+        quant("datediff(o_orderdate, '1992-01-01')", lo_d, hi_d),
+        bits=8,
+    )
 
 
 @query(
@@ -224,20 +233,7 @@ def parquet_zorder_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("o_custkey"), F.max("o_custkey"), F.min(day), F.max(day)
         ).collect()[0]
 
-    def quant_sql(col_sql, lo, hi):
-        # Widen to long BEFORE the ×256: for int32 key domains past ~8.4M
-        # (SF ≳ 56) the product overflows 32-bit — silently wrapping
-        # (non-ANSI) into a near-random layout, or erroring under ANSI.
-        return (
-            f"CAST(floor(CAST(({col_sql}) - {lo} AS BIGINT) * 256 "
-            f"/ {hi - lo + 1}) AS INT)"
-        )
-
-    z = _zvalue(
-        quant_sql("o_custkey", lo_c, hi_c),
-        quant_sql("datediff(o_orderdate, '1992-01-01')", lo_d, hi_d),
-        bits=8,
-    )
+    z = _orders_morton_key(lo_c, hi_c, lo_d, hi_d)
     tag = os.path.basename(os.path.normpath(sf_dir))
     dst = f"/tmp/spark_stage/{tag}_orders_zorder"
     (
@@ -359,7 +355,7 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.crossJoin(F.broadcast(qv))
         .select(
             "vec_id",
-            cosine_sim(F.col("embedding"), F.col("qvec")).alias("cos_sim"),
+            F.expr(_cos_sim_sql("embedding", "qvec")).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= 0.2)
     )

@@ -1465,29 +1465,15 @@ _BOOT_CDF = (0.367879441, 0.735758882, 0.919698603)
 _BOOT_T = tuple(int(c * 2147483648) + 1 for c in _BOOT_CDF)
 
 
-def _boot_weight(key, r):
+def _boot_weight_sql(key_sql: str, r: int) -> str:
     """Deterministic Poisson(1)-ish resample weight for (row key, rep r).
 
     A multiplicative-hash draw — (key·1103515245 + (r+1)·2654435761)
     mod 2^31 — compared against the Poisson(1) CDF as integer
     thresholds, summed: w = [h≥T0] + [h≥T1] + [h≥T2] ∈ {0,1,2,3}. Pure
     BIGINT arithmetic end to end: bit-identical in any engine, which is
-    what lets the oracle replay the 'randomness'."""
-    h = F.pmod(key * F.lit(1103515245) + F.lit((r + 1) * 2654435761),
-               F.lit(2147483648))
-    return (
-        (h >= _BOOT_T[0]).cast("long")
-        + (h >= _BOOT_T[1]).cast("long")
-        + (h >= _BOOT_T[2]).cast("long")
-    )
-
-
-def _boot_weight_sql(key_sql: str, r: int) -> str:
-    """SQL-text twin of :func:`_boot_weight` — same pmod hash, same
-    integer-threshold compares, same long casts and sum order (r14,
-    guide §1.2 driver-latency class: the Column-DSL form cost ~15k
-    py4j round-trips / ~3.5 s of plan construction per call across
-    the 64 replicates)."""
+    what lets the oracle replay the 'randomness'. SQL text, so the 64
+    replicates' weights parse in one py4j call each."""
     h = (
         f"pmod({key_sql} * 1103515245L + {(r + 1) * 2654435761}L, "
         "2147483648L)"
@@ -1554,10 +1540,9 @@ def stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one scan + 128 long-typed running partials per task (7.1 s for
     20M rows × 64 reps on local[32], tools/scale_smoke.py --big)."""
     o = table(spark, sf_dir, "orders")
-    # r14: the 2·B+2 aggregate expressions and the B rep-mean array are
-    # emitted as parsed SQL (identical expression trees; _boot_weight's
-    # SQL twin carries the same casts and term order) — the Column-DSL
-    # form cost ~3.5 s of py4j plan construction per call.
+    # The 2·B+2 aggregate expressions and the B rep-mean array are
+    # parsed SQL: the Column-DSL form cost ~3.5 s of py4j plan
+    # construction per call.
     xc_sql = "CAST(round(o_totalprice * 100) AS BIGINT)"
     aggs = []
     for r in range(_BOOT_B):
@@ -2646,19 +2631,15 @@ def vec_truncate_renorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     array lambdas, zero shuffle; components emitted as 1e-6-quantized
     integers (floor(x·1e6 + 0.5), the vec_normalize discipline —
     round-half-up on both engines, no double→string divergence)."""
+    from xlsx_to_database_spark.operators.similarity import _norm_sql
+
     e = table(spark, sf_dir, "embeddings")
-    xd = lambda x: x.cast("double")  # noqa: E731
     t = e.select("vec_id", F.slice("embedding", 1, 8).alias("emb8"))
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("emb8"), F.lit(0.0), lambda acc, x: acc + xd(x) * xd(x)
-        )
-    )
     comp = (
-        lambda x: F.floor(xd(x) / F.col("nrm") * 1000000 + 0.5)
+        lambda x: F.floor(x.cast("double") / F.col("nrm") * 1000000 + 0.5)
         .cast("long").cast("string")
     )  # noqa: E731
-    return t.withColumn("nrm", norm).select(
+    return t.withColumn("nrm", F.expr(_norm_sql("emb8"))).select(
         "vec_id",
         F.round("nrm", 6).alias("trunc_norm"),
         F.concat_ws(",", F.transform("emb8", comp)).alias("unit_vec_q6"),
@@ -3263,7 +3244,7 @@ def table_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from xlsx_to_database_spark.operators.txn_table import TxnTable
-    from xlsx_to_database_spark.queries.round4_ops import _zvalue
+    from xlsx_to_database_spark.queries.round4_ops import _orders_morton_key
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
@@ -3278,18 +3259,9 @@ def table_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("o_custkey"), F.max("o_custkey"), F.min(day), F.max(day)
     ).collect()[0]
 
-    def quant_sql(col_sql, lo, hi):
-        return (
-            f"CAST(floor(CAST(({col_sql}) - {lo} AS BIGINT) * 256 "
-            f"/ {hi - lo + 1}) AS INT)"
-        )
-
-    z = _zvalue(
-        quant_sql("o_custkey", lo_c, hi_c),
-        quant_sql("datediff(o_orderdate, '1992-01-01')", lo_d, hi_d),
-        bits=8,
+    tt.compact(
+        target_files=8, order_by=_orders_morton_key(lo_c, hi_c, lo_d, hi_d)
     )
-    tt.compact(target_files=8, order_by=z)
     return (
         tt.read()
         .filter(
@@ -3356,18 +3328,8 @@ def sim_two_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered(50) (no shuffle of the corpus); tier 2 touches 50 rows
     — free. At 100 TB the coarse tier is the only full pass and it
     reads 8 floats/row instead of d; recall depends on MRL training
-    quality, which is the model's contract, not the engine's.
-
-    r14: both tiers' dot/norm folds are emitted as parsed SQL strings
-    (guide §1.2 driver-latency class — the Column-DSL `_dot`/`_norm`/
-    `cosine_sim` helpers cost ~0.5 s of py4j plan construction per
-    call); the parsed form resolves to the identical expression tree
-    (same casts, same 0.0D folds, same round-6), via the shared
-    `_dot_sql`/`_norm_sql` twins in operators/similarity.py."""
-    from xlsx_to_database_spark.operators.similarity import (
-        _dot_sql as dot_sql,
-        _norm_sql as norm_sql,
-    )
+    quality, which is the model's contract, not the engine's."""
+    from xlsx_to_database_spark.operators.similarity import _cos_sim_sql
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     e8 = "slice(embedding, 1, 8)"
@@ -3380,8 +3342,7 @@ def sim_two_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "embedding",
             "qe",
-            f"round({dot_sql(e8, 'qe8')} / ({norm_sql(e8)} * "
-            f"{norm_sql('qe8')}), 6) AS coarse_sim",
+            f"{_cos_sim_sql(e8, 'qe8')} AS coarse_sim",
         )
         .orderBy(F.col("coarse_sim").desc(), "vec_id")
         .limit(50)
@@ -3390,8 +3351,7 @@ def sim_two_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
         coarse.selectExpr(
             "vec_id",
             "coarse_sim",
-            f"round({dot_sql('embedding', 'qe')} / "
-            f"({norm_sql('embedding')} * {norm_sql('qe')}), 6) AS cos_sim",
+            f"{_cos_sim_sql('embedding', 'qe')} AS cos_sim",
         )
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(10)

@@ -2614,15 +2614,9 @@ def sim_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     natural pre-filter tier for an exact multi-vector re-rank.
 
     Determinism: each sub-cosine is rounded to 6 BEFORE max; the four
-    maxima add in a fixed order; final round 6 + vec_id tie-break.
-
-    r14: the 16 sub-cosine dot/norm folds are emitted as parsed SQL
-    strings (guide §1.2 driver-latency class — the Column-DSL form
-    cost ~3,800 py4j round-trips / ~1.3 s of plan construction per
-    call) via the shared `_dot_sql`/`_norm_sql` twins in
-    operators/similarity.py — the same casts, the same sequential
-    0.0D folds (hence identical values), the same
-    round-before-greatest."""
+    maxima add in a fixed order; final round 6 + vec_id tie-break. The
+    norms are computed once per sub-vector and reused across the 16
+    sub-cosines."""
     from xlsx_to_database_spark.operators.similarity import (
         _dot_sql as dot_sql,
         _norm_sql as norm_sql,
@@ -3044,34 +3038,28 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: sims rounded to 6 BEFORE ranking with vec_id
     tie-break; vote argmax tie-breaks on the smaller label."""
-    # r14 dragnet: the per-row norm aggregate, the broadcast-scored
-    # cosine, and both rank windows are parsed SQL (identical trees —
-    # note the norm keeps this op's ORIGINAL direct-aggregate fold,
-    # a + CAST(x)·CAST(x), not the transform-then-aggregate _norm
-    # shape); the Column-DSL form cost ~900 py4j round-trips of plan
-    # construction per call.
+    from xlsx_to_database_spark.operators.similarity import (
+        _dot_sql,
+        _norm_sql,
+    )
+
+    # Norms are computed once per row and reused by all ten queries.
     e = table(spark, sf_dir, "embeddings")
     n = e.selectExpr(
         "vec_id",
         "label",
         "embedding AS e",
-        "sqrt(aggregate(embedding, 0.0D,"
-        " (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nrm",
+        f"{_norm_sql('embedding')} AS nrm",
     )
     q = n.filter(F.col("vec_id") < 10).selectExpr(
         "vec_id AS qid", "label AS true_label", "e AS qe", "nrm AS qn"
-    )
-    dot = (
-        "aggregate(zip_with(e, qe,"
-        " (a, b) -> CAST(a AS DOUBLE) * CAST(b AS DOUBLE)),"
-        " 0.0D, (a, x) -> a + x)"
     )
     scored = (
         n.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
         .selectExpr(
             "qid", "true_label", "vec_id", "label",
-            f"round({dot} / (nrm * qn), 6) AS sim",
+            f"round({_dot_sql('e', 'qe')} / (nrm * qn), 6) AS sim",
         )
     )
     votes = (

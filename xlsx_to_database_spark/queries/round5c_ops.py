@@ -2415,30 +2415,21 @@ def sim_mips_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner product directly — the hash match across 10 rows is the
     end-to-end proof of order equivalence on this corpus. Shape: one
     scalar broadcast (M), one map-only score pass, TakeOrdered top-k."""
-    from xlsx_to_database_spark.operators.similarity import _dot
+    from xlsx_to_database_spark.operators.similarity import (
+        _dot_sql,
+        _norm_sql,
+    )
 
-    e = table(spark, sf_dir, "embeddings").select(
+    n = table(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id", "embedding AS e", f"{_norm_sql('embedding')} AS nrm"
+    )
+    m = n.agg(F.max("nrm").alias("M"))
+    q = n.filter(F.col("vec_id") == 0).selectExpr("e AS qe", "nrm AS qn")
+    scored = n.crossJoin(F.broadcast(m)).crossJoin(F.broadcast(q)).selectExpr(
         "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    sq = F.aggregate(
-        F.transform("e", lambda x: x * x), F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    n = e.select("vec_id", "e", sq.alias("sq"))
-    m = n.agg(F.max(F.sqrt(F.col("sq"))).alias("M"))
-    q = n.filter(F.col("vec_id") == 0).select(
-        F.col("e").alias("qe"),
-        F.sqrt(F.col("sq")).alias("qn"),
-    )
-    scored = n.crossJoin(F.broadcast(m)).crossJoin(F.broadcast(q)).select(
-        "vec_id",
-        _dot(F.col("e"), F.col("qe")).alias("ip"),
+        f"{_dot_sql('e', 'qe')} AS ip",
         # augmented cosine: <(x, sqrt(M^2-|x|^2)), (q, 0)> / (M * |q|)
-        (
-            _dot(F.col("e"), F.col("qe"))
-            / (F.col("M") * F.col("qn"))
-        ).alias("cos_aug"),
+        f"{_dot_sql('e', 'qe')} / (M * qn) AS cos_aug",
     )
     return (
         scored.orderBy(F.col("cos_aug").desc(), "vec_id")
@@ -3113,7 +3104,7 @@ def ml_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     device); purity is an integer ratio. Shape: one corpus pass against
     8 broadcast centroids, then two metadata-size aggregates over the
     (cell × label) grid."""
-    from xlsx_to_database_spark.operators.similarity import cosine_sim
+    from xlsx_to_database_spark.operators.similarity import _cos_sim_sql
 
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label",
@@ -3124,7 +3115,7 @@ def ml_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sc = e.crossJoin(F.broadcast(c)).select(
         "vec_id", "label", "c_id",
-        cosine_sim(F.col("e"), F.col("ce")).alias("csim"),
+        F.expr(_cos_sim_sql("e", "ce")).alias("csim"),
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("csim").desc(), F.col("c_id").asc()
@@ -4043,7 +4034,7 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     exact_l2 = (
         e4.select(
-            "vec_id", S._sq_l2(F.col("embedding"), ql2).alias("d2")
+            "vec_id", F.expr(f"round({S._sq_l2_sql('embedding', ql2)}, 6)").alias("d2")
         )
         .orderBy(F.col("d2").asc(), F.col("vec_id").asc())
         .limit(10)
@@ -4588,7 +4579,7 @@ def sim_diversity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
             F.col("a.vec_id").alias("u"), F.col("b.vec_id").alias("v"),
-            S.cosine_sim(F.col("a.v"), F.col("b.v")).alias("s"),
+            F.expr(S._cos_sim_sql("a.v", "b.v")).alias("s"),
         )
         .collect()
     )  # <= C(20,2) = 190 rows — metadata, like the k-centroid collects

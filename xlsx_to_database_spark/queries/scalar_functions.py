@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xlsx_to_database_spark.catalog import table
+from xlsx_to_database_spark.operators.similarity import _dot_sql, _norm_sql
 from xlsx_to_database_spark.registry import query
 
 
@@ -223,11 +224,6 @@ def arr_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm, norm, component sum. Both engines accumulate in float64 (the
     lambda casts each float32 element up before multiplying)."""
     e = table(spark, sf_dir, "embeddings")
-    sq_sum = F.aggregate(
-        F.transform(F.col("embedding"), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     comp_sum = F.aggregate(
         F.transform(F.col("embedding"), lambda x: x.cast("double")),
         F.lit(0.0),
@@ -235,8 +231,8 @@ def arr_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return e.select(
         "vec_id",
-        F.round(sq_sum, 6).alias("norm_sq"),
-        F.round(F.sqrt(sq_sum), 6).alias("norm"),
+        F.expr(f"round({_dot_sql('embedding', 'embedding')}, 6)").alias("norm_sq"),
+        F.expr(f"round({_norm_sql('embedding')}, 6)").alias("norm"),
         F.round(comp_sum, 6).alias("comp_sum"),
     )
 

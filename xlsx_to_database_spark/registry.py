@@ -478,8 +478,8 @@ def _load_all() -> None:
     global _LOADED
     if _LOADED:
         return
-    # Import order mirrors SURVEY.md §7 build order; each module guards
-    # itself so one bad module can't take down the whole inventory.
+    # Import order mirrors SURVEY.md §7 build order and decides the
+    # registry order; a module that fails to import fails the caller.
     import importlib
 
     for mod in (
@@ -510,12 +510,5 @@ def _load_all() -> None:
         "xlsx_to_database_spark.queries.geo_ops",
         "xlsx_to_database_spark.queries.round7_ops",
     ):
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # Only the module itself being absent means "not built yet";
-            # a missing transitive import inside a built module must
-            # surface, not silently drop all of that module's ops.
-            if e.name != mod:
-                raise
+        importlib.import_module(mod)
     _LOADED = True
