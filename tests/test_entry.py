@@ -21,16 +21,34 @@ def test_queries_oracle_keys_align():
     assert set(oracles) <= set(qs)
 
 
+#: Op count and sha256 digests of the joined `all_queries()` keys,
+#: `all_oracles()` keys and oracle SQL texts. Update them only when an op
+#: is added, renamed or re-oracled on purpose.
+PINNED_REGISTRY = [
+    "476",
+    "347322cbe2112cea352e45adbde37393571fe8116c2747eb8f6466c2cc343d6d",
+    "d84b5cdad65e64fa891762f34d06694a0b0716683afda2c4bd96eb982a369e43",
+    "78e692d47728dac5d2f4c899c79da7ccf59a4c38bcc8451bdeb6dc68fab48091",
+]
+
+
+def _registry_digests(q, o):
+    import hashlib
+
+    def h(parts):
+        return hashlib.sha256("\n".join(parts).encode()).hexdigest()
+
+    return [str(len(q)), h(q), h(o), h(o.values())]
+
+
 def test_registry_order_and_oracles_pinned():
     """The driver's 50-op window reads `all_queries()` in order, so the
     key order is a hard invariant: refactors that move or rewrite ops
     must leave the op count, the key order and every oracle's SQL text
-    byte-identical. Update these digests only when an op is added,
-    renamed or re-oracled on purpose.
+    byte-identical.
 
-    Registration follows import order, and other tests import single
-    query modules early, so the registry is read in a fresh
-    interpreter, the way the driver imports `__spark_entry__`."""
+    The registry is read in a fresh interpreter, the way the driver
+    imports `__spark_entry__`."""
     import os
     import subprocess
     import sys
@@ -47,12 +65,31 @@ def test_registry_order_and_oracles_pinned():
         [sys.executable, "-c", script], cwd=root, check=True,
         capture_output=True, text=True,
     ).stdout.split()
-    assert out == [
-        "476",
-        "347322cbe2112cea352e45adbde37393571fe8116c2747eb8f6466c2cc343d6d",
-        "d84b5cdad65e64fa891762f34d06694a0b0716683afda2c4bd96eb982a369e43",
-        "78e692d47728dac5d2f4c899c79da7ccf59a4c38bcc8451bdeb6dc68fab48091",
-    ]
+    assert out == PINNED_REGISTRY
+
+
+def test_registry_order_ignores_import_order(monkeypatch):
+    """The registry order is data (`_ATTESTED`), not import order: a
+    process that imports query modules before `all_queries()` (as
+    tests and tools do) sees the driver's order. The registry is
+    emptied and its query modules are imported afresh, a few first in
+    reverse alphabetical order, in this process."""
+    import importlib
+    import sys
+
+    from xlsx_to_database_spark import queries
+    from xlsx_to_database_spark import registry as r
+
+    monkeypatch.setattr(r, "_QUERIES", {})
+    monkeypatch.setattr(r, "_ORACLES", {})
+    monkeypatch.setattr(r, "_LOADED", False)
+    for name in list(sys.modules):
+        if name.startswith("xlsx_to_database_spark.queries."):
+            monkeypatch.delitem(sys.modules, name)
+            monkeypatch.delattr(queries, name.rsplit(".", 1)[1], raising=False)
+    for mod in ("windows", "streaming", "llm_ops", "geo_ops", "etl"):
+        importlib.import_module(f"xlsx_to_database_spark.queries.{mod}")
+    assert _registry_digests(r.all_queries(), r.all_oracles()) == PINNED_REGISTRY
 
 
 def test_all_queries_run_sf0001(spark, sf_dir):

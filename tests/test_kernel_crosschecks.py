@@ -76,7 +76,7 @@ def test_geohash5_matches_independent_bisection(spark):
 
 
 def test_zvalue_matches_bit_interleave_and_is_injective(spark):
-    from xlsx_to_database_spark.queries.round4_ops import _zvalue
+    from xlsx_to_database_spark.operators.global_order import _zvalue
 
     rng = random.Random(422)
     pairs = list({(rng.randrange(2 ** 16), rng.randrange(2 ** 16))

@@ -898,7 +898,7 @@ def test_containment_directional_vs_brute_force(spark):
 
 
 def test_chunk_split_covers_every_token_with_overlap(spark, sf_dir):
-    from xlsx_to_database_spark.queries.round5_ops import text_chunk_split
+    from xlsx_to_database_spark.queries.corpus_ops import text_chunk_split
 
     rows = text_chunk_split(spark, sf_dir).collect()
     docs = (
@@ -925,7 +925,7 @@ def test_chunk_split_covers_every_token_with_overlap(spark, sf_dir):
 
 
 def test_grid_radius_equals_brute_force(spark):
-    from xlsx_to_database_spark.queries.round5_ops import join_grid_radius
+    from xlsx_to_database_spark.queries.joins import join_grid_radius
 
     # brute force over the real table at sf0.001
     sf = "/root/testdata/sf0.001"
@@ -966,7 +966,7 @@ def test_mann_whitney_matches_hand_computed_u(spark, tmp_path):
     # R_A = 1 + 2 + 5 = 8, U = 8 - 3*4/2 = 2.
     import os
 
-    from xlsx_to_database_spark.queries.round5_ops import stat_mann_whitney
+    from xlsx_to_database_spark.queries.stats import stat_mann_whitney
 
     d = str(tmp_path / "mw")
     os.makedirs(d)
@@ -1010,7 +1010,7 @@ def test_align_to_schema_mapping_rules(spark):
 
 
 def test_jdbc_scan_is_range_partitioned(spark, sf_dir):
-    from xlsx_to_database_spark.queries.round5_ops import jdbc_partitioned_scan
+    from xlsx_to_database_spark.queries.sources_sinks import jdbc_partitioned_scan
 
     df = jdbc_partitioned_scan(spark, sf_dir)
     # 8 disjoint BETWEEN predicates -> 8 input partitions, no overlap/loss.
@@ -1028,7 +1028,7 @@ def test_bloom_sink_writes_bloom_filters(spark, sf_dir, tmp_path):
     import os
 
     from xlsx_to_database_spark.catalog import table as _table
-    from xlsx_to_database_spark.queries.round5_ops import parquet_bloom_sink
+    from xlsx_to_database_spark.queries.sources_sinks import parquet_bloom_sink
 
     parquet_bloom_sink(spark, sf_dir).collect()
     tag = os.path.basename(os.path.normpath(sf_dir))
@@ -1060,7 +1060,7 @@ def test_survival_km_matches_hand_computed(spark, tmp_path):
     import datetime as dt
     import os
 
-    from xlsx_to_database_spark.queries.round5_ops import stat_survival_km
+    from xlsx_to_database_spark.queries.stats import stat_survival_km
 
     d = str(tmp_path / "km")
     os.makedirs(d)
@@ -1088,7 +1088,7 @@ def test_changepoint_finds_level_shift(spark, tmp_path):
     import datetime as dt
     import os
 
-    from xlsx_to_database_spark.queries.round5_ops import stat_changepoint
+    from xlsx_to_database_spark.queries.stats import stat_changepoint
 
     d = str(tmp_path / "cp")
     os.makedirs(d)
@@ -1106,7 +1106,7 @@ def test_bpe_pairs_hand_computed(spark, tmp_path):
     # "ab ab cd" + "abc" -> pairs ab:3 (2 tokens + prefix of abc), bc:1, cd:1.
     import os
 
-    from xlsx_to_database_spark.queries.round5_ops import text_bpe_pairs
+    from xlsx_to_database_spark.queries.corpus_ops import text_bpe_pairs
 
     d = str(tmp_path / "bpe")
     os.makedirs(d)
@@ -1122,7 +1122,7 @@ def test_bootstrap_ci_single_scan_and_brackets_mean(spark, sf_dir):
     FileScan — the Poisson-bootstrap point), and the CI must bracket
     the point estimate."""
     from xlsx_to_database_spark.plans import explain_str
-    from xlsx_to_database_spark.queries.round5_ops import stat_bootstrap_ci
+    from xlsx_to_database_spark.queries.stats import stat_bootstrap_ci
 
     df = stat_bootstrap_ci(spark, sf_dir)
     plan = explain_str(df)
@@ -1195,7 +1195,7 @@ def test_pareto_shares_are_cumulative_to_one(spark, sf_dir):
 def test_frank2_matches_hand_computed_tie_averaged_ranks(spark):
     # x = [10, 10, 20, 30, 30, 30]: fractional ranks 1.5,1.5,3,5,5,5
     # -> 2*rank = 3,3,6,10,10,10
-    from xlsx_to_database_spark.queries.round5b_ops import _frank2
+    from xlsx_to_database_spark.queries.stats import _frank2
 
     df = spark.createDataFrame([(10,), (10,), (20,), (30,), (30,), (30,)], "x int")
     got = {int(r.x): int(r.r2) for r in _frank2(df, "x", "r2").collect()}
@@ -2590,7 +2590,7 @@ def test_kcore_matches_python_peeling(spark, sf_dir):
     mirror's row signal meaningful (round-11 verdict #8; graph
     derivation degree-bounded per round-12 verdict #7)."""
     from xlsx_to_database_spark.catalog import table
-    from xlsx_to_database_spark.queries.round5c_ops import (
+    from xlsx_to_database_spark.queries.graph import (
         _KCORE_K,
         _KCORE_TOPN,
     )
@@ -2713,7 +2713,7 @@ def test_footer_stats_cover_every_row_group(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from xlsx_to_database_spark.queries.round5c_ops import _footer_stats
+    from xlsx_to_database_spark.queries.sources_sinks import _footer_stats
 
     t = pa.table({"k": list(range(25)), "v": [i * 10 for i in range(25)]})
     path = str(tmp_path / "rg.parquet")
@@ -4241,7 +4241,7 @@ def test_dau_mau_bounds_and_replay(spark, sf_dir):
 def test_iterator_udf_initializes_once_per_task(spark, sf_dir):
     """The iterator form's init section must run once per TASK, not per
     Arrow batch — the amortization the surface exists for."""
-    from xlsx_to_database_spark.queries.round5c_ops import udf_pandas_iter
+    from xlsx_to_database_spark.queries.udf_surface import udf_pandas_iter
     from xlsx_to_database_spark.registry import all_queries
 
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")

@@ -310,7 +310,7 @@ def test_chunk_split_reconstructs_document(spark, toks, tmp_path_factory):
     [i*S, (i+1)*S) except the last chunk, which runs to the end."""
     import os
 
-    from xlsx_to_database_spark.queries.round5_ops import text_chunk_split
+    from xlsx_to_database_spark.queries.corpus_ops import text_chunk_split
 
     d = str(tmp_path_factory.mktemp("cs"))
     text = " ".join(f"t{t}" for t in toks)
@@ -346,7 +346,7 @@ def test_chunk_split_reconstructs_document(spark, toks, tmp_path_factory):
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_frank2_matches_reference_ranks(spark, values):
-    from xlsx_to_database_spark.queries.round5b_ops import _frank2
+    from xlsx_to_database_spark.queries.stats import _frank2
 
     df = spark.createDataFrame([(v,) for v in values], "x int")
     got = {r.x: int(r.r2) for r in _frank2(df, "x", "r2").collect()}
@@ -384,7 +384,7 @@ def test_frank2_matches_reference_ranks(spark, values):
 def test_url_canonicalize_idempotent_and_invariant(spark, host, path, params, utm, frag):
     from pyspark.sql import functions as F
 
-    from xlsx_to_database_spark.queries.round5b_ops import _canon_url
+    from xlsx_to_database_spark.queries.corpus_ops import _canon_url
 
     q = "&".join(f"{k}={v}" for k, v in params)
     raw = f"HTTPS://{host}.Example.COM:443/" + "/".join(path)

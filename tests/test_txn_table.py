@@ -293,7 +293,7 @@ def test_compact_order_by_zorder_narrows_both_dims(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from xlsx_to_database_spark.queries.round4_ops import _zvalue
+    from xlsx_to_database_spark.operators.global_order import _zvalue
 
     t = TxnTable(spark, str(tmp_path / "ztbl"), "k")
     df = spark.range(1, 4097).select(
@@ -338,7 +338,7 @@ def test_bfs_hops_hand_graph(spark):
     and an unreachable island {10, 11}. Distances from node 1 must be
     {1:0, 2:1, 3:1, 4:2, 5:3}; the island never appears; a hop cap of 2
     truncates at distance 2."""
-    from xlsx_to_database_spark.queries.round5_ops import bfs_hops
+    from xlsx_to_database_spark.queries.graph import bfs_hops
 
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (1, 3), (10, 11)]
     e = spark.createDataFrame(edges, "u long, v long")

@@ -20,7 +20,7 @@ import hashlib
 
 import duckdb
 
-from xlsx_to_database_spark.queries.round5b_ops import (
+from xlsx_to_database_spark.queries.llm_ops import (
     _WIN_C1,
     _WIN_C2,
     _WIN_M,

@@ -615,7 +615,7 @@ def test_formula_cells_decode_cached_values(tmp_path):
     """Formula cells must yield their cached <v> — incl. a shared-
     formula follower that carries NO formula text — and an error-result
     formula must decode to None, not the '#DIV/0!' literal."""
-    from xlsx_to_database_spark.queries.round5c_ops import (
+    from xlsx_to_database_spark.queries.sources_sinks import (
         _stage_formula_workbook,
     )
     from xlsx_to_database_spark.sources.xlsx_io import read_workbook

@@ -192,7 +192,7 @@ def big_smoke(spark, which: list[str]) -> None:
     from pyspark.sql import functions as F
 
     from xlsx_to_database_spark.operators import dedup as D
-    from xlsx_to_database_spark.queries.round4_ops import _zvalue
+    from xlsx_to_database_spark.operators.global_order import _zvalue
 
     def timed(label, fn):
         fn()  # warm: codegen + planning
@@ -354,7 +354,7 @@ def big_smoke(spark, which: list[str]) -> None:
         import shutil as _sh
 
         from xlsx_to_database_spark.operators.txn_table import TxnTable
-        from xlsx_to_database_spark.queries.round4_ops import _zvalue
+        from xlsx_to_database_spark.operators.global_order import _zvalue
 
         n = 20_000_000
 
@@ -499,7 +499,7 @@ def big_smoke(spark, which: list[str]) -> None:
                 .write.mode("overwrite")
                 .parquet(out)
             )
-        from xlsx_to_database_spark.queries.round5_ops import (
+        from xlsx_to_database_spark.queries.stats import (
             stat_bootstrap_ci,
             stat_changepoint,
             stat_survival_km,

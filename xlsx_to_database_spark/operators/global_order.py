@@ -41,6 +41,10 @@ count job; callers with genuinely huge inputs can pin ``n_buckets``.
 Requirements: the driving key must be the leading, ascending,
 non-null order key (ties within one driving value always land in one
 bucket, so secondary tie-break columns are safe).
+
+The module also builds the Morton (Z-order) sort keys that the
+clustered parquet sink and the txn-table OPTIMIZE ZORDER op lay files
+out by (:func:`_zvalue`, :func:`_orders_morton_key`).
 """
 
 from __future__ import annotations
@@ -286,3 +290,41 @@ def with_global_ntile(
         r + F.floor((g - F.lit(cut) - 1) / q) + 1
     )
     return rn.withColumn(out, bucket.cast("int")).drop("__grn")
+
+
+def _zvalue(a_sql: str, b_sql: str, bits: int = 16) -> Column:
+    """Morton (Z-order) interleave of the low ``bits`` bits of two
+    non-negative int SQL expressions — a pure codegen expression chain
+    (2·bits shift terms), no UDF, emitted as one SQL string so it
+    parses in one py4j call."""
+    terms = []
+    for i in range(bits):
+        terms.append(
+            f"shiftleft(CAST(shiftright({a_sql}, {i}) & 1 AS BIGINT), {2 * i})"
+        )
+        terms.append(
+            f"shiftleft(CAST(shiftright({b_sql}, {i}) & 1 AS BIGINT), {2 * i + 1})"
+        )
+    return F.expr("CAST(0 AS BIGINT) + " + " + ".join(terms))
+
+
+def _orders_morton_key(lo_c: int, hi_c: int, lo_d: int, hi_d: int) -> Column:
+    """Morton key of an orders row: custkey and orderdate (as days
+    since 1992-01-01), each quantized to 8 bits against its (lo, hi)
+    bounds, so both dims contribute comparable high bits. The key
+    decides layout only, never row values."""
+
+    def quant(col_sql: str, lo: int, hi: int) -> str:
+        # Widen to long BEFORE the ×256: for int32 key domains past ~8.4M
+        # (SF ≳ 56) the product overflows 32-bit — silently wrapping
+        # (non-ANSI) into a near-random layout, or erroring under ANSI.
+        return (
+            f"CAST(floor(CAST(({col_sql}) - {lo} AS BIGINT) * 256 "
+            f"/ {hi - lo + 1}) AS INT)"
+        )
+
+    return _zvalue(
+        quant("o_custkey", lo_c, hi_c),
+        quant("datediff(o_orderdate, '1992-01-01')", lo_d, hi_d),
+        bits=8,
+    )

@@ -1,7 +1,24 @@
-"""Query modules: one per SURVEY.md §2 category.
+"""Query modules: one per SURVEY.md §2 op family, named by op-id prefix.
+
+- relational core: ``core`` (project/filter), ``joins`` (``join_*``),
+  ``aggregates`` (``agg_*``), ``windows`` (``win_*``), ``sort_set``,
+  ``scalar_functions`` (``str_*`` and the other scalar families),
+  ``relational_extras`` (pivots, subqueries) and ``tpch_extra``;
+- ``stats`` (``stat_*``), ``ml`` (``ml_*``), ``graph`` (``graph_*``),
+  ``geo_ops`` (``geo_*``);
+- I/O and tables: ``sources_sinks`` (``xlsx_``/``csv_``/``json_``/
+  ``jdbc_``/``parquet_``), ``txn_ops`` (``table_*``, with the staging
+  helpers in ``txn_fixtures``), ``streaming`` (``stream_*``), ``etl``
+  (``etl_``/``dq_``/``sample_``/``interval_``);
+- LLM data: ``llm_ops`` (``sim_``/``vec_``/``dedup_``), ``corpus_ops``
+  (``text_``/``corpus_``/``pipeline_``/``url_``), ``multimodal``
+  (``media_*``), ``analytics_ops`` (``event_``/``funnel_``/``assoc_``)
+  and ``udf_surface`` (``udf_``/``udtf_``).
 
 Importing a module registers its (op id -> Spark fn, oracle SQL) pairs
-with :mod:`xlsx_to_database_spark.registry`.
+with :mod:`xlsx_to_database_spark.registry`, which imports every module
+here; the order the registry lists ops in comes from its ``_ATTESTED``
+tuple, not from import order.
 """
 
 from pyspark.sql import Column  # noqa: E402

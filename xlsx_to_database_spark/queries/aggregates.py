@@ -13,6 +13,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xlsx_to_database_spark.catalog import table
+from xlsx_to_database_spark.operators import global_order as GO
+from xlsx_to_database_spark.operators.global_order import (
+    with_global_running_sums,
+)
 from xlsx_to_database_spark.registry import query
 
 
@@ -577,9 +581,6 @@ def stat_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     pooled = a.select("x", F.lit(1).alias("is_a"), F.lit(0).alias("is_b")).unionAll(
         b.select("x", F.lit(0).alias("is_a"), F.lit(1).alias("is_b"))
     )
-    from xlsx_to_database_spark.operators.global_order import (
-        with_global_running_sums,
-    )
 
     cums = with_global_running_sums(
         pooled,
@@ -779,4 +780,512 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.groupBy("o_orderpriority").agg(
         n.alias("n"),
         F.round((2 * swx - (n + 1) * sx) / (n * sx), 6).alias("gini"),
+    )
+
+
+@query(
+    "agg_weighted_median",
+    """
+    WITH vals AS (
+      SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v,
+             sum(CAST(l_quantity AS BIGINT)) AS w
+      FROM lineitem GROUP BY 1
+    ), cum AS (
+      SELECT v, w, sum(w) OVER (ORDER BY v) AS cw,
+             (SELECT sum(w) FROM vals) AS tw
+      FROM vals
+    )
+    SELECT round(CAST(min(v) AS DOUBLE) / 100, 2) AS weighted_median,
+           CAST(min(tw) AS BIGINT) AS total_weight
+    FROM cum WHERE 2 * cw >= tw
+    """,
+)
+def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted median — the quantile a weighted sample actually needs
+    (`agg_percentile` treats every row equally; after weighted sampling
+    à la `sample_weighted`, or with rows that each represent w units,
+    the unweighted median is simply wrong). Lower weighted median:
+    smallest value whose cumulative weight reaches half the total.
+
+    Computed on the DISTINCT-VALUE aggregate (value → weight mass),
+    then one running weight sum over the value order — the same
+    vocabulary-scale global-order shape as stat_spearman's ranks
+    (bucketed running sum at scale), never a row-scale sort. Exact:
+    values are integer cents, weights integer units; the crossing rule
+    2·cw ≥ tw is pure integer arithmetic."""
+    li = table(spark, sf_dir, "lineitem")
+    vals = li.groupBy(
+        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
+        .cast("long")
+        .alias("v")
+    ).agg(F.sum(F.col("l_quantity").cast("long")).alias("w"))
+    cum = GO.with_global_running_sums(
+        vals, [F.col("v")], "v", {"cw": "w"}
+    )
+    tot = vals.agg(F.sum("w").alias("tw"))
+    hit = (
+        cum.crossJoin(F.broadcast(tot))
+        .filter(2 * F.col("cw") >= F.col("tw"))
+        .agg(
+            F.min("v").alias("mv"),
+            F.min("tw").alias("tw"),
+        )
+    )
+    return hit.select(
+        F.round(F.col("mv").cast("double") / 100, 2).alias("weighted_median"),
+        F.col("tw").cast("long").alias("total_weight"),
+    )
+
+
+@query(
+    "agg_time_decay",
+    """
+    WITH mx AS (
+      SELECT max(CAST(floor(epoch(ts)) AS BIGINT)) AS tmax FROM events
+    ), terms AS (
+      SELECT user_id,
+             CAST(exp(-(tmax - CAST(floor(epoch(ts)) AS BIGINT))
+                      / 2592000.0)
+                  * CAST(floor(value * 100 + 0.5) AS BIGINT)
+                  AS DECIMAL(28,12)) AS w
+      FROM events CROSS JOIN mx
+    )
+    SELECT user_id,
+           round(CAST(sum(w) AS DOUBLE) / 100, 4) AS decayed_value
+    FROM terms GROUP BY user_id
+    """,
+)
+def agg_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exponentially time-decayed value per user (30-day half-life-ish
+    decay, λ = 1/30d) — the recency-weighted aggregate behind LTV
+    scoring, decayed engagement, and trending rankings: yesterday's
+    purchase counts almost fully, last quarter's barely. The anchor is
+    the corpus max timestamp (one broadcast scalar), so the result is
+    deterministic and re-runnable — never wall-clock `now()`, which the
+    oracle could not replay.
+
+    Exactness: each per-row term exp(−Δt/τ)·cents is an
+    engine-identical double (exp over identical integer inputs)
+    quantized to DECIMAL(28,12) BEFORE the per-user sum — the entropy/
+    perplexity discipline that makes a transcendental-weighted
+    aggregate hash-exact. One scalar broadcast + one combiner-friendly
+    shuffle."""
+    e = table(spark, sf_dir, "events")
+    mx = e.agg(F.max(F.unix_timestamp("ts")).alias("tmax"))
+    term = (
+        F.exp(
+            -(F.col("tmax") - F.unix_timestamp("ts")) / F.lit(2592000.0)
+        )
+        * F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    ).cast("decimal(28,12)")
+    return (
+        e.crossJoin(F.broadcast(mx))
+        .select("user_id", term.alias("w"))
+        .groupBy("user_id")
+        .agg(
+            F.round(F.sum("w").cast("double") / 100, 4).alias("decayed_value")
+        )
+    )
+
+
+@query(
+    "agg_skyline_2d",
+    """
+    WITH pts AS (
+      SELECT p_partkey, p_size,
+             CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS pc
+      FROM part
+    ), best AS (
+      SELECT p_partkey, p_size, pc,
+             max(pc) OVER (ORDER BY p_size, pc DESC, p_partkey
+                           ROWS BETWEEN UNBOUNDED PRECEDING
+                           AND 1 PRECEDING) AS best_before
+      FROM pts
+    )
+    SELECT p_partkey, CAST(p_size AS BIGINT) AS p_size,
+           round(CAST(pc AS DOUBLE) / 100, 2) AS p_retailprice
+    FROM best
+    WHERE best_before IS NULL OR pc > best_before
+    """,
+)
+def agg_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """2-D skyline (Pareto frontier) — parts not DOMINATED by any other
+    part that is both smaller (≤ size) and pricier (≥ price, one
+    strictly): the multi-criteria shortlist operator (cheapest-fastest
+    flights, smallest-most-valuable parts) relational engines famously
+    lack. In 2-D it collapses to one sorted pass: order by (size asc,
+    price desc), keep a row iff its price strictly exceeds the running
+    max of everything before it — a window, not an O(n²) dominance
+    join. Ties: equal (size, price) duplicates all survive (none
+    strictly dominates another), realized by putting price DESC then
+    key in the sort so equals see only STRICTLY better predecessors…
+    and the running max over the 1-PRECEDING frame makes the first row
+    trivially kept.
+
+    Scale shape: the global order runs on the (size, price) DISTINCT
+    domain in principle; here the window is a single sort at
+    part-table scale — at 100 TB the same pass rides the bucketed
+    global-order machinery (operators/global_order.py), since the
+    comparison key is 1-D once sorted. Integer cents; no floats in the
+    dominance test."""
+    p = table(spark, sf_dir, "part")
+    pts = p.select(
+        "p_partkey",
+        "p_size",
+        F.floor(F.col("p_retailprice") * 100 + F.lit(0.5))
+        .cast("long")
+        .alias("pc"),
+    )
+    w = Window.orderBy(
+        "p_size", F.col("pc").desc(), "p_partkey"
+    ).rowsBetween(Window.unboundedPreceding, -1)
+    best = pts.withColumn("best_before", F.max("pc").over(w))
+    return best.filter(
+        F.col("best_before").isNull() | (F.col("pc") > F.col("best_before"))
+    ).select(
+        "p_partkey",
+        F.col("p_size").cast("long").alias("p_size"),
+        F.round(F.col("pc").cast("double") / 100, 2).alias("p_retailprice"),
+    )
+
+
+@query(
+    "agg_geometric_mean",
+    """
+    SELECT o_orderpriority,
+           CAST(count(*) AS BIGINT) AS n,
+           round(exp(CAST(sum(CAST(round(ln(o_totalprice), 8)
+                                   AS DECIMAL(20,8))) AS DOUBLE)
+                     / count(*)), 4) AS geo_mean,
+           round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
+                      AS DOUBLE) / count(*), 4) AS arith_mean
+    FROM orders
+    GROUP BY o_orderpriority
+    """,
+)
+def agg_geometric_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Geometric mean per priority class (beside the arithmetic mean
+    for contrast) — the right average for multiplicative quantities
+    (growth rates, price relatives); always ≤ the arithmetic mean
+    (AM-GM), which the unit test pins.
+
+    Exactness: log-space is how geometric means distribute (one
+    mergeable Σln pass), but a raw double Σln is summation-order
+    dependent — each ln is quantized to DECIMAL(20,8) first (the
+    text_perplexity device), making the aggregation exact and the
+    final exp(Σ/n) one identical float expression per engine."""
+    o = table(spark, sf_dir, "orders")
+    lg = (
+        F.round(F.log(F.col("o_totalprice")), 8).cast("decimal(20,8)")
+    )
+    return o.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(
+            F.exp(F.sum(lg).cast("double") / F.count(F.lit(1))), 4
+        ).alias("geo_mean"),
+        F.round(
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double") / F.count(F.lit(1)),
+            4,
+        ).alias("arith_mean"),
+    )
+
+
+@query(
+    "agg_revenue_concentration",
+    """
+    WITH by_cust AS (
+      SELECT o_custkey,
+             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
+                  AS DECIMAL(28,2)) AS rev
+      FROM orders GROUP BY o_custkey
+    ), ranked AS (
+      SELECT rev,
+             row_number() OVER (ORDER BY rev DESC, o_custkey) AS rn,
+             sum(rev) OVER (ORDER BY rev DESC, o_custkey
+                            ROWS BETWEEN UNBOUNDED PRECEDING
+                                     AND CURRENT ROW) AS cum,
+             count(*) OVER () AS n_cust,
+             sum(rev) OVER () AS total
+      FROM by_cust
+    )
+    SELECT CAST(min(rn) AS BIGINT) AS n_top_customers,
+           (SELECT CAST(max(n_cust) AS BIGINT) FROM ranked) AS n_customers,
+           round(CAST(min(rn) AS DOUBLE)
+                 / (SELECT max(n_cust) FROM ranked), 6) AS top_fraction
+    FROM ranked
+    WHERE CAST(cum AS DOUBLE) >= 0.8 * CAST(total AS DOUBLE)
+    """,
+)
+def agg_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue concentration — the inverse-Lorenz question: how many of
+    the top customers carry 80% of revenue? (`stat_lorenz_curve` gives
+    the whole curve; this answers the one cut every account-strategy
+    deck quotes.) The answer is the smallest descending-rank whose
+    cumulative share crosses the threshold.
+
+    Shape: per-customer revenue aggregate, then a customer-scale
+    descending running sum (at fact scale the bucketed global-order
+    machinery is the documented path; the CUSTOMER aggregate — 1 row
+    per key — is what's being ranked, orders of magnitude smaller than
+    the facts). The 0.8 crossover compares exact decimal sums cast
+    through one shared float expression."""
+    o = table(spark, sf_dir, "orders")
+    by_cust = o.groupBy("o_custkey").agg(
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+        .cast("decimal(28,2)").alias("rev")
+    )
+    w = Window.orderBy(F.col("rev").desc(), "o_custkey")
+    ranked = by_cust.select(
+        "rev",
+        F.row_number().over(w).alias("rn"),
+        F.sum("rev").over(w.rowsBetween(Window.unboundedPreceding, 0))
+        .alias("cum"),
+        F.count(F.lit(1)).over(
+            Window.partitionBy()
+        ).alias("n_cust"),
+        F.sum("rev").over(Window.partitionBy()).alias("total"),
+    )
+    hit = ranked.filter(
+        F.col("cum").cast("double") >= 0.8 * F.col("total").cast("double")
+    )
+    return hit.agg(
+        F.min("rn").cast("long").alias("n_top_customers"),
+        F.max("n_cust").cast("long").alias("n_customers"),
+        F.round(
+            F.min("rn").cast("double") / F.max("n_cust"), 6
+        ).alias("top_fraction"),
+    )
+
+
+@query(
+    "agg_percent_of_parent",
+    """
+    WITH rev AS (
+      SELECT r.r_name AS region, n.n_name AS nation,
+             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
+                  AS DECIMAL(28,2)) AS rev
+      FROM orders o
+      JOIN customer c ON o.o_custkey = c.c_custkey
+      JOIN nation n ON c.c_nationkey = n.n_nationkey
+      JOIN region r ON n.n_regionkey = r.r_regionkey
+      GROUP BY r.r_name, n.n_name
+    )
+    SELECT region, nation,
+           round(CAST(rev AS DOUBLE), 2) AS revenue,
+           round(CAST(rev AS DOUBLE)
+                 / CAST(sum(rev) OVER (PARTITION BY region) AS DOUBLE),
+                 6) AS pct_of_region,
+           round(CAST(rev AS DOUBLE)
+                 / CAST(sum(rev) OVER () AS DOUBLE), 6) AS pct_of_total
+    FROM rev
+    """,
+)
+def agg_percent_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Percent-of-parent at two hierarchy levels — each nation's share
+    of its region and of the world: the ratio every drill-down BI
+    report renders next to the absolute number. One star join + one
+    aggregate at (region, nation) grain; both normalizing windows run
+    over the 25-row aggregate (metadata), with decimal sums keeping the
+    shares exact. The 100 TB version is identical — the aggregate is
+    what shrinks, and shares are computed on the aggregate."""
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region")
+    rev = (
+        o.join(c, o["o_custkey"] == c["c_custkey"])
+        .join(n, c["c_nationkey"] == n["n_nationkey"])
+        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
+        .groupBy(
+            F.col("r_name").alias("region"), F.col("n_name").alias("nation")
+        )
+        .agg(
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("decimal(28,2)").alias("rev")
+        )
+    )
+    wr = Window.partitionBy("region")
+    wt = Window.partitionBy()
+    return rev.select(
+        "region", "nation",
+        F.round(F.col("rev").cast("double"), 2).alias("revenue"),
+        F.round(
+            F.col("rev").cast("double")
+            / F.sum("rev").over(wr).cast("double"), 6
+        ).alias("pct_of_region"),
+        F.round(
+            F.col("rev").cast("double")
+            / F.sum("rev").over(wt).cast("double"), 6
+        ).alias("pct_of_total"),
+    )
+
+
+@query(
+    "agg_yoy_growth",
+    """
+    WITH monthly AS (
+      SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
+             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
+                  AS DECIMAL(28,2)) AS rev
+      FROM orders GROUP BY 1
+    ), shifted AS (
+      SELECT mon, rev,
+             lag(rev, 12) OVER (ORDER BY mon) AS rev_prior
+      FROM monthly
+    )
+    SELECT mon, round(CAST(rev AS DOUBLE), 2) AS revenue,
+           round(CAST(rev_prior AS DOUBLE), 2) AS revenue_prior_year,
+           round(100 * (CAST(rev AS DOUBLE)
+                        / CAST(rev_prior AS DOUBLE) - 1), 4)
+             AS yoy_pct
+    FROM shifted WHERE rev_prior IS NOT NULL
+    """,
+)
+def agg_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Year-over-year monthly revenue growth — lag-12 over the MONTH
+    series, the comparison every revenue review opens with (raw
+    month-over-month is seasonality noise; YoY cancels the seasonal
+    term by construction). `win_pct_change` lags at row grain; this is
+    the calendar-aligned business version. Assumes a gapless month
+    series (true of this data; `etl_calendar_scaffold` is the fix when
+    it isn't — a missing month would silently misalign lag-12).
+
+    Shape: one fact-scale month aggregate with decimal sums, then a
+    lag window over the dozens-row month series — metadata. The
+    division is a shared float expression over exact decimals."""
+    o = table(spark, sf_dir, "orders")
+    monthly = o.groupBy(
+        F.date_trunc("month", "o_orderdate").cast("date").alias("mon")
+    ).agg(
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+        .cast("decimal(28,2)").alias("rev")
+    )
+    w = Window.orderBy("mon")
+    shifted = monthly.select(
+        "mon", "rev", F.lag("rev", 12).over(w).alias("rev_prior")
+    )
+    return shifted.filter(F.col("rev_prior").isNotNull()).select(
+        "mon",
+        F.round(F.col("rev").cast("double"), 2).alias("revenue"),
+        F.round(F.col("rev_prior").cast("double"), 2)
+        .alias("revenue_prior_year"),
+        F.round(
+            100 * (F.col("rev").cast("double")
+                   / F.col("rev_prior").cast("double") - 1),
+            4,
+        ).alias("yoy_pct"),
+    )
+
+
+@query(
+    "agg_waterfall_decomp",
+    """
+    WITH by_nation AS (
+      SELECT c.c_nationkey AS nationkey,
+             CAST(sum(CASE WHEN year(o_orderdate) = 1997
+                  THEN CAST(o_totalprice AS DECIMAL(18,2))
+                  ELSE CAST(0 AS DECIMAL(18,2)) END) AS DECIMAL(28,2))
+               AS rev_a,
+             CAST(sum(CASE WHEN year(o_orderdate) = 1998
+                  THEN CAST(o_totalprice AS DECIMAL(18,2))
+                  ELSE CAST(0 AS DECIMAL(18,2)) END) AS DECIMAL(28,2))
+               AS rev_b
+      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+      WHERE year(o_orderdate) IN (1997, 1998)
+      GROUP BY 1
+    ), tot AS (
+      SELECT CAST(sum(rev_b - rev_a) AS DECIMAL(28,2)) AS delta_total
+      FROM by_nation
+    )
+    SELECT nationkey,
+           round(CAST(rev_a AS DOUBLE), 2) AS rev_1997,
+           round(CAST(rev_b AS DOUBLE), 2) AS rev_1998,
+           round(CAST(rev_b - rev_a AS DOUBLE), 2) AS delta,
+           round(CAST(rev_b - rev_a AS DOUBLE)
+                 / CAST(delta_total AS DOUBLE), 6) AS share_of_change
+    FROM by_nation CROSS JOIN tot
+    """,
+)
+def agg_waterfall_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Waterfall decomposition of the 1997→1998 revenue change by
+    nation: per-nation deltas that sum EXACTLY to the total change
+    (decimal arithmetic guarantees the bridge closes — the property a
+    waterfall chart silently assumes and float pipelines silently
+    break). The executive "what moved the number" view; the unit test
+    pins Σdelta = Δtotal to the cent.
+
+    One conditional two-period aggregate over the star join, a 1-row
+    total broadcast back over the 25-row result."""
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    p = F.col("o_totalprice").cast("decimal(18,2)")
+    zero = F.lit(0).cast("decimal(18,2)")
+    yr = F.year("o_orderdate")
+    by_nation = (
+        o.filter(yr.isin(1997, 1998))
+        .join(c, o["o_custkey"] == c["c_custkey"])
+        .groupBy(F.col("c_nationkey").alias("nationkey"))
+        .agg(
+            F.sum(F.when(yr == 1997, p).otherwise(zero))
+            .cast("decimal(28,2)").alias("rev_a"),
+            F.sum(F.when(yr == 1998, p).otherwise(zero))
+            .cast("decimal(28,2)").alias("rev_b"),
+        )
+    )
+    tot = by_nation.agg(
+        F.sum(F.col("rev_b") - F.col("rev_a"))
+        .cast("decimal(28,2)").alias("delta_total")
+    )
+    return by_nation.crossJoin(F.broadcast(tot)).select(
+        "nationkey",
+        F.round(F.col("rev_a").cast("double"), 2).alias("rev_1997"),
+        F.round(F.col("rev_b").cast("double"), 2).alias("rev_1998"),
+        F.round((F.col("rev_b") - F.col("rev_a")).cast("double"), 2)
+        .alias("delta"),
+        F.round(
+            (F.col("rev_b") - F.col("rev_a")).cast("double")
+            / F.col("delta_total").cast("double"),
+            6,
+        ).alias("share_of_change"),
+    )
+
+
+@query(
+    "agg_basket_profile",
+    """
+    WITH baskets AS (
+      SELECT l_orderkey, CAST(count(*) AS BIGINT) AS n_lines,
+             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
+                  AS DECIMAL(28,2)) AS basket_value
+      FROM lineitem GROUP BY l_orderkey
+    )
+    SELECT n_lines,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           round(CAST(sum(basket_value) AS DOUBLE) / count(*), 2)
+             AS avg_basket_value,
+           round(CAST(sum(basket_value) AS DOUBLE), 2) AS total_value
+    FROM baskets GROUP BY n_lines
+    """,
+)
+def agg_basket_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Basket-size profile: the distribution of lines-per-order with
+    the average and total basket value at each size — merchandising's
+    first question ("do bigger baskets carry super-linear value?") and the
+    capacity input for picking/packing simulation. Two partial
+    aggregates (order grain, then size grain — the second runs on a
+    dozens-row domain); decimal basket sums keep the averages exact."""
+    li = table(spark, sf_dir, "lineitem")
+    baskets = li.groupBy("l_orderkey").agg(
+        F.count(F.lit(1)).alias("n_lines"),
+        F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
+        .cast("decimal(28,2)").alias("basket_value"),
+    )
+    return baskets.groupBy("n_lines").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.round(
+            F.sum("basket_value").cast("double") / F.count(F.lit(1)), 2
+        ).alias("avg_basket_value"),
+        F.round(F.sum("basket_value").cast("double"), 2)
+        .alias("total_value"),
     )

@@ -12,10 +12,14 @@ instead of exploding a range cross-product.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xlsx_to_database_spark.catalog import table, tables
+from xlsx_to_database_spark.operators.skew import salted_join
+from xlsx_to_database_spark.queries.sources_sinks import _STAGE_ROOT, _tag
 from xlsx_to_database_spark.registry import query
 
 
@@ -347,8 +351,6 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     each key over 8 salt buckets, the small side replicates 8×. The
     oracle is the PLAIN join SQL — proving salting changes only the
     data distribution, never the result."""
-    from xlsx_to_database_spark.operators.skew import salted_join
-
     li, o = tables(spark, sf_dir, "lineitem", "orders")
     joined = salted_join(
         li, o.select("o_orderkey", "o_totalprice"), "l_orderkey", "o_orderkey", n_salts=8
@@ -383,8 +385,6 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stage_bucketed(spark: SparkSession, sf_dir: str, src: str, key: str) -> str:
     """Create (once per session+sf) a bucketed, bucket-sorted copy of a
     testdata table in the session warehouse; returns the table name."""
-    import os
-
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     tname = f"{src}_bkt_{tag}"
     if not spark.catalog.tableExists(tname):
@@ -809,3 +809,146 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefiltered["o_custkey"] == build["c_custkey"],
         "left_semi",
     ).select("o_orderkey", "o_custkey", "o_totalprice")
+
+
+_RADIUS = 0.02
+
+
+@query(
+    "join_grid_radius",
+    f"""
+    WITH pts AS (
+      SELECT vec_id, CAST(embedding[1] AS DOUBLE) AS x,
+             CAST(embedding[2] AS DOUBLE) AS y
+      FROM embeddings
+    )
+    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           round(sqrt(power(a.x - b.x, 2) + power(a.y - b.y, 2)), 6) AS dist
+    FROM pts a JOIN pts b ON a.vec_id < b.vec_id
+    WHERE round(sqrt(power(a.x - b.x, 2) + power(a.y - b.y, 2)), 6)
+          <= {_RADIUS}
+    """,
+)
+def join_grid_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All point pairs within Euclidean radius r in the plane of the
+    first two embedding dimensions — the grid-bucketed spatial radius
+    join (geo joins, collision detection, blocking for record linkage).
+
+    Plan: snap each point to an r-sized grid cell; ONE side explodes to
+    its 3×3 cell neighborhood, the other keys by its own cell; equi-join
+    on the cell id, then the exact distance filter. dist ≤ r bounds
+    each coordinate delta by r, so a qualifying pair's cells differ by
+    ≤ 1 per axis and the neighborhood join has zero false negatives;
+    each pair meets exactly once (the unexploded side sits in one cell,
+    the exploded side covers it once, and the id_a < id_b filter keeps
+    one orientation) — no distinct needed. This is an equi-shuffle on
+    cell id: no cross join anywhere, candidate volume is Σ_cell
+    9·|cell|², which r controls; at 100 TB dense cells are ordinary AQE
+    skew-join work, and the 9× expansion sits on the probe side of a
+    shuffled hash join. The oracle is the defining cross product.
+    Exactness: float→double widening is exact on both engines, sqrt/pow
+    are bit-identical libm calls, and the 6dp-rounded distance is what
+    both sides threshold on."""
+    e = table(spark, sf_dir, "embeddings")
+    pts = e.select(
+        "vec_id",
+        F.col("embedding").getItem(0).cast("double").alias("x"),
+        F.col("embedding").getItem(1).cast("double").alias("y"),
+    )
+    cell = lambda c: F.floor(c / _RADIUS).cast("long")  # noqa: E731
+    left = pts.select(
+        F.col("vec_id").alias("id_a"),
+        F.col("x").alias("xa"),
+        F.col("y").alias("ya"),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        (cell(F.col("x")) + dx).alias("cx"),
+                        (cell(F.col("y")) + dy).alias("cy"),
+                    )
+                    for dx in (-1, 0, 1)
+                    for dy in (-1, 0, 1)
+                ]
+            )
+        ).alias("c"),
+    ).select("id_a", "xa", "ya", F.col("c.cx").alias("cx"), F.col("c.cy").alias("cy"))
+    right = pts.select(
+        F.col("vec_id").alias("id_b"),
+        F.col("x").alias("xb"),
+        F.col("y").alias("yb"),
+        cell(F.col("x")).alias("cx"),
+        cell(F.col("y")).alias("cy"),
+    )
+    dist = F.round(
+        F.sqrt(
+            F.pow(F.col("xa") - F.col("xb"), 2) + F.pow(F.col("ya") - F.col("yb"), 2)
+        ),
+        6,
+    )
+    return (
+        left.join(right, on=["cx", "cy"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", dist.alias("dist"))
+        .filter(F.col("dist") <= _RADIUS)
+    )
+
+
+@query(
+    "join_partition_pruned",
+    """
+    SELECT CAST(year(o_orderdate) AS INT) AS o_year,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
+                      AS DOUBLE), 2) AS revenue
+    FROM orders
+    WHERE year(o_orderdate) IN (1995, 1996)
+    GROUP BY 1
+    """,
+)
+def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dynamic partition pruning — THE scan-elimination mechanism for
+    star joins at 100 TB: the fact table is laid out partitioned by
+    year, the filter lives on the DIMENSION side, and Spark reuses the
+    broadcast dim to prune fact PARTITIONS at runtime (static pruning
+    can't see through the join; without DPP this plan scans all seven
+    years to keep two). The staged layout is the standard
+    date-partitioned warehouse shape; the dim is a year attribute table
+    filtered to a 2-of-7 selection.
+
+    The plan carries `dynamicpruningexpression` on the fact scan's
+    PartitionFilters (pinned in tests/test_plans.py) — files for the
+    five pruned years are never opened. Result hash-matches the
+    declarative year-IN reconstruction."""
+    root = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_orders_by_year")
+    if not os.path.exists(os.path.join(root, "_SUCCESS")):
+        os.makedirs(_STAGE_ROOT, exist_ok=True)
+        (
+            table(spark, sf_dir, "orders")
+            .withColumn("o_year", F.year("o_orderdate").cast("int"))
+            .write.mode("overwrite")
+            .partitionBy("o_year")
+            .parquet(root)
+        )
+    fact = spark.read.parquet(root)
+    dim = spark.range(1992, 1999).select(
+        F.col("id").cast("int").alias("d_year"),
+        (F.col("id").isin(1995, 1996)).alias("is_focus"),
+    )
+    return (
+        fact.join(
+            F.broadcast(dim.filter(F.col("is_focus"))),
+            fact["o_year"] == F.col("d_year"),
+        )
+        .groupBy("o_year")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast(
+                    "double"
+                ),
+                2,
+            ).alias("revenue"),
+        )
+        .select("o_year", "n_orders", "revenue")
+    )

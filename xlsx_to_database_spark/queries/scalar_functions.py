@@ -370,3 +370,37 @@ def str_extract_all(spark: SparkSession, sf_dir: str) -> DataFrame:
             ",", F.regexp_extract_all("p_type", F.lit("[A-Z]+"), 0)
         ).alias("type_tokens"),
     )
+
+
+@query(
+    "str_format_funcs",
+    """
+    SELECT n_nationkey,
+           lpad(CAST(n_nationkey AS VARCHAR), 4, '0') AS padded_key,
+           printf('%s (region %d)', n_name, n_regionkey) AS label,
+           format('{:,}', n_nationkey * 1000000) AS grouped,
+           rpad(substr(n_name, 1, 8), 8, '.') AS fixed8
+    FROM nation
+    """,
+)
+def str_format_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Presentation-layer string formatting — zero-padded keys
+    (`lpad`), printf-style labels, thousands-grouped numbers, and
+    fixed-width padded fields: the report/export surface beside the
+    parsing-oriented `str_funcs`. All JVM codegen expressions, map-only.
+
+    Engine note: Spark's `format_number` and DuckDB's `format('{:,}')`
+    both produce comma-grouped integers; printf's %s/%d subset is the
+    dialect intersection that renders identically — pinned here so a
+    formatting regression (or locale drift) fails the hash, not a
+    customer export."""
+    n = table(spark, sf_dir, "nation")
+    return n.select(
+        "n_nationkey",
+        F.lpad(F.col("n_nationkey").cast("string"), 4, "0")
+        .alias("padded_key"),
+        F.printf(F.lit("%s (region %d)"), F.col("n_name"),
+                 F.col("n_regionkey")).alias("label"),
+        F.format_number(F.col("n_nationkey") * 1000000, 0).alias("grouped"),
+        F.rpad(F.substring("n_name", 1, 8), 8, ".").alias("fixed8"),
+    )

@@ -11,18 +11,33 @@ verified by read-back).
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
 import uuid
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
+from xlsx_to_database_spark.operators.txn_table import TxnTable
 from xlsx_to_database_spark.registry import query
 from xlsx_to_database_spark.streaming.engine import (
+    _stage_dir,
+    _state_sized_shuffle,
+    events_raw_schema,
     events_stream,
     run_foreach_batch_parquet,
     run_to_memory,
+    with_event_time,
 )
 
 
@@ -127,13 +142,6 @@ def _ordered_split_dir(spark: SparkSession, sf_dir: str) -> str:
     exact oracle). The source (size, mtime) pair is embedded in the dir
     name so regenerated testdata can never be read through a stale
     split (size alone could collide)."""
-    import os
-
-    from xlsx_to_database_spark.streaming.engine import (
-        _stage_dir,
-        events_raw_schema,
-    )
-
     src_dir = _stage_dir(sf_dir, 1)
     src_path = os.path.join(sf_dir, "events.parquet")
     src_size = os.path.getsize(src_path)
@@ -181,11 +189,6 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the SQL predicate in the oracle. Emission below a final
     watermark thus IS batch-expressible for ordered replays — only
     disordered replays (rows genuinely dropped) stay rows-only."""
-    from xlsx_to_database_spark.streaming.engine import (
-        events_raw_schema,
-        with_event_time,
-    )
-
     split_dir = _ordered_split_dir(spark, sf_dir)
     raw = (
         spark.readStream.schema(events_raw_schema(sf_dir))
@@ -263,15 +266,6 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful per-user aggregate via applyInPandasWithState:
     state = (count, sum, max_ts) updated per batch. With one input file
     (single batch) the emitted update equals the batch aggregate."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
     out_schema = StructType(
         [
             StructField("user_id", LongType()),
@@ -482,15 +476,6 @@ def stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     retry, or torn commit changes the hash. Exactly-once here is
     end-to-end: source replay (checkpointed offsets) × idempotent
     transactional sink."""
-    import os
-    import uuid as _uuid
-
-    from xlsx_to_database_spark.operators.txn_table import TxnTable
-    from xlsx_to_database_spark.streaming.engine import (
-        events_raw_schema,
-        with_event_time,
-    )
-
     split_dir = _ordered_split_dir(spark, sf_dir)
     raw = (
         spark.readStream.schema(events_raw_schema(sf_dir))
@@ -498,9 +483,9 @@ def stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(split_dir)
     )
     ev = with_event_time(raw, sf_dir).select("event_id", "event_type", "value")
-    root = f"/tmp/spark_stream_out/txn_{_uuid.uuid4().hex}"
+    root = f"/tmp/spark_stream_out/txn_{uuid.uuid4().hex}"
     tt = TxnTable(spark, root, "event_id")
-    ckpt = f"/tmp/spark_stream_ckpt/{_uuid.uuid4().hex}"
+    ckpt = f"/tmp/spark_stream_ckpt/{uuid.uuid4().hex}"
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not tt.versions():
@@ -521,4 +506,113 @@ def stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
         ).alias("total"),
+    )
+
+
+@query(
+    "stream_restart_resume",
+    """
+    SELECT CAST(user_id % 10 AS BIGINT) AS bucket,
+           CAST(count(*) AS BIGINT) AS n,
+           round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4)
+             AS total,
+           2 AS n_commits,
+           0 AS empty_restart_commits
+    FROM events
+    GROUP BY 1
+    """,
+)
+def stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Checkpoint-restart continuity as an oracled query — the
+    production redeploy path the availableNow drains never cross. The
+    events table is split in half by event_id parity; the SAME stateful
+    update-mode pipeline (per-bucket count/sum, foreachBatch MERGE into
+    a TxnTable) is started THREE times against one durable checkpoint:
+
+    1. half A staged → drain (create + first merge commit),
+    2. half B staged → RESTART from the checkpoint → drain,
+    3. no new data    → restart again → must commit NOTHING.
+
+    The read-back must hash-match the batch aggregate over ALL events:
+    lost state undercounts every phase-1 bucket (update mode re-emits
+    the restored total, not the phase-2 delta), a re-read of half A
+    double-counts, and a replayed merge on the empty restart bumps the
+    version counter. n_commits (2: phase-1 create + phase-2 merge —
+    each availableNow file-source drain plans its staged file as one
+    micro-batch) and empty_restart_commits (0) pin the txn-log shape.
+
+    Scale: restart cost is O(state + new files) — offsets and state
+    live in the checkpoint, never rescanned from the source; the MERGE
+    sink prunes to files overlapping the 10-bucket key range."""
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    base = f"/tmp/spark_stage/{tag}_restart_resume"
+    shutil.rmtree(base, ignore_errors=True)
+    src, ckpt, root = f"{base}/src", f"{base}/ckpt", f"{base}/table"
+    os.makedirs(src)
+
+    raw_schema = events_raw_schema(sf_dir)
+    raw = spark.read.schema(raw_schema).parquet(f"{sf_dir}/events.parquet")
+
+    def stage_half(parity: int, name: str) -> None:
+        tmp_out = f"{base}/stage_{name}"
+        raw.filter(F.col("event_id") % 2 == parity).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp_out)
+
+        (part,) = glob.glob(f"{tmp_out}/part-*.parquet")
+        shutil.move(part, f"{src}/{name}.parquet")
+        shutil.rmtree(tmp_out, ignore_errors=True)
+
+    tt = TxnTable(spark, root, "bucket")
+
+    def drain() -> None:
+        # Rebuilt from scratch each phase — state, source offsets, and
+        # any uncommitted batch come only from ``ckpt``, like a redeploy.
+        stream_raw = spark.readStream.schema(raw_schema).parquet(src)
+        agg = (
+            with_event_time(stream_raw, sf_dir)
+            .groupBy((F.col("user_id") % 10).cast("long").alias("bucket"))
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n"),
+                F.round(
+                    F.sum(F.col("value").cast("decimal(18,6)")).cast(
+                        "double"
+                    ),
+                    4,
+                ).alias("total"),
+            )
+        )
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            if not tt.versions():
+                tt.create(batch_df)
+            else:
+                tt.merge(batch_df, "bucket")
+
+        with _state_sized_shuffle(spark):
+            q = (
+                agg.writeStream.foreachBatch(sink)
+                .outputMode("update")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+
+    stage_half(0, "a")
+    drain()
+    stage_half(1, "b")
+    drain()
+    commits = tt.latest_version() + 1
+    drain()  # empty restart
+    empty_commits = tt.latest_version() + 1 - commits
+    return (
+        tt.read()
+        .select("bucket", "n", "total")
+        .withColumn("n_commits", F.lit(commits).cast("int"))
+        .withColumn(
+            "empty_restart_commits", F.lit(empty_commits).cast("int")
+        )
     )

@@ -10,7 +10,14 @@ row-at-a-time throughput) are the floor.
 
 from __future__ import annotations
 
+# Module-level so pandas_udf can resolve the iterator UDF's type hints
+# (postponed annotations are strings, looked up in module globals).
+from typing import Iterator, Tuple
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udf, udtf
@@ -55,8 +62,6 @@ def udf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches — the pattern for any numeric kernel the built-ins can't
     express (here they could; the op proves the vectorized path agrees
     with the expression path and the oracle)."""
-    import numpy as np
-
     @pandas_udf(DoubleType())
     def l2_norm(vectors: pd.Series) -> pd.Series:
         return vectors.map(
@@ -94,7 +99,7 @@ def udaf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sorted-rank identity makes it SQL-able for verification)."""
 
     def gini(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
+        import numpy as np  # worker-side: imported where the UDF body runs
 
         x = pdf["o_totalprice"].sort_values().to_numpy()
         n = len(x)
@@ -160,9 +165,6 @@ def udf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (numpy/pyarrow.compute). The float math is IEEE-identical to the
     SQL expression, so the oracle is exact; the round happens JVM-side at 4dp —
     the product's exact decimal precision, where rounding is tie-free."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     def net(batches):
         for b in batches:
             price = pc.multiply(
@@ -210,8 +212,6 @@ def udf_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     provably the full-outer-join aggregate the oracle computes. Scale:
     cogroup shuffles both sides on the key — same cost as the join it
     generalizes."""
-    import pandas as pd
-
     # Two SEPARATE reads on purpose: when both cogroup sides share one
     # scan, their columns carry identical expression ids and Spark's
     # column pruner drops the right side's non-key columns (the right
@@ -252,3 +252,156 @@ def udf_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id long, n_clicks long, n_purchases long, purchase_value double",
         )
     )
+
+
+@query(
+    "udf_sql",
+    """
+    SELECT o_orderpriority,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(round(sum(CAST(o_totalprice * (1.0 - 0.04)
+                               AS DECIMAL(18,4))), 2)
+                AS DOUBLE) AS net_total
+    FROM orders
+    GROUP BY o_orderpriority
+    """,
+)
+def udf_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL-defined scalar UDF (Spark 4 ``CREATE FUNCTION ... RETURN
+    expr``) — the fourth UDF surface beside Python/pandas/Arrow UDFs
+    and the ONLY one with zero serialization cost: the body inlines
+    into the Catalyst plan, keeps whole-stage codegen, and never leaves
+    the JVM. For any UDF expressible as a SQL expression this is the
+    100 TB answer; the Python surfaces exist for logic SQL cannot say.
+
+    The function applies a flat 4% discount; the oracle inlines the
+    same expression — which is precisely the semantics being pinned:
+    a SQL UDF is macro expansion, not a call boundary. DECIMAL
+    quantization of each term keeps the group sums order-independent;
+    the FINAL column is cast to DOUBLE on both engines — DECIMAL-typed
+    result columns sit outside the driver comparator's canonical
+    domain ('X.90' vs 'X.9', the round-9 red), and a 2dp decimal
+    converts to the identical IEEE double everywhere."""
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION flat_net(p DOUBLE) "
+        "RETURNS DECIMAL(18,4) "
+        "RETURN CAST(p * (1.0 - 0.04) AS DECIMAL(18,4))"
+    )
+    table(spark, sf_dir, "orders").createOrReplaceTempView("__udf_sql_o")
+    return spark.sql(
+        """
+        SELECT o_orderpriority,
+               CAST(count(*) AS BIGINT) AS n,
+               CAST(round(sum(flat_net(o_totalprice)), 2) AS DOUBLE)
+                 AS net_total
+        FROM __udf_sql_o
+        GROUP BY o_orderpriority
+        """
+    )
+
+
+@query(
+    "udtf_sql",
+    """
+    WITH spine AS (
+      SELECT unnest(range(0, 12)) AS m
+    ), months AS (
+      SELECT CAST(m AS BIGINT) AS month_off,
+             TIMESTAMP '1997-01-01' + to_months(CAST(m AS INT)) AS month_start
+      FROM spine
+    )
+    SELECT m.month_off, m.month_start,
+           CAST(count(o.o_orderkey) AS BIGINT) AS n_orders
+    FROM months m LEFT JOIN orders o
+      ON o.o_orderdate >= m.month_start
+     AND o.o_orderdate < m.month_start + to_months(1)
+    GROUP BY m.month_off, m.month_start
+    """,
+)
+def udtf_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL-defined TABLE function (Spark 4 ``CREATE FUNCTION ...
+    RETURNS TABLE``) — the set-returning sibling of `udf_sql` and the
+    JVM-side alternative to `udtf_python`: the body is a subquery that
+    inlines into the plan, so generating a 12-month spine costs a
+    Range node, not a Python process. Used here for the classic
+    calendar-spine left join (months with zero orders must appear).
+
+    The month-window band join is bounded (12 spine rows — broadcast
+    NLJ over a metadata-size build side, same class as
+    `etl_calendar_scaffold`)."""
+    spark.sql(
+        # range(0, n) rejects a non-foldable function parameter;
+        # sequence() accepts one, so the spine generates through explode.
+        "CREATE OR REPLACE TEMPORARY FUNCTION month_spine(n INT) "
+        "RETURNS TABLE(month_off BIGINT, month_start TIMESTAMP) "
+        "RETURN SELECT x AS month_off, "
+        "TIMESTAMP '1997-01-01' + make_interval(0, CAST(x AS INT)) "
+        "FROM (SELECT explode(sequence(CAST(0 AS BIGINT), "
+        "CAST(n - 1 AS BIGINT))) AS x)"
+    )
+    table(spark, sf_dir, "orders").createOrReplaceTempView("__udtf_sql_o")
+    return spark.sql(
+        """
+        SELECT m.month_off, m.month_start,
+               CAST(count(o.o_orderkey) AS BIGINT) AS n_orders
+        FROM month_spine(12) m LEFT JOIN __udtf_sql_o o
+          ON o.o_orderdate >= m.month_start
+         AND o.o_orderdate < m.month_start + make_interval(0, 1)
+        GROUP BY m.month_off, m.month_start
+        """
+    )
+
+
+@query(
+    "udf_pandas_iter",
+    """
+    SELECT l_returnflag,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(round(sum(CAST(
+             CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - l_discount)
+             AS DECIMAL(18,4))), 2) AS DOUBLE) AS net_total
+    FROM lineitem GROUP BY l_returnflag
+    """,
+)
+def udf_pandas_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Iterator-form pandas UDF (``Iterator[Series] -> Iterator[
+    Series]``) — the LAST UDF surface in the suite and the one built
+    for expensive per-worker initialization: the closure's setup code
+    runs ONCE per partition, then streams Arrow batches through it —
+    exactly how model-inference UDFs amortize loading a tokenizer or
+    an ONNX session across millions of rows (the scalar pandas UDF
+    re-enters per batch with no init seam at all).
+
+    The "expensive init" here is a constants table built once per
+    partition (asserted: init count ≤ partitions, not batches, in the
+    unit test via an accumulator). Arithmetic is 4dp-quantized so the
+    engine comparison stays exact."""
+    init_acc = spark.sparkContext.accumulator(0)
+    batch_acc = spark.sparkContext.accumulator(0)
+
+    @pandas_udf("double")
+    def net_price(
+        it: Iterator[Tuple[pd.Series, pd.Series]],
+    ) -> Iterator[pd.Series]:
+        init_acc.add(1)          # once per partition/task
+        factor = 1.0             # stand-in for an expensive model load
+        for p, d in it:
+            batch_acc.add(1)     # once per Arrow batch
+            yield (p.round(2) * (factor - d)).round(4)
+
+    li = table(spark, sf_dir, "lineitem")
+    out = li.select(
+        "l_returnflag",
+        net_price(F.col("l_extendedprice"), F.col("l_discount"))
+        .cast("decimal(18,4)").alias("net"),
+    )
+    res = out.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"),
+        # internal sum stays decimal (order-independent); OUTPUT is
+        # double — DECIMAL result columns sit outside the driver
+        # comparator's canonical domain (round-9 red)
+        F.round(F.sum("net"), 2).cast("double").alias("net_total"),
+    )
+    # stash accumulators for the unit test
+    udf_pandas_iter._accs = (init_acc, batch_acc)  # type: ignore[attr-defined]
+    return res

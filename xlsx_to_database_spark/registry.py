@@ -57,95 +57,88 @@ def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# Ops with a green row in a prior round's driver CORRECTNESS file. The
-# driver evaluates a bounded prefix of the registry each round (r01 covered
-# exactly the first 50 entries), so already-attested ops yield their slot to
-# ops still waiting for a driver signal; the local mirror
-# (tools/check_correctness.py) keeps regression coverage on all of them
-# every round regardless of order.
+# Ops with a green row in a driver CORRECTNESS_r*.json file, in the
+# order the registry lists them. The driver evaluates a bounded prefix of
+# the registry (r01 covered exactly the first 50 entries), so attested ops
+# go to the back and yield their slots to ops still waiting for a driver
+# signal; the local mirror (tools/check_correctness.py) re-checks all of
+# them. The CORRECTNESS files hold the per-round history, and
+# tests/test_entry.py::test_attested_fold_complete keeps this tuple
+# complete against them.
 _ATTESTED: tuple[str, ...] = (
-    # CORRECTNESS_r01.json greens (hash_match or declared rows-only).
-    "agg_basic", "project_select", "filter_pred", "filter_between",
-    "filter_in", "filter_like", "null_handling", "case_when", "cast_types",
+    "dedup_cluster", "funnel_steps", "join_range_bucketed",
+    "dedup_keep_best", "graph_connected_components", "graph_kcore",
+    "graph_modularity", "dedup_cluster_profile", "agg_basic",
+    "project_select", "filter_pred", "filter_between", "filter_in",
+    "filter_like", "null_handling", "case_when", "cast_types",
     "distinct_rows", "join_inner_equi", "join_broadcast", "join_left",
     "join_right", "join_full", "join_semi", "join_anti", "join_cross",
     "join_theta", "join_asof", "join_interval", "join_self",
     "join_skew_salted", "join_null_safe", "join_bucketed",
+    "join_asof_forward", "join_existence_flag", "join_nearest",
+    "join_fuzzy", "join_asof_tolerance", "join_bloom_prefilter",
     "agg_count_distinct", "agg_approx_distinct", "agg_having",
     "agg_filtered", "agg_stats", "agg_percentile", "agg_percentile_approx",
-    "agg_minmax_by", "agg_rollup", "agg_cube", "agg_grouping_sets",
-    "agg_global", "agg_corr", "agg_hll_sketch", "agg_string",
-    "stat_histogram", "agg_condcount", "win_row_number", "win_rank_dense",
-    "win_ntile", "win_percent_cume", "win_lag_lead", "win_running_sum",
-    "win_moving_avg",
-    # CORRECTNESS_r02.json greens (all 50 evaluated entries passed;
-    # sample_frac is the declared rows-only op).
-    "join_asof_forward", "join_existence_flag", "join_nearest", "join_fuzzy",
-    "join_asof_tolerance", "agg_collect", "agg_grouping_id",
-    "agg_bitmap_distinct", "agg_entropy", "stat_ks_test", "agg_skew_twophase",
-    "agg_approx_topk", "agg_weighted", "agg_gini", "win_range_frame",
-    "win_first_last", "win_time_range", "win_sessionize", "win_fill_forward",
-    "win_nth_value", "win_running_distinct", "sort_multi", "limit_n",
+    "agg_minmax_by", "agg_collect", "agg_rollup", "agg_cube",
+    "agg_grouping_sets", "agg_global", "agg_corr", "agg_hll_sketch",
+    "agg_string", "stat_histogram", "agg_condcount", "agg_grouping_id",
+    "agg_bitmap_distinct", "agg_entropy", "stat_ks_test",
+    "agg_skew_twophase", "agg_approx_topk", "agg_weighted", "agg_gini",
+    "win_row_number", "win_rank_dense", "win_ntile", "win_percent_cume",
+    "win_lag_lead", "win_running_sum", "win_moving_avg", "win_range_frame",
+    "win_first_last", "win_time_range", "win_sessionize",
+    "win_fill_forward", "win_nth_value", "win_running_distinct",
+    "win_global_rank", "win_rolling_median", "sort_multi", "limit_n",
     "topk_per_group", "sample_frac", "set_union_all", "set_union_distinct",
-    "set_intersect", "set_except", "sample_hash", "str_funcs", "str_regexp",
-    "str_levenshtein", "date_funcs", "math_funcs", "arr_funcs", "arr_explode",
-    "arr_higher_order", "map_funcs", "json_extract", "variant_json",
-    "xml_parse", "str_extract_all", "xlsx_scan", "xlsx_infer",
-    "xlsx_multisheet", "ident_sanitize", "parquet_scan", "csv_scan",
-    "json_scan",
-    # CORRECTNESS_r03.json greens (all 50 evaluated entries passed;
-    # dedup_minhash/dedup_simhash and the four media_* ops are the
-    # declared rows-only entries).
-    "join_bloom_prefilter", "win_global_rank", "win_rolling_median",
-    "parquet_sink", "jdbc_sink", "xlsx_sink", "orc_sink", "csv_sink",
-    "text_scan", "csv_quoted_scan", "obs_metrics", "parquet_pruned_read",
-    "parquet_schema_merge", "binary_scan", "dedup_exact", "dedup_near",
-    "dedup_cluster", "dedup_minhash", "dedup_simhash", "dedup_embedding",
-    "sim_cosine_topk", "sim_lsh_topk", "sim_ivf_topk", "sim_knn_join",
-    "text_tokenize", "text_tfidf", "text_ngrams", "text_lang_stats",
-    "text_quality", "text_langid", "text_fingerprint", "multimodal_cols",
-    "text_token_count", "sim_centroids", "sim_batch_topk",
-    "media_text_decode", "media_decode", "media_resize",
-    "media_frame_sample", "media_embed", "udf_python", "udf_pandas",
-    "udaf_pandas", "udtf_python", "udf_arrow", "udf_cogrouped",
-    "pivot_wide", "unpivot_long", "subq_exists", "subq_in",
-    # CORRECTNESS_r04.json greens (48 exact-pass + sample_stratified /
-    # stream_sink as the declared rows-only entries; win_ntile,
-    # stat_ks_test and win_global_rank re-attested out of round 4's
-    # _REOPENED set and are already listed above).
-    "subq_scalar", "tpch_q2", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6",
-    "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q10", "tpch_q11", "tpch_q12",
-    "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16", "tpch_q17", "tpch_q18",
-    "tpch_q19", "tpch_q20", "tpch_q21", "tpch_q22", "join_lateral",
-    "recursive_cte", "etl_upsert", "etl_scd2", "etl_snapshot_diff",
-    "etl_incremental_agg", "etl_partition_overwrite", "etl_compact_files",
-    "dq_checks", "parquet_clustered_sink", "sample_stratified",
-    "profile_table", "seq_pack", "corpus_cap_per_source", "stream_tumbling",
-    "stream_sliding", "stream_session", "stream_watermark", "stream_dedup",
-    "stream_dedup_watermark", "stream_stateful", "stream_static_join",
-    "stream_sink", "stream_stream_join", "stream_foreach_batch",
-    # CORRECTNESS_r05.json greens (49 exact-pass + vec_pca_project as the
-    # declared rows-only entry; dedup_near, dedup_cluster and
-    # stream_watermark re-attested out of round 5's _REOPENED set and are
-    # already listed above).
-    "corpus_quality_gate", "pii_redact", "vec_quantize_int8",
-    "dedup_incremental", "text_decontaminate", "text_vocab_encode",
-    "url_parse", "text_df_prune", "vec_normalize", "corpus_mix_schedule",
-    "text_normalize", "text_repetition", "corpus_gopher_rules",
-    "text_line_dedup", "vec_pca_project", "funnel_steps",
+    "set_intersect", "set_except", "sample_hash", "str_funcs",
+    "str_regexp", "str_levenshtein", "date_funcs", "math_funcs",
+    "arr_funcs", "arr_explode", "arr_higher_order", "map_funcs",
+    "json_extract", "variant_json", "xml_parse", "str_extract_all",
+    "xlsx_scan", "xlsx_infer", "xlsx_multisheet", "ident_sanitize",
+    "parquet_scan", "csv_scan", "json_scan", "parquet_sink", "jdbc_sink",
+    "xlsx_sink", "orc_sink", "csv_sink", "text_scan", "csv_quoted_scan",
+    "obs_metrics", "parquet_pruned_read", "parquet_schema_merge",
+    "binary_scan", "stream_tumbling", "stream_sliding", "stream_session",
+    "stream_watermark", "stream_dedup", "stream_dedup_watermark",
+    "stream_stateful", "stream_static_join", "stream_sink",
+    "stream_stream_join", "stream_foreach_batch", "stream_txn_sink",
+    "dedup_exact", "dedup_near", "dedup_minhash", "dedup_simhash",
+    "dedup_embedding", "sim_cosine_topk", "sim_lsh_topk", "sim_ivf_topk",
+    "sim_ivf_matrix_topk", "vec_pq_encode", "sim_pq_adc_topk",
+    "sim_ivfpq_topk", "vec_index_build", "sim_index_serve_topk",
+    "sim_ivfpq_residual_topk", "vec_residual_index_build",
+    "sim_residual_serve_topk", "vec_sq_encode", "sim_sq_topk",
+    "sim_ivfsq_topk", "vec_ivf_train_centroids", "sim_ivf_trained_topk",
+    "sim_ivfflat_serve_topk", "vec_sq_index_build", "sim_sq_serve_topk",
+    "vec_binary_encode", "sim_hamming_topk", "sim_binary_rerank_topk",
+    "sim_pq_refine_topk", "sim_knn_join", "text_tokenize", "text_tfidf",
+    "text_ngrams", "text_lang_stats", "text_quality", "text_langid",
+    "text_fingerprint", "multimodal_cols", "text_token_count",
+    "sim_centroids", "sim_batch_topk", "media_text_decode", "media_decode",
+    "media_resize", "media_frame_sample", "media_embed", "udf_python",
+    "udf_pandas", "udaf_pandas", "udtf_python", "udf_arrow",
+    "udf_cogrouped", "pivot_wide", "unpivot_long", "subq_exists",
+    "subq_in", "subq_scalar", "tpch_q3", "tpch_q5", "join_lateral",
+    "recursive_cte", "tpch_q7", "tpch_q17", "tpch_q18", "tpch_q21",
+    "tpch_q6", "tpch_q4", "tpch_q8", "tpch_q10", "tpch_q13", "tpch_q14",
+    "tpch_q19", "tpch_q22", "tpch_q2", "tpch_q9", "tpch_q11", "tpch_q12",
+    "tpch_q15", "tpch_q16", "tpch_q20", "etl_upsert", "dq_checks",
+    "parquet_clustered_sink", "sample_stratified", "etl_scd2",
+    "profile_table", "etl_snapshot_diff", "etl_incremental_agg",
+    "etl_partition_overwrite", "etl_compact_files", "seq_pack",
+    "corpus_cap_per_source", "corpus_quality_gate", "pii_redact",
+    "vec_quantize_int8", "dedup_incremental", "text_decontaminate",
+    "text_vocab_encode", "url_parse", "text_df_prune", "vec_normalize",
+    "corpus_mix_schedule", "text_normalize", "text_repetition",
+    "corpus_gopher_rules", "text_line_dedup", "vec_pca_project",
     "retention_cohorts", "path_trigrams", "agg_mode", "text_topk_terms",
-    "win_pct_change", "join_range_bucketed", "dedup_keep_best",
-    "agg_time_bucket", "graph_pagerank", "etl_cdc_apply", "dq_outlier",
-    "stat_linreg", "win_interpolate", "win_ewma", "interval_concurrency",
-    "stat_chi2", "stat_winsorize", "stat_ttest", "stat_equidepth_hist",
-    "dq_anomaly_mad", "stat_autocorr", "stat_cov_matrix", "ml_kmeans",
-    "text_perplexity", "dedup_cross_corpus", "parquet_zorder_sink",
-    "stat_psi_drift", "sim_range_search", "text_chunk_split",
-    "text_containment", "stream_txn_sink",
-    # CORRECTNESS_r06.json greens: 35 fresh exact-pass entries (the other
-    # 15 evaluated slots were the round-6 _REOPENED set — the rewritten
-    # streaming family + tpch_q18 + tpch_q2 + obs_metrics — all re-attested
-    # green and folded back by resetting _REOPENED below).
+    "win_pct_change", "agg_time_bucket", "graph_pagerank", "etl_cdc_apply",
+    "dq_outlier", "stat_linreg", "win_interpolate", "win_ewma",
+    "interval_concurrency", "stat_chi2", "stat_winsorize", "stat_ttest",
+    "stat_equidepth_hist", "dq_anomaly_mad", "stat_autocorr",
+    "stat_cov_matrix", "ml_kmeans", "text_perplexity",
+    "dedup_cross_corpus", "parquet_zorder_sink", "stat_psi_drift",
+    "sim_range_search", "text_chunk_split", "text_containment",
     "join_grid_radius", "stat_mann_whitney", "stat_rolling_corr",
     "csv_malformed_scan", "etl_surrogate_keys", "xlsx_schema_map",
     "stat_benford", "graph_triangles", "xlsx_merged_scan",
@@ -156,13 +149,7 @@ _ATTESTED: tuple[str, ...] = (
     "stat_bootstrap_ci", "text_bpe_pairs", "stat_seasonal_decompose",
     "table_merge_upsert", "table_time_travel", "table_incremental_read",
     "table_schema_evolution", "stat_qq", "stat_pareto", "text_stem",
-    "graph_connected_components", "event_attribution",
-    "etl_calendar_scaffold", "win_drawdown",
-    # CORRECTNESS_r07.json greens: 45 fresh entries (44 exact-pass +
-    # text_compression_ratio as the declared rows-only mapInPandas op);
-    # the other 5 evaluated slots were the round-7 _REOPENED txn-table
-    # riders — all re-attested green and folded back by resetting
-    # _REOPENED below.
+    "event_attribution", "etl_calendar_scaffold", "win_drawdown",
     "text_markov_bigrams", "etl_scd2_lookup", "stat_anova",
     "funnel_time_window", "etl_train_test_split", "vec_truncate_renorm",
     "stat_powerlaw", "etl_dead_letter", "stat_control_chart",
@@ -178,264 +165,79 @@ _ATTESTED: tuple[str, ...] = (
     "graph_assortativity", "stat_equivalence_tost", "csv_preamble_scan",
     "url_canonicalize", "ml_decision_stump", "stat_runs_test",
     "stat_jackknife_ratio_se", "text_compression_ratio",
-    "stream_restart_resume",
-    # CORRECTNESS_r08.json greens: 47 fresh entries (46 exact-pass +
-    # graph_kcore as the declared rows-only iterative-peeling op); the
-    # other 3 evaluated slots were the 2 round-8 _REOPENED merge-path
-    # riders (table_merge_upsert, stream_txn_sink — both re-attested
-    # green and folded back by resetting _REOPENED below) and
-    # dq_table_checksum, the round's one RED row (driver-protocol
-    # float-unsafe >2^53 DECIMAL output; NOT folded — rewritten in
-    # round 9 to a hi/lo sub-2^53 split and left fresh so the driver
-    # re-checks the new form).
     "win_rolling_vwap", "stat_capture_recapture", "agg_weighted_median",
     "win_peaks", "stat_theil_sen", "graph_katz_bounded", "sim_maxsim",
-    "csv_latin1_scan", "dedup_winnowing", "stat_sprt", "ml_knn_classify",
-    "stat_odds_ratio", "text_rake_keyphrases", "csv_evolving_union",
-    "win_reset_running_sum", "tpch_refresh", "ml_roc_auc",
-    "etl_pseudonymize_keys", "win_time_since_last_error",
+    "csv_latin1_scan", "dq_table_checksum", "dedup_winnowing", "stat_sprt",
+    "ml_knn_classify", "stat_odds_ratio", "text_rake_keyphrases",
+    "csv_evolving_union", "win_reset_running_sum", "tpch_refresh",
+    "ml_roc_auc", "etl_pseudonymize_keys", "win_time_since_last_error",
     "dedup_threshold_sweep", "stat_extreme_value", "stat_ht_estimate",
-    "text_homoglyph_normalize", "agg_time_decay", "dq_temporal_consistency",
-    "dq_penny_reconcile", "agg_skyline_2d", "etl_feature_standardize",
-    "stat_backtest_snaive", "interval_allen_relations", "table_restore",
-    "table_vacuum", "win_rsi", "sample_reservoir", "etl_bitemporal",
-    "dq_freshness", "ml_pr_curve", "win_bollinger",
-    "event_transition_matrix", "etl_late_arriving_dim", "xlsx_formula_scan",
-    "stat_lorenz_curve", "ml_kfold_cv", "parquet_stats_scan",
-    "interval_point_stab", "etl_scd3", "graph_kcore",
-    # CORRECTNESS_r09.json greens: 47 fresh entries (45 exact-pass +
-    # sim_diversity_mmr / event_alert_throttle as the declared rows-only
-    # bounded-walk ops; dq_table_checksum — r08's RED row, rewritten to
-    # 16-bit limb sums — re-attested green). The 3 RED rows (udf_sql,
-    # dq_double_charge, udf_pandas_iter) are NOT folded: rows/schema
-    # matched and the r9 judge proved the values cell-identical across
-    # engines, but their DECIMAL-typed output columns fall outside the
-    # driver comparator's canonical domain ('X.90' as Decimal vs 'X.9'
-    # as float). They stay fresh so the driver re-checks the round-10
-    # DOUBLE-output rewrite.
-    "dq_table_checksum", "sample_balanced_classes", "stat_hurst",
-    "text_kwic", "dq_tukey_outliers", "win_donchian", "table_clone",
+    "text_homoglyph_normalize", "agg_time_decay",
+    "dq_temporal_consistency", "dq_penny_reconcile", "agg_skyline_2d",
+    "etl_feature_standardize", "stat_backtest_snaive",
+    "interval_allen_relations", "table_restore", "table_vacuum", "win_rsi",
+    "sample_reservoir", "etl_bitemporal", "dq_freshness", "ml_pr_curve",
+    "win_bollinger", "event_transition_matrix", "etl_late_arriving_dim",
+    "xlsx_formula_scan", "stat_lorenz_curve", "ml_kfold_cv",
+    "parquet_stats_scan", "interval_point_stab", "etl_scd3",
+    "sample_balanced_classes", "stat_hurst", "text_kwic",
+    "dq_tukey_outliers", "win_donchian", "table_clone",
     "text_chat_template", "corpus_shard_shuffle", "text_fim_split",
-    "agg_geometric_mean", "stat_wilcoxon_signed", "udtf_sql",
+    "udf_sql", "agg_geometric_mean", "stat_wilcoxon_signed", "udtf_sql",
     "stat_beta_binomial_eb", "ml_isotonic_calibration", "csv_bom_scan",
     "win_ulcer_index", "sim_mips_transform", "win_twap",
     "etl_scd2_snapshot", "table_check_constraint", "text_freq_spectrum",
-    "stat_histogram2d", "graph_modularity", "pipeline_pretrain_corpus",
-    "event_time_heatmap", "stat_cohens_d", "ml_cluster_purity",
-    "agg_revenue_concentration", "text_js_divergence",
-    "csv_fixed_width_scan", "stat_fdr_bh", "ml_learning_curve",
-    "etl_currency_normalize", "text_burstiness", "event_burstiness",
-    "win_parkinson_vol", "csv_multichar_delim_scan", "etl_gdpr_erasure",
-    "sim_recall_report", "ml_threshold_cost_opt", "event_alert_throttle",
-    "event_dau_mau", "stat_weibull_fit", "agg_percent_of_parent",
-    "sim_diversity_mmr", "stat_ljung_box",
-    # CORRECTNESS_r10.json greens: 37 fresh entries (35 exact-pass +
-    # graph_lpa_communities / win_holt_linear as the declared rows-only
-    # iterative ops), plus the 3 round-10 _REOPENED DECIMAL→DOUBLE
-    # rewrites (obs_metrics, corpus_mix_schedule, dedup_threshold_sweep —
-    # re-attested green on the new DOUBLE output schema and folded back
-    # by resetting _REOPENED below) and 10 re-confirmed core attestations.
-    # With this fold every registered op is driver-attested: 454/454.
-    "udf_sql", "dq_double_charge", "udf_pandas_iter", "agg_yoy_growth",
+    "stat_histogram2d", "pipeline_pretrain_corpus", "event_time_heatmap",
+    "stat_cohens_d", "ml_cluster_purity", "agg_revenue_concentration",
+    "text_js_divergence", "csv_fixed_width_scan", "stat_fdr_bh",
+    "ml_learning_curve", "etl_currency_normalize", "text_burstiness",
+    "event_burstiness", "win_parkinson_vol", "csv_multichar_delim_scan",
+    "etl_gdpr_erasure", "sim_recall_report", "ml_threshold_cost_opt",
+    "dq_double_charge", "event_alert_throttle", "event_dau_mau",
+    "udf_pandas_iter", "stat_weibull_fit", "agg_percent_of_parent",
+    "sim_diversity_mmr", "stat_ljung_box", "agg_yoy_growth",
     "str_format_funcs", "text_tokenizer_fertility", "stat_power_analysis",
     "ml_reg_metrics", "stat_histogram_log", "table_history",
     "graph_lpa_communities", "stat_entropy_rate", "agg_waterfall_decomp",
-    "win_underwater_duration", "table_optimistic_retry", "text_code_detect",
-    "stat_mcnemar", "stat_bayes_prob", "event_path_sankey",
-    "graph_walk_sample", "win_holt_linear", "agg_basket_profile",
-    "text_autocomplete_index", "event_new_vs_returning",
-    "dedup_cluster_profile", "geo_geohash", "geo_haversine_nearest",
+    "win_underwater_duration", "table_optimistic_retry",
+    "text_code_detect", "stat_mcnemar", "stat_bayes_prob",
+    "event_path_sankey", "graph_walk_sample", "win_holt_linear",
+    "agg_basket_profile", "text_autocomplete_index",
+    "event_new_vs_returning", "geo_geohash", "geo_haversine_nearest",
     "geo_bbox_agg", "geo_point_in_polygon", "geo_grid_density",
     "table_txn_checkpoint", "table_delete_vectors", "table_update_vectors",
     "table_rename_column", "table_reorg_purge", "table_cdc_rows",
-    "table_auto_optimize",
-    # CORRECTNESS_r11.json greens: 50 evaluated entries, 50 exact-pass,
-    # ZERO reds — the 3 new round-11 ops below, the full 23-op reopened
-    # txn-family set (re-attested on the manifest-pinned read-schema
-    # planner and folded back by resetting _REOPENED below), and 24
-    # re-confirmed core attestations already listed above.
-    "sim_ivf_matrix_topk", "vec_pq_encode", "sim_pq_adc_topk",
-    # CORRECTNESS_r12.json greens: 50 evaluated entries, 47 exact +
-    # 3 declared rows-only, ZERO reds — the 4 new round-12 ops below
-    # (composed IVFPQ in both FAISS modes + the persisted index pair),
-    # the round-12 _REOPENED set (trained-codebook vec_pq_encode /
-    # sim_pq_adc_topk / sim_recall_report and the k=2 graph_kcore,
-    # re-attested and folded back by resetting _REOPENED below), and
-    # re-confirmed core attestations already listed above.
-    "sim_ivfpq_topk", "sim_ivfpq_residual_topk", "vec_index_build",
-    "sim_index_serve_topk",
-    # CORRECTNESS_r13.json greens: the 10 newly sampled ANN ops from
-    # the round-13 build segment (all running through the parsed-SQL
-    # similarity rewrite, which the driver thereby independently
-    # confirmed), plus graph_kcore / sim_recall_report re-attested out
-    # of the round-13 _REOPENED set and folded back by resetting
-    # _REOPENED below. (This fold was FORGOTTEN at the r13 close —
-    # CORRECTNESS_r13.json landed after the last code commit — which
-    # is exactly the failure test_attested_fold_complete exists to
-    # catch; fixed at the r14 round start. graph_kcore re-reopens
-    # below for the r14 loop restructure.)
-    "sim_sq_topk", "sim_ivfsq_topk", "sim_ivf_trained_topk",
-    "sim_ivfflat_serve_topk", "sim_sq_serve_topk",
-    "sim_residual_serve_topk", "sim_pq_refine_topk", "sim_hamming_topk",
-    "sim_binary_rerank_topk", "vec_residual_index_build",
-    # CORRECTNESS_r14.json greens: the four ANN builders the round-14
-    # correctness repairs turned driver-green (the HUGEINT->BIGINT cast
-    # in vec_binary_encode's oracle, exploded (id, dim, value) outputs
-    # for the array-returning builders). This moves them to the
-    # attested tail of all_queries().
-    "vec_binary_encode", "vec_ivf_train_centroids", "vec_sq_encode",
-    "vec_sq_index_build",
+    "stream_restart_resume", "table_auto_optimize",
 )
 
-# Attested ops whose IMPLEMENTATION changed after their attestation round:
-# the prior green row attests the OLD code, so these are treated as
-# unattested until the driver re-verifies them. Lifecycle: once
-# CORRECTNESS_r{N} shows these green again, fold them back into _ATTESTED
-# and reset this set to the ops (if any) rewritten in round N+1. Round-6
-# set (the 12-op streaming family after the state-sized-shuffle engine
-# change, tpch_q18's zero-fact-shuffle rewrite, and the tpch_q2 /
-# obs_metrics precision fixes) re-attested green in CORRECTNESS_r06.json
-# — all 15 rows exact (stream_sink rows-only as declared) — and is folded
-# back. Round-7's reopened txn-table family (merge/time-travel/
-# incremental-read/schema-evolution/txn-sink, reopened for the
-# footer-stats + checkpoint + deletion-vector read-path rewrite)
-# re-attested green in CORRECTNESS_r07.json and is folded back.
-# Round-8 rewrites: the two attested merge-path riders re-open because
-# round 8 edits TxnTable.merge's commit on EVERY call — threading
-# source-only new columns into the logical column map, carrying
-# unmentioned target columns through the rewrite, and passing
-# retired_columns/columns explicitly (operators/txn_table.py, round-7
-# ADVICE items 1–2 + the narrow-source fix). Observable behavior is
-# unchanged on these riders' configurations (no column map, no retired
-# columns, full-schema sources), but the executed commit path changed,
-# so the prior green attests old code.
-#
-# Round-8's two merge-path riders (table_merge_upsert, stream_txn_sink)
-# re-attested green in CORRECTNESS_r08.json and are folded back.
-#
-# Round-9 rewrites: none of the ATTESTED ops changed implementation
-# that round. dq_table_checksum (the r08 RED row, rewritten to a hi/lo
-# sub-2^53 digest split) was never attested, so it was already fresh
-# and sat in the driver window without needing a reopen slot. Round 9
-# touched FIVE txn-table commit legs (operators/txn_table.py) —
-# append / merge / append_once gained `_rebased_map_extension`
-# (re-validate staged new-column extensions against the LIVE map +
-# retired set at commit time), restore gained the rollback
-# collision policy (rename-wins / identical-adopt / refuse on the
-# merge leg), and `_commit` gained the duplicate-physical publish
-# refusal — but every one of those changes is reachable ONLY under a
-# concurrent-writer interleaving (a racer committing between this
-# writer's snapshot and its publish): in the single-writer executions
-# the driver and riders exercise, the rebase sees an unchanged map and
-# adopts the staged extension verbatim, the restore sees no collision,
-# and the publish guard sees no duplicate physical — plans and commit
-# arithmetic are byte-identical, so the txn riders' attestations
-# remained valid (r10 audit note per round-9 ADVICE).
-#
-# Round-10 rewrites: the three _ATTESTED ops below change their OUTPUT
-# SCHEMA this round — their final result columns are cast from DECIMAL
-# to DOUBLE on both engines (round-9 verdict #2: DECIMAL result
-# columns sit outside the driver comparator's canonical domain; these
-# three were green only because their current values carry no
-# trailing-zero fractional cell). The prior green rows attest the old
-# DECIMAL-typed schema, so the driver must re-verify the new one.
-#
-# Round 10 also changes TxnTable.vacuum (a retained restore(...)
-# manifest now pins its rollback target's files — the rollback-window
-# race found by this round's directed test). table_vacuum's attestation
-# remains valid: its scenario (create → merge → vacuum) retains no
-# restore manifest, so the new pin is unreachable and the executed
-# liveness set is byte-identical (_pinned == _live for every
-# non-restore manifest). table_restore never vacuums; unaffected.
-#
-# Round 10 additionally adds column-TYPE schema enforcement to
-# TxnTable (found by the new model-lifecycle test: an UPDATE whose
-# SET literal was INT against a BIGINT column staged an INT file and
-# broke every later mergeSchema read). Surface touched on every
-# commit: _stage_files attaches staged column types to entries;
-# _commit folds them into a manifest-level "schema" registry and
-# refuses contradictions; append/append_once pre-refuse type drift;
-# merge casts map-resident source columns to registered types;
-# update_where_dv casts SET expressions to the column's type. No
-# attested rider reopens because every rider's observable output is
-# byte-identical: (a) the new manifest key and per-entry fold are
-# metadata no oracled result surfaces (ops read only op/files[].path
-# counts); (b) the append/commit refusals are pure guards that cannot
-# fire on type-consistent writes, which every rider's are (all frames
-# derive from the same parquet tables); (c) the merge/update casts
-# are added ONLY when the resolved type differs (checked pre-plan),
-# so a type-exact rider's Spark plan is the identical object graph —
-# not merely an optimized-away cast. Verified on the final tree: the
-# full 22-op txn-family mirror is 22/0 at sf0.01 post-change.
-# Round-11 rewrites (the 23-op txn-family reopen for the manifest-pinned
-# read-schema planner + sim_recall_report's 3-row extension) ALL
-# re-attested green in CORRECTNESS_r11.json — 50/50 exact, zero reds —
-# and are folded back.
-#
-# Round-12 rewrites: the PQ codebook is TRAINED this round (deterministic
-# fixed-iteration per-subspace Lloyd's replacing the positional
-# "vectors 1..n_codes" stand-in — round-11 verdict #3b), which changes
-# the codes vec_pq_encode emits and the ADC ranking sim_pq_adc_topk
-# serves; sim_recall_report grows an ivfpq row (the new composed
-# sim_ivfpq_topk path measured through the same report). Their r11
-# greens attest the stand-in codebook, so all three reopen. The
-# round-12 ADVICE fixes (manifest() entry aliasing hardening, backfill
-# registry cross-check + failure memo, ivf_assign_matrix centroid-norm
-# clamp) do NOT reopen their riders: each is a pure guard or an
-# identical-value defensive copy whose observable output is
-# byte-identical on every rider configuration (copies of equal dicts;
-# clamp is the identity for every non-zero-norm centroid, and no
-# registered-config centroid has zero norm — asserted in
-# tests/test_operators.py::test_ivf_matrix_zero_norm_centroid_is_inert).
-# Round-12's reopened set (vec_pq_encode / sim_pq_adc_topk /
-# sim_recall_report on the trained codebook, graph_kcore at k=2) ALL
-# re-attested green in CORRECTNESS_r12.json — 50/50, zero reds — and is
-# folded back.
-#
-# Round-13 rewrites: NONE reopen. The round-12 ADVICE fixes refactor
-# the ADC serving ops (sim_pq_adc_topk / sim_ivfpq_topk /
-# sim_index_serve_topk / sim_ivfpq_residual_topk) onto the centralized
-# _adc_table/_adc_expr/_percell_adc_topk/_residual_encode helpers —
-# the SAME arithmetic in the same order, verified output-identical on
-# the final code by a fresh oracle run (6 checked / 0 failed at
-# sf0.01, value-hash exact) — and add pure guards (the index-serve
-# n_subspaces cross-check, the residual init-range validation, the
-# path-scoped untyped-fresh tombstone) that are unreachable on every
-# registered configuration (each pinned by a directed unit test).
+# Attested ops whose Spark job sequence changed after attestation (same
+# output), so the driver should verify them again.
 _REOPENED: frozenset[str] = frozenset({
-    # Round-14 loop restructures (job-count reduction, VERDICT r13
-    # item 6): graph_kcore detects convergence from the checkpointed
-    # edge count instead of a per-round keep.count(), and the
-    # connected_components core under the dedup_cluster family runs
-    # two label-propagation rounds per materialization. Outputs are
-    # verified identical (one-session A/B equality + oracle greens at
-    # sf0.01), but the executed job sequence genuinely differs — the
-    # prior greens attest the old loop shape, so the driver should
-    # re-verify. (The round-14 parsed-SQL rewrites — sim_maxsim,
-    # sim_two_tier, ml_kmeans, dedup_winnowing, the z-order pair — do
-    # NOT reopen, per the round-13 precedent: each resolves to the
-    # identical expression tree and was re-verified value-hash-exact
-    # against its oracle on the final code.)
+    # convergence read from the checkpointed edge count, not a keep.count()
     "graph_kcore",
+    # connected_components runs two label-propagation rounds per checkpoint
     "dedup_cluster",
     "dedup_keep_best",
     "dedup_cluster_profile",
-    # ... and the other two connected_components callers (every op
-    # executing the restructured loop reopens, not just the dedup
-    # family).
     "graph_connected_components",
     "graph_modularity",
-    # Single-pass rewrites (same output, different job sequence, per the
-    # round-14 precedent above): funnel_steps is one user_id window pass
-    # instead of three staged joins; join_range_bucketed left-joins the
-    # exploded buckets instead of re-joining a third events scan.
+    # one user_id window pass instead of three staged joins
     "funnel_steps",
+    # left-joins the exploded buckets instead of re-scanning events
     "join_range_bucketed",
 })
 
 #: The driver evaluates this many registry-order entries per round
 #: (empirically: r01 covered exactly the first 50).
 _DRIVER_WINDOW = 50
+
+
+def _registry_order() -> list[str]:
+    """Never-attested ops sorted by id, then the attested ones in
+    ``_ATTESTED`` order. The order is data: it does not depend on which
+    query module a process imported first."""
+    rank = {n: i for i, n in enumerate(_ATTESTED)}
+    return sorted(_QUERIES, key=lambda n: (n in rank, rank.get(n, 0), n))
 
 
 def _prioritized(names: list[str]) -> list[str]:
@@ -461,12 +263,12 @@ def _prioritized(names: list[str]) -> list[str]:
 
 def all_queries() -> dict[str, QueryFn]:
     _load_all()
-    return {n: _QUERIES[n] for n in _prioritized(list(_QUERIES))}
+    return {n: _QUERIES[n] for n in _prioritized(_registry_order())}
 
 
 def all_oracles() -> dict[str, str]:
     _load_all()
-    order = _prioritized(list(_QUERIES))
+    order = _prioritized(_registry_order())
     return {n: _ORACLES[n] for n in order if n in _ORACLES}
 
 
@@ -474,41 +276,16 @@ _LOADED = False
 
 
 def _load_all() -> None:
-    """Import every query module exactly once (imports populate the dicts)."""
+    """Import every module under ``queries/`` once (imports populate the
+    dicts); a module that fails to import fails the caller."""
     global _LOADED
     if _LOADED:
         return
-    # Import order mirrors SURVEY.md §7 build order and decides the
-    # registry order; a module that fails to import fails the caller.
     import importlib
+    import pkgutil
 
-    for mod in (
-        "xlsx_to_database_spark.queries.core",
-        "xlsx_to_database_spark.queries.joins",
-        "xlsx_to_database_spark.queries.aggregates",
-        "xlsx_to_database_spark.queries.windows",
-        "xlsx_to_database_spark.queries.sort_set",
-        "xlsx_to_database_spark.queries.scalar_functions",
-        "xlsx_to_database_spark.queries.sources_sinks",
-        "xlsx_to_database_spark.queries.streaming",
-        "xlsx_to_database_spark.queries.llm_ops",
-        "xlsx_to_database_spark.queries.multimodal",
-        "xlsx_to_database_spark.queries.udf_surface",
-        "xlsx_to_database_spark.queries.relational_extras",
-        "xlsx_to_database_spark.queries.tpch_extra",
-        "xlsx_to_database_spark.queries.etl",
-        "xlsx_to_database_spark.queries.corpus_ops",
-        "xlsx_to_database_spark.queries.analytics_ops",
-        "xlsx_to_database_spark.queries.advanced_ops",
-        # Imported last ON PURPOSE: new ops queue behind the curated
-        # round-4 driver window instead of displacing it (see
-        # queries/round4_ops.py docstring).
-        "xlsx_to_database_spark.queries.round4_ops",
-        "xlsx_to_database_spark.queries.round5_ops",
-        "xlsx_to_database_spark.queries.round5b_ops",
-        "xlsx_to_database_spark.queries.round5c_ops",
-        "xlsx_to_database_spark.queries.geo_ops",
-        "xlsx_to_database_spark.queries.round7_ops",
-    ):
-        importlib.import_module(mod)
+    from xlsx_to_database_spark import queries
+
+    for mod in pkgutil.iter_modules(queries.__path__, queries.__name__ + "."):
+        importlib.import_module(mod.name)
     _LOADED = True
