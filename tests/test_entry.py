@@ -80,6 +80,7 @@ def test_registry_order_ignores_import_order(monkeypatch):
     from xlsx_to_database_spark import queries
     from xlsx_to_database_spark import registry as r
 
+    r.all_queries()  # every query module loaded, so teardown restores each
     monkeypatch.setattr(r, "_QUERIES", {})
     monkeypatch.setattr(r, "_ORACLES", {})
     monkeypatch.setattr(r, "_LOADED", False)
