@@ -583,10 +583,11 @@ def test_bpe_token_count_matches_python_regex(spark):
 def test_clustered_sink_files_have_disjoint_key_ranges(spark):
     import glob
     import pyarrow.parquet as pq
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.registry import all_queries
 
     all_queries()["parquet_clustered_sink"](spark, "/root/testdata/sf0.01").count()
-    files = sorted(glob.glob("/tmp/spark_stage/sf0.01_orders_clustered/part-*.parquet"))
+    files = sorted(glob.glob(f"{stage.ROOT}/sf0.01_orders_clustered/part-*.parquet"))
     assert len(files) >= 2, files
     ranges = []
     for f in files:
@@ -703,11 +704,12 @@ def test_pca_projection_invariants(spark):
 
 def test_compact_files_counts(spark):
     import glob
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.registry import all_queries
 
     all_queries()["etl_compact_files"](spark, "/root/testdata/sf0.01").count()
-    assert len(glob.glob("/tmp/spark_stage/sf0.01_events_fragmented/part-*.parquet")) == 64
-    assert len(glob.glob("/tmp/spark_stage/sf0.01_events_compacted/part-*.parquet")) == 4
+    assert len(glob.glob(f"{stage.ROOT}/sf0.01_events_fragmented/part-*.parquet")) == 64
+    assert len(glob.glob(f"{stage.ROOT}/sf0.01_events_compacted/part-*.parquet")) == 4
 
 
 def test_minhash_recall_vs_exact_shingle_jaccard(spark, sf_dir):
@@ -816,10 +818,11 @@ def test_zorder_sink_two_dimensional_locality(spark):
 
     import pyarrow.parquet as pq
 
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.registry import all_queries
 
     all_queries()["parquet_zorder_sink"](spark, "/root/testdata/sf0.01").count()
-    files = sorted(glob.glob("/tmp/spark_stage/sf0.01_orders_zorder/part-*.parquet"))
+    files = sorted(glob.glob(f"{stage.ROOT}/sf0.01_orders_zorder/part-*.parquet"))
     assert len(files) >= 8, files
     for col in ("o_custkey", "o_orderdate"):
         ranges = []
@@ -1028,11 +1031,11 @@ def test_bloom_sink_writes_bloom_filters(spark, sf_dir, tmp_path):
     import os
 
     from xlsx_to_database_spark.catalog import table as _table
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.queries.sources_sinks import parquet_bloom_sink
 
     parquet_bloom_sink(spark, sf_dir).collect()
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = f"/tmp/spark_stage/{tag}_lineitem_bloom"
+    dst = stage.path(sf_dir, "lineitem_bloom")
 
     li = _table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
@@ -1466,12 +1469,12 @@ def test_gzip_csv_stage_is_multi_file(spark, sf_dir):
     import glob
     import os
 
-    from xlsx_to_database_spark.queries.sources_sinks import _STAGE_ROOT, _tag
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.registry import all_queries
 
     df = all_queries()["csv_gzip_scan"](spark, sf_dir)
     assert df.count() > 0
-    root = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_part_gzip_csv")
+    root = stage.path(sf_dir, "part_gzip_csv")
     gz = glob.glob(os.path.join(root, "*.csv.gz"))
     # gzip is unsplittable: parallel grain = file count, so the stage
     # must write several compressed files, each a valid gzip member
@@ -1840,14 +1843,12 @@ def test_maxsim_self_match_is_top_with_score_4(spark, sf_dir):
 
 
 def test_latin1_bytes_are_not_valid_utf8(spark, sf_dir):
-    import os
-
-    from xlsx_to_database_spark.queries.sources_sinks import _STAGE_ROOT, _tag
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.registry import all_queries
 
     out = all_queries()["csv_latin1_scan"](spark, sf_dir)
     assert out.count() == 25
-    path = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_nation_cp1252.csv")
+    path = stage.path(sf_dir, "nation_cp1252.csv")
     raw = open(path, "rb").read()
     assert b"\xe9" in raw  # é as a single Latin-1 byte
     try:
@@ -2045,7 +2046,7 @@ def test_reset_running_sum_restarts_at_signup(spark, sf_dir):
 def test_tpch_refresh_preserves_prerefresh_snapshot(spark, sf_dir):
     from xlsx_to_database_spark.catalog import table
     from xlsx_to_database_spark.operators.txn_table import TxnTable
-    from xlsx_to_database_spark.queries.sources_sinks import _tag
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.registry import all_queries
 
     row = all_queries()["tpch_refresh"](spark, sf_dir).collect()[0]
@@ -2060,7 +2061,7 @@ def test_tpch_refresh_preserves_prerefresh_snapshot(spark, sf_dir):
     assert row.max_key == max(after)
     # time travel: version 0 (pre-refresh) still reads the original set
     tt = TxnTable(
-        spark, f"/tmp/spark_stage/{_tag(sf_dir)}_tpch_refresh", "o_orderkey"
+        spark, stage.path(sf_dir, "tpch_refresh"), "o_orderkey"
     )
     assert tt.read(0).count() == n_orig
 
@@ -2411,7 +2412,7 @@ def test_table_vacuum_breaks_only_collected_history(spark, sf_dir):
 
     from xlsx_to_database_spark.catalog import table
     from xlsx_to_database_spark.operators.txn_table import TxnTable
-    from xlsx_to_database_spark.queries.sources_sinks import _tag
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.registry import all_queries
 
     got = {
@@ -2439,7 +2440,7 @@ def test_table_vacuum_breaks_only_collected_history(spark, sf_dir):
     }
     assert got == want
     tt = TxnTable(
-        spark, f"/tmp/spark_stage/{_tag(sf_dir)}_table_vacuum", "o_orderkey"
+        spark, stage.path(sf_dir, "table_vacuum"), "o_orderkey"
     )
     assert tt.read().count() == o.count()  # retained snapshot intact
     with _pytest.raises(AnalysisException):
@@ -3378,14 +3379,12 @@ def test_isotonic_fit_is_monotone_and_matches_pav(spark, sf_dir):
 def test_bom_file_reads_clean(spark, sf_dir):
     """The staged file must physically carry the BOM, and the scan must
     return clean headers and an uncorrupted first row."""
-    import os
-
     from xlsx_to_database_spark.catalog import table
-    from xlsx_to_database_spark.queries.sources_sinks import _STAGE_ROOT, _tag
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.registry import all_queries
 
     df = all_queries()["csv_bom_scan"](spark, sf_dir)
-    path = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_nation_bom.csv")
+    path = stage.path(sf_dir, "nation_bom.csv")
     with open(path, "rb") as fh:
         assert fh.read(3) == b"\xef\xbb\xbf"
     assert df.columns == ["n_nationkey", "n_name", "n_regionkey"]
@@ -3799,10 +3798,8 @@ def test_fixed_width_roundtrip_preserves_values(spark, sf_dir):
     """Every nation row survives the positional pack/carve round trip,
     and the staged file is genuinely fixed-width (uniform line length,
     no delimiter)."""
-    import os
-
     from xlsx_to_database_spark.catalog import table
-    from xlsx_to_database_spark.queries.sources_sinks import _STAGE_ROOT, _tag
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.registry import all_queries
 
     got = sorted(
@@ -3814,7 +3811,7 @@ def test_fixed_width_roundtrip_preserves_values(spark, sf_dir):
             .select("n_nationkey", "n_name", "n_regionkey").collect())
     )
     assert got == want
-    path = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_nation_fixed.txt")
+    path = stage.path(sf_dir, "nation_fixed.txt")
     with open(path) as fh:
         lens = {len(line.rstrip("\n")) for line in fh}
     assert lens == {22}
@@ -4029,11 +4026,11 @@ def test_gdpr_erasure_is_physical_and_versioned(spark, sf_dir):
     from pyspark.errors.exceptions.captured import AnalysisException
 
     from xlsx_to_database_spark.operators.txn_table import TxnTable
-    from xlsx_to_database_spark.queries.sources_sinks import _tag
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.registry import all_queries
 
     all_queries()["etl_gdpr_erasure"](spark, sf_dir).collect()
-    root = f"/tmp/spark_stage/{_tag(sf_dir)}_gdpr"
+    root = stage.path(sf_dir, "gdpr")
     tt = TxnTable(spark, root, "o_orderkey")
     assert tt.read().filter(F.col("o_custkey") % 97 == 0).count() == 0
     with _pytest.raises(AnalysisException):
@@ -4691,12 +4688,12 @@ def test_optimistic_retry_preserves_both_writers(spark, sf_dir):
     """After the staged race: version history is create/append/append,
     both writers' key ranges present, no duplicate keys."""
     from xlsx_to_database_spark.operators.txn_table import TxnTable
-    from xlsx_to_database_spark.queries.sources_sinks import _tag
+    from xlsx_to_database_spark.queries import stage
     from xlsx_to_database_spark.registry import all_queries
 
     all_queries()["table_optimistic_retry"](spark, sf_dir).collect()
     tt = TxnTable(
-        spark, f"/tmp/spark_stage/{_tag(sf_dir)}_table_retry", "o_orderkey"
+        spark, stage.path(sf_dir, "table_retry"), "o_orderkey"
     )
     assert [tt.manifest(v)["op"] for v in tt.versions()] == [
         "create", "append", "append"

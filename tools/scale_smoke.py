@@ -92,7 +92,7 @@ DEFAULT_OPS = [
     # Round-12 verdict #5: the txn-table family — the two slowest
     # headline queries plus CDC — measured under inflation, not just
     # functionally tested. Each stages its own 8x base fixture via
-    # txn_fixtures.staged_copy, so the ratio covers commit + read-back
+    # stage.staged_copy, so the ratio covers commit + read-back
     # on an 8x inventory.
     "table_merge_upsert",
     "table_delete_vectors",

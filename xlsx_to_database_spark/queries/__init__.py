@@ -7,13 +7,15 @@
 - ``stats`` (``stat_*``), ``ml`` (``ml_*``), ``graph`` (``graph_*``),
   ``geo_ops`` (``geo_*``);
 - I/O and tables: ``sources_sinks`` (``xlsx_``/``csv_``/``json_``/
-  ``jdbc_``/``parquet_``), ``txn_ops`` (``table_*``, with the staging
-  helpers in ``txn_fixtures``), ``streaming`` (``stream_*``), ``etl``
-  (``etl_``/``dq_``/``sample_``/``interval_``);
+  ``jdbc_``/``parquet_``), ``txn_ops`` (``table_*``), ``streaming``
+  (``stream_*``), ``etl`` (``etl_``/``dq_``/``sample_``/``interval_``);
 - LLM data: ``llm_ops`` (``sim_``/``vec_``/``dedup_``), ``corpus_ops``
   (``text_``/``corpus_``/``pipeline_``/``url_``), ``multimodal``
   (``media_*``), ``analytics_ops`` (``event_``/``funnel_``/``assoc_``)
   and ``udf_surface`` (``udf_``/``udtf_``).
+
+``stage`` decides where ops stage scratch data and when a staged
+fixture is reused.
 
 Importing a module registers its (op id -> Spark fn, oracle SQL) pairs
 with :mod:`xlsx_to_database_spark.registry`, which imports every module

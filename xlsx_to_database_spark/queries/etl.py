@@ -20,9 +20,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -31,10 +28,9 @@ from xlsx_to_database_spark.operators.global_order import (
     with_global_row_number,
 )
 from xlsx_to_database_spark.operators.txn_table import TxnTable
-from xlsx_to_database_spark.queries.sources_sinks import _tag
+from xlsx_to_database_spark.queries import stage
+from xlsx_to_database_spark.queries.sources_sinks import orders_csv_with_garbage
 from xlsx_to_database_spark.registry import query
-
-_STAGE_ROOT = "/tmp/spark_stage"
 
 
 def _updates_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -196,8 +192,7 @@ def parquet_clustered_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone. This is the write-side half of data skipping; the pyarrow
     footer-stat assertions live in tests/test_operators.py. Read-back
     round trip is byte-exact vs the source table."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(_STAGE_ROOT, f"{tag}_orders_clustered")
+    out = stage.path(sf_dir, "orders_clustered")
     o = table(spark, sf_dir, "orders")
     (
         o.repartitionByRange(4, "o_orderdate")
@@ -524,8 +519,7 @@ def etl_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = f"{_STAGE_ROOT}/{tag}_orders_dynpart"
+    dst = stage.path(sf_dir, "orders_dynpart")
     (
         o.write.mode("overwrite")
         .partitionBy("o_orderpriority")
@@ -596,9 +590,8 @@ def etl_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    frag = f"{_STAGE_ROOT}/{tag}_events_fragmented"
-    compact = f"{_STAGE_ROOT}/{tag}_events_compacted"
+    frag = stage.path(sf_dir, "events_fragmented")
+    compact = stage.path(sf_dir, "events_compacted")
     ev.repartition(64).write.mode("overwrite").parquet(frag)
     small = spark.read.parquet(frag)
     small.repartition(4).write.mode("overwrite").parquet(compact)
@@ -1232,19 +1225,7 @@ def etl_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN once the
     cache is gone (observed: mirror `collect()` passed, entry
     `count()` failed); parquet/text read-backs are pruning-proof."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src_size = os.path.getsize(os.path.join(sf_dir, "orders.parquet"))
-    dst = f"/tmp/spark_stage/{tag}_orders_csv_{src_size}"
-    garbage = os.path.join(dst, "zz_garbage.csv")
-    if not os.path.exists(garbage):
-        (
-            table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
-            .write.mode("overwrite")
-            .csv(dst)
-        )
-        with open(garbage, "w") as fh:
-            fh.write("x,1,1-URGENT,1.5\n2,y,5-LOW,2.5\n3,3,3-MEDIUM,notadouble\n")
+    dst = orders_csv_with_garbage(spark, sf_dir)
     schema = (
         "o_orderkey bigint, o_custkey bigint, o_orderpriority string, "
         "o_totalprice double, _corrupt string"
@@ -2769,8 +2750,7 @@ def etl_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderstatus",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    root = f"/tmp/spark_stage/{_tag(sf_dir)}_gdpr"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "gdpr")
     tt = TxnTable(spark, root, "o_orderkey")
     tt.create(o.repartitionByRange(4, "o_orderkey"))
     v, rewritten, _ = tt.delete_where(F.col("o_custkey") % 97 == 0)

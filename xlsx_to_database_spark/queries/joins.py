@@ -12,14 +12,12 @@ instead of exploding a range cross-product.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xlsx_to_database_spark.catalog import table, tables
 from xlsx_to_database_spark.operators.skew import salted_join
-from xlsx_to_database_spark.queries.sources_sinks import _STAGE_ROOT, _tag
+from xlsx_to_database_spark.queries import stage
 from xlsx_to_database_spark.registry import query
 
 
@@ -385,8 +383,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stage_bucketed(spark: SparkSession, sf_dir: str, src: str, key: str) -> str:
     """Create (once per session+sf) a bucketed, bucket-sorted copy of a
     testdata table in the session warehouse; returns the table name."""
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    tname = f"{src}_bkt_{tag}"
+    tname = f"{src}_bkt_{stage.tag(sf_dir).replace('.', '_')}"
     if not spark.catalog.tableExists(tname):
         (
             table(spark, sf_dir, src)
@@ -394,7 +391,7 @@ def _stage_bucketed(spark: SparkSession, sf_dir: str, src: str, key: str) -> str
             .write.bucketBy(8, key)
             .sortBy(key)
             .mode("overwrite")
-            .option("path", f"/tmp/spark_stage/bucketed/{tname}")
+            .option("path", stage.path(None, f"bucketed/{tname}"))
             .saveAsTable(tname)
         )
     return tname
@@ -920,16 +917,14 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     PartitionFilters (pinned in tests/test_plans.py) — files for the
     five pruned years are never opened. Result hash-matches the
     declarative year-IN reconstruction."""
-    root = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_orders_by_year")
-    if not os.path.exists(os.path.join(root, "_SUCCESS")):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
-        (
-            table(spark, sf_dir, "orders")
-            .withColumn("o_year", F.year("o_orderdate").cast("int"))
-            .write.mode("overwrite")
-            .partitionBy("o_year")
-            .parquet(root)
-        )
+    root = stage.once(
+        sf_dir,
+        "orders_by_year",
+        lambda p: table(spark, sf_dir, "orders")
+        .withColumn("o_year", F.year("o_orderdate").cast("int"))
+        .write.partitionBy("o_year")
+        .parquet(p),
+    )
     fact = spark.read.parquet(root)
     dim = spark.range(1992, 1999).select(
         F.col("id").cast("int").alias("d_year"),

@@ -10,7 +10,6 @@ diverges from Spark's float64 at the 6th decimal).
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +25,7 @@ from xlsx_to_database_spark.operators.similarity import (
     _dot_sql,
     _norm_sql,
 )
-from xlsx_to_database_spark.queries.sources_sinks import _STAGE_ROOT, _tag
+from xlsx_to_database_spark.queries import stage
 from xlsx_to_database_spark.registry import _ORACLES, query
 
 _STOP_SQL = "[" + ", ".join(f"'{s}'" for s in T.STOPWORDS) + "]"
@@ -536,13 +535,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _index_path(sf_dir: str) -> str:
-    # Reuse the shared staging-path convention (one stage root, one
-    # tag scheme) rather than a private copy of it.
-
-    return os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_ivfpq_index")
-
-
 @query(
     "vec_index_build",
     _PQ_CTE
@@ -568,7 +560,7 @@ def vec_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked result, so the round trip through the persisted
     files is what's verified."""
     e = _quantized_embeddings(spark, sf_dir)
-    path = _index_path(sf_dir)
+    path = stage.path(sf_dir, "ivfpq_index")
     S.ivfpq_index_build(e, path)
     back = spark.read.parquet(path)
     return back.select(
@@ -588,14 +580,14 @@ def sim_index_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the claim that persisting the codes loses nothing
     (operators/similarity.py::ivfpq_index_serve)."""
     e = _quantized_embeddings(spark, sf_dir)
-    meta = S.ivfpq_index_build(e, _index_path(sf_dir))
+    meta = S.ivfpq_index_build(e, stage.path(sf_dir, "ivfpq_index"))
     q = [
         float(x)
         for x in e.filter(F.col("vec_id") == 0)
         .select("embedding").collect()[0][0]
     ]
     return S.ivfpq_index_serve(
-        spark, _index_path(sf_dir), meta, q, k=10, nprobe=2
+        spark, stage.path(sf_dir, "ivfpq_index"), meta, q, k=10, nprobe=2
     )
 
 
@@ -734,10 +726,6 @@ def sim_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _residual_index_path(sf_dir: str) -> str:
-    return os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_ivfpq_residx")
-
-
 @query(
     "vec_residual_index_build",
     _RESIDUAL_CTE
@@ -762,7 +750,7 @@ def vec_residual_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back is the oracle-checked result, so the round trip through
     the persisted files is what's verified."""
     e = _quantized_embeddings(spark, sf_dir)
-    path = _residual_index_path(sf_dir)
+    path = stage.path(sf_dir, "ivfpq_residx")
     S.ivfpq_residual_index_build(e, path)
     back = spark.read.parquet(path)
     return back.select(
@@ -784,14 +772,14 @@ def sim_residual_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     claim that persisting the residual codes loses nothing
     (operators/similarity.py::ivfpq_residual_index_serve)."""
     e = _quantized_embeddings(spark, sf_dir)
-    meta = S.ivfpq_residual_index_build(e, _residual_index_path(sf_dir))
+    meta = S.ivfpq_residual_index_build(e, stage.path(sf_dir, "ivfpq_residx"))
     q = [
         float(x)
         for x in e.filter(F.col("vec_id") == 0)
         .select("embedding").collect()[0][0]
     ]
     return S.ivfpq_residual_index_serve(
-        spark, _residual_index_path(sf_dir), meta, q, k=10, nprobe=2
+        spark, stage.path(sf_dir, "ivfpq_residx"), meta, q, k=10, nprobe=2
     )
 
 
@@ -1090,10 +1078,6 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ivf_topk_trained(e, k=10, n_centroids=8, nprobe=2)
 
 
-def _ivfflat_index_path(sf_dir: str) -> str:
-    return os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_ivfflat_idx")
-
-
 @query(
     "vec_ivfflat_index_build",
     _V4_CTE.rstrip()
@@ -1139,7 +1123,7 @@ def vec_ivfflat_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparator's canonical domain (registry.py discipline); the
     persisted index keeps its packed vector layout."""
     e = _quantized_embeddings(spark, sf_dir)
-    path = _ivfflat_index_path(sf_dir)
+    path = stage.path(sf_dir, "ivfflat_idx")
     S.ivfflat_index_build(e, path)
     back = spark.read.parquet(path)
     return back.select(
@@ -1165,19 +1149,15 @@ def sim_ivfflat_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     instance of the persistence-loses-nothing proof
     (operators/similarity.py::ivfflat_index_serve)."""
     e = _quantized_embeddings(spark, sf_dir)
-    meta = S.ivfflat_index_build(e, _ivfflat_index_path(sf_dir))
+    meta = S.ivfflat_index_build(e, stage.path(sf_dir, "ivfflat_idx"))
     q = [
         float(x)
         for x in e.filter(F.col("vec_id") == 0)
         .select("embedding").collect()[0][0]
     ]
     return S.ivfflat_index_serve(
-        spark, _ivfflat_index_path(sf_dir), meta, q, k=10, nprobe=2
+        spark, stage.path(sf_dir, "ivfflat_idx"), meta, q, k=10, nprobe=2
     )
-
-
-def _sq_index_path(sf_dir: str) -> str:
-    return os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_ivfsq_idx")
 
 
 @query(
@@ -1204,7 +1184,7 @@ def vec_sq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparator's canonical domain (registry.py discipline); the
     persisted index keeps its packed codes layout."""
     e = _quantized_embeddings(spark, sf_dir)
-    path = _sq_index_path(sf_dir)
+    path = stage.path(sf_dir, "ivfsq_idx")
     S.sq_index_build(e, path)
     back = spark.read.parquet(path)
     return back.select(
@@ -1231,14 +1211,14 @@ def sim_sq_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     that persisting the SQ codes loses nothing
     (operators/similarity.py::sq_index_serve)."""
     e = _quantized_embeddings(spark, sf_dir)
-    meta = S.sq_index_build(e, _sq_index_path(sf_dir))
+    meta = S.sq_index_build(e, stage.path(sf_dir, "ivfsq_idx"))
     q = [
         float(x)
         for x in e.filter(F.col("vec_id") == 0)
         .select("embedding").collect()[0][0]
     ]
     return S.sq_index_serve(
-        spark, _sq_index_path(sf_dir), meta, q, k=10, nprobe=2
+        spark, stage.path(sf_dir, "ivfsq_idx"), meta, q, k=10, nprobe=2
     )
 
 

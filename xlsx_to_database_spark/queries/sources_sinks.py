@@ -24,6 +24,7 @@ from pyspark.sql.types import StructType
 
 from xlsx_to_database_spark.catalog import table
 from xlsx_to_database_spark.operators.global_order import _orders_morton_key
+from xlsx_to_database_spark.queries import stage
 from xlsx_to_database_spark.registry import query
 from xlsx_to_database_spark.sources import sinks as SK
 from xlsx_to_database_spark.sources import xlsx_io
@@ -32,12 +33,6 @@ from xlsx_to_database_spark.sources.infer import (
     sanitize_headers,
 )
 from xlsx_to_database_spark.sources.xlsx import register_xlsx_source
-
-_STAGE_ROOT = "/tmp/spark_stage"
-
-
-def _tag(sf_dir: str) -> str:
-    return os.path.basename(os.path.normpath(sf_dir))
 
 
 def _stage_xlsx_from_table(
@@ -48,23 +43,21 @@ def _stage_xlsx_from_table(
     interchange format; staging collects, by design, only dimension-
     scale tables."""
     suffix = f"_{split_col}" if split_col else ""
-    path = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_{name}{suffix}.xlsx")
-    if os.path.exists(path):
-        return path
-    os.makedirs(_STAGE_ROOT, exist_ok=True)
-    df = table(spark, sf_dir, name)
-    header = df.columns
-    if split_col:
-        keys = sorted(r[0] for r in df.select(split_col).distinct().collect())
-        sheets = {
-            str(k): (header, [tuple(r) for r in df.filter(F.col(split_col) == k).collect()])
-            for k in keys
-        }
-    else:
-        sheets = {name: (header, [tuple(r) for r in df.collect()])}
-    xlsx_io.write_workbook(path + ".tmp", sheets)
-    os.replace(path + ".tmp", path)
-    return path
+
+    def build(path: str) -> None:
+        df = table(spark, sf_dir, name)
+        header = df.columns
+        if split_col:
+            keys = sorted(r[0] for r in df.select(split_col).distinct().collect())
+            sheets = {
+                str(k): (header, [tuple(r) for r in df.filter(F.col(split_col) == k).collect()])
+                for k in keys
+            }
+        else:
+            sheets = {name: (header, [tuple(r) for r in df.collect()])}
+        xlsx_io.write_workbook(path, sheets)
+
+    return stage.once(sf_dir, f"{name}{suffix}.xlsx", build)
 
 
 @query(
@@ -99,18 +92,18 @@ def xlsx_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     int+float→double, string, int+str→string (degraded), date serials →
     timestamp (incl. a pre-1900 and a leap-quirk-era date)."""
     register_xlsx_source(spark)
-    path = os.path.join(_STAGE_ROOT, "infer_fixture.xlsx")
-    if not os.path.exists(path):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
-        rows = [
-            (True, 1, 1.5, "alpha", 1, datetime.datetime(2024, 3, 1, 10, 30, 0)),
-            (False, 2, -0.25, "beta", "two", datetime.datetime(1899, 6, 15)),
-            (None, 3, 2, None, True, datetime.datetime(1900, 2, 28, 12, 0, 0)),
-        ]
-        xlsx_io.write_workbook(
-            path + ".tmp", {"data": (["flag", "n", "x", "note", "mixed", "at"], rows)}
-        )
-        os.replace(path + ".tmp", path)
+    rows = [
+        (True, 1, 1.5, "alpha", 1, datetime.datetime(2024, 3, 1, 10, 30, 0)),
+        (False, 2, -0.25, "beta", "two", datetime.datetime(1899, 6, 15)),
+        (None, 3, 2, None, True, datetime.datetime(1900, 2, 28, 12, 0, 0)),
+    ]
+    path = stage.once(
+        None,
+        "infer_fixture.xlsx",
+        lambda p: xlsx_io.write_workbook(
+            p, {"data": (["flag", "n", "x", "note", "mixed", "at"], rows)}
+        ),
+    )
     return spark.read.format("xlsx").load(path)
 
 
@@ -186,11 +179,13 @@ def parquet_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delimited text with header + schema inference (staged from the
     customer table; numeric inference promotes to BIGINT/DOUBLE)."""
-    out = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_customer_csv")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        table(spark, sf_dir, "customer").coalesce(1).write.mode("overwrite").option(
+    out = stage.once(
+        sf_dir,
+        "customer_csv",
+        lambda p: table(spark, sf_dir, "customer").coalesce(1).write.option(
             "header", "true"
-        ).csv(out)
+        ).csv(p),
+    )
     df = spark.read.csv(out, header=True, inferSchema=True)
     return df.select(
         F.col("c_custkey").cast("long"),
@@ -211,11 +206,13 @@ def json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines scan (staged projection of events; timestamps are
     excluded — JSON round-trips them as strings, a format property,
     not an engine one)."""
-    out = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_events_json")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        table(spark, sf_dir, "events").select("event_id", "event_type", "value").write.mode(
-            "overwrite"
-        ).json(out)
+    out = stage.once(
+        sf_dir,
+        "events_json",
+        lambda p: table(spark, sf_dir, "events")
+        .select("event_id", "event_type", "value")
+        .write.json(p),
+    )
     return spark.read.json(out).select("event_id", "event_type", "value")
 
 
@@ -229,7 +226,7 @@ def json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned columnar output (partitionBy l_returnflag → hive
     layout → partition pruning downstream), verified by reading back."""
-    out = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_li_sink")
+    out = stage.path(sf_dir, "li_sink")
     src = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45).select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
     )
@@ -254,7 +251,7 @@ def jdbc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     JDBC and oracle-checked against the source. Executors write
     partition-parallel batched inserts; the driver never holds rows."""
     url = os.environ.get(
-        "SPARK_GRAFT_JDBC_URL", f"jdbc:derby:memory:graft_{_tag(sf_dir)};create=true"
+        "SPARK_GRAFT_JDBC_URL", f"jdbc:derby:memory:graft_{stage.tag(sf_dir)};create=true"
     )
     src = table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").cast("long"),
@@ -286,7 +283,7 @@ def xlsx_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     through our own OOXML writer and reader, oracle-checked against the
     source table."""
     register_xlsx_source(spark)
-    out = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_nation_xlsx_sink")
+    out = stage.path(sf_dir, "nation_xlsx_sink")
     src = table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("long"),
         "n_name",
@@ -313,7 +310,7 @@ def orc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines standardized on Hive/ORC. Same distributed write shape as
     parquet (one file per task, _SUCCESS commit); predicate pushdown and
     column pruning work identically on read-back."""
-    out = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_part_orc")
+    out = stage.path(sf_dir, "part_orc")
     src = table(spark, sf_dir, "part").select(
         F.col("p_partkey").cast("long"),
         "p_name",
@@ -338,7 +335,7 @@ def csv_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV round trip — header + per-task part files, read back with an
     explicit schema (no inference job at scale). Doubles survive the
     text round trip exactly (shortest-repr float formatting)."""
-    out = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_li_csv")
+    out = stage.path(sf_dir, "li_csv")
     src = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45).select(
         F.col("l_orderkey").cast("long"),
         F.col("l_linenumber").cast("long"),
@@ -363,12 +360,15 @@ def text_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed (one part per task); the parse is three codegen'd
     expressions, no UDF, so it pushes through whole-stage codegen at any
     scale."""
-    out = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_docs_txt")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        docs = table(spark, sf_dir, "documents")
-        docs.select(
+    out = stage.once(
+        sf_dir,
+        "docs_txt",
+        lambda p: table(spark, sf_dir, "documents")
+        .select(
             F.concat_ws("\t", F.col("doc_id"), F.col("lang"), F.col("text")).alias("value")
-        ).write.mode("overwrite").text(out)
+        )
+        .write.text(p),
+    )
     lines = spark.read.text(out)
     parts = F.split(F.col("value"), "\t", 3)
     return lines.select(
@@ -396,7 +396,6 @@ def csv_quoted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than one giant one.) The oracle rebuilds the same tricky
     values directly from the source table — the scan must reproduce them
     byte-for-byte through the quote/escape/newline round trip."""
-    out = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_docs_tricky_csv")
     tricky = table(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
@@ -404,8 +403,11 @@ def csv_quoted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("tricky"),
         "source",
     )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        tricky.coalesce(1).write.mode("overwrite").option("header", "true").csv(out)
+    out = stage.once(
+        sf_dir,
+        "docs_tricky_csv",
+        lambda p: tricky.coalesce(1).write.option("header", "true").csv(p),
+    )
     return spark.read.csv(out, header=True, multiLine=True).select(
         F.col("doc_id").cast("long"),
         "tricky",
@@ -473,15 +475,17 @@ def parquet_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py), so a 100 TB table filtered to one year costs
     one year's IO. This is the static sibling of the DPP plan test
     (which proves the same pruning driven by a join at runtime)."""
-    out = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_orders_by_year")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        src = table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_custkey",
-            "o_totalprice",
-            F.year("o_orderdate").cast("int").alias("o_year"),
-        )
-        SK.to_parquet(src, out, partition_by=["o_year"])
+    src = table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_totalprice",
+        F.year("o_orderdate").cast("int").alias("o_year"),
+    )
+    out = stage.once(
+        sf_dir,
+        "orders_by_year",
+        lambda p: SK.to_parquet(src, p, partition_by=["o_year"]),
+    )
     back = spark.read.parquet(out).filter(F.col("o_year") == 1997)
     return back.select(
         "o_orderkey",
@@ -511,18 +515,20 @@ def parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB dataset costs nothing until rows are actually read; the
     alternative — rewriting history to the new schema — is the rewrite
     amplification SCALE.md warns about for MERGE."""
-    out = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_orders_evolved")
     o = table(spark, sf_dir, "orders")
-    b1 = os.path.join(out, "batch=1")
-    b2 = os.path.join(out, "batch=2")
-    if not os.path.exists(os.path.join(b2, "_SUCCESS")):
+
+    def build(root: str) -> None:
         o.filter(F.year("o_orderdate") == 1995).select(
             "o_orderkey", "o_totalprice"
-        ).write.mode("overwrite").parquet(b1)
+        ).write.parquet(os.path.join(root, "batch=1"))
         o.filter(F.year("o_orderdate") == 1996).select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
-        ).write.mode("overwrite").parquet(b2)
-    back = spark.read.option("mergeSchema", "true").parquet(b1, b2)
+        ).write.parquet(os.path.join(root, "batch=2"))
+
+    out = stage.once(sf_dir, "orders_evolved", build)
+    back = spark.read.option("mergeSchema", "true").parquet(
+        os.path.join(out, "batch=1"), os.path.join(out, "batch=2")
+    )
     return back.select(
         "o_orderkey",
         F.round("o_totalprice", 2).alias("o_totalprice"),
@@ -534,18 +540,15 @@ def _stage_binary_from_nation(spark: SparkSession, sf_dir: str) -> str:
     """Stage one small binary file per nation row (dimension-scale by
     design, like the xlsx fixtures): nation_<key>.bin containing
     'name|regionkey' UTF-8 bytes."""
-    out = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_nation_bin")
-    if os.path.isdir(out) and os.listdir(out):
-        return out
-    os.makedirs(out, exist_ok=True)
-    rows = table(spark, sf_dir, "nation").collect()
-    for r in rows:
-        payload = f"{r['n_name']}|{r['n_regionkey']}".encode("utf-8")
-        tmp = os.path.join(out, f".nation_{r['n_nationkey']}.tmp")
-        with open(tmp, "wb") as f:
-            f.write(payload)
-        os.replace(tmp, os.path.join(out, f"nation_{r['n_nationkey']}.bin"))
-    return out
+
+    def build(out: str) -> None:
+        os.makedirs(out)
+        for r in table(spark, sf_dir, "nation").collect():
+            payload = f"{r['n_name']}|{r['n_regionkey']}".encode("utf-8")
+            with open(os.path.join(out, f"nation_{r['n_nationkey']}.bin"), "wb") as f:
+                f.write(payload)
+
+    return stage.once(sf_dir, "nation_bin", build)
 
 
 @query(
@@ -668,8 +671,7 @@ def parquet_zorder_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
 
     z = _orders_morton_key(lo_c, hi_c, lo_d, hi_d)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = f"/tmp/spark_stage/{tag}_orders_zorder"
+    dst = stage.path(sf_dir, "orders_zorder")
     (
         o.withColumn("__z", z)
         .repartitionByRange(16, "__z")
@@ -689,6 +691,26 @@ def parquet_zorder_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2
         ).alias("total"),
     )
+
+
+def orders_csv_with_garbage(spark: SparkSession, sf_dir: str) -> str:
+    """Stage orders (key, cust, priority, price) as CSV plus
+    ``zz_garbage.csv``: three lines, each breaking a different numeric
+    column. Named by the source file's size so a regenerated testdata
+    table never reads a stale extract. Shared by ``csv_malformed_scan``
+    and ``etl_dead_letter``."""
+
+    def build(dst: str) -> None:
+        (
+            table(spark, sf_dir, "orders")
+            .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
+            .write.csv(dst)
+        )
+        with open(os.path.join(dst, "zz_garbage.csv"), "w") as fh:
+            fh.write("x,1,1-URGENT,1.5\n2,y,5-LOW,2.5\n3,3,3-MEDIUM,notadouble\n")
+
+    src_size = os.path.getsize(os.path.join(sf_dir, "orders.parquet"))
+    return stage.once(sf_dir, f"orders_csv_{src_size}", build)
 
 
 @query(
@@ -715,19 +737,7 @@ def csv_malformed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching fewer columns would legitimately keep rows whose breakage
     it never parsed (string fields cannot type-fail, so each garbage
     line corrupts one of the referenced numeric columns)."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src_size = os.path.getsize(os.path.join(sf_dir, "orders.parquet"))
-    dst = f"/tmp/spark_stage/{tag}_orders_csv_{src_size}"
-    garbage = os.path.join(dst, "zz_garbage.csv")
-    if not os.path.exists(garbage):
-        (
-            table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
-            .write.mode("overwrite")
-            .csv(dst)
-        )
-        with open(garbage, "w") as fh:
-            fh.write("x,1,1-URGENT,1.5\n2,y,5-LOW,2.5\n3,3,3-MEDIUM,notadouble\n")
+    dst = orders_csv_with_garbage(spark, sf_dir)
     schema = (
         "o_orderkey bigint, o_custkey bigint, o_orderpriority string, "
         "o_totalprice double"
@@ -777,10 +787,8 @@ def xlsx_schema_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata (sources/infer.py::align_to_schema); the data path is one
     shuffle-free projection."""
     register_xlsx_source(spark)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/tmp/spark_stage/{tag}_nation_messy.xlsx"
-    if not os.path.exists(path):
-        os.makedirs("/tmp/spark_stage", exist_ok=True)
+
+    def build(path: str) -> None:
         rows = [
             tuple(r) + ("etl",)
             for r in table(spark, sf_dir, "nation")
@@ -788,10 +796,11 @@ def xlsx_schema_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         ]
         xlsx_io.write_workbook(
-            path + ".tmp",
+            path,
             {"sheet1": (["Nation Key", "NAME ", "region-key", "Loaded By"], rows)},
         )
-        os.replace(path + ".tmp", path)
+
+    path = stage.once(sf_dir, "nation_messy.xlsx", build)
     target = StructType.fromDDL(
         "n_nationkey bigint, n_name string, n_regionkey bigint, n_comment string"
     )
@@ -819,10 +828,8 @@ def xlsx_merged_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (xlsx_io.py::merged_ranges); row-major order means the anchor
     is always seen before the cells it fills."""
     register_xlsx_source(spark)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/tmp/spark_stage/{tag}_region_report.xlsx"
-    if not os.path.exists(path):
-        os.makedirs("/tmp/spark_stage", exist_ok=True)
+
+    def build(path: str) -> None:
         nat = table(spark, sf_dir, "nation")
         reg = table(spark, sf_dir, "region")
         joined = (
@@ -846,9 +853,9 @@ def xlsx_merged_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         if merges and rix - 1 > merges[-1][0]:
             merges[-1] = (merges[-1][0], rix - 1)
         xlsx_io.write_workbook(
-            path + ".tmp", {"report": (["region_name", "nation_name"], rows)}
+            path, {"report": (["region_name", "nation_name"], rows)}
         )
-        with zipfile.ZipFile(path + ".tmp") as zf:
+        with zipfile.ZipFile(path) as zf:
             members = {n: zf.read(n) for n in zf.namelist()}
         mc = "".join(f'<mergeCell ref="A{a}:A{b}"/>' for a, b in merges if b > a)
         sheet = members["xl/worksheets/sheet1.xml"].decode()
@@ -857,11 +864,11 @@ def xlsx_merged_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             f'<mergeCells count="{len(merges)}">{mc}</mergeCells></worksheet>',
             sheet,
         ).encode()
-        with zipfile.ZipFile(path + ".tmp2", "w") as zf:
+        with zipfile.ZipFile(path, "w") as zf:
             for n, data in members.items():
                 zf.writestr(n, data)
-        os.replace(path + ".tmp2", path)
-        os.remove(path + ".tmp")
+
+    path = stage.once(sf_dir, "region_report.xlsx", build)
     return spark.read.format("xlsx").option("mergedCells", "fill").load(path)
 
 
@@ -885,9 +892,9 @@ def jdbc_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     numPartitions — the standard Spark JDBC parallelism contract).
     Derby in-memory stands in for the warehouse; the oracle is the
     source rows the table was loaded from."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
     url = os.environ.get(
-        "SPARK_GRAFT_JDBC_URL", f"jdbc:derby:memory:graft_scan_{tag};create=true"
+        "SPARK_GRAFT_JDBC_URL",
+        f"jdbc:derby:memory:graft_scan_{stage.tag(sf_dir)};create=true",
     )
     src = (
         table(spark, sf_dir, "orders")
@@ -938,8 +945,7 @@ def parquet_bloom_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed; the footer carries the filters (pyarrow-asserted in tests).
     The oracle checks content integrity through the write+read cycle on
     a selective predicate of the kind blooms serve."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = f"/tmp/spark_stage/{tag}_lineitem_bloom"
+    dst = stage.path(sf_dir, "lineitem_bloom")
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
     )
@@ -988,9 +994,8 @@ def xlsx_named_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     rectangle). Round-trips through our own writer's definedNames
     emission."""
     register_xlsx_source(spark)
-    path = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_named_range.xlsx")
-    if not os.path.exists(path):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
+
+    def build(path: str) -> None:
         data = [
             (r.c_custkey, r.c_name, r.c_acctbal)
             for r in table(spark, sf_dir, "customer")
@@ -1008,13 +1013,14 @@ def xlsx_named_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sheet rows: 1=title(header slot), 2=noise, 3=header, 4..=data,
         # last=footer; the name covers rows 3..3+len(data) only.
         xlsx_io.write_workbook(
-            path + ".tmp",
+            path,
             {"export": (["Quarterly customer export", "", ""], rows)},
             defined_names={
                 "customer_table": f"export!$A$3:$C${3 + len(data)}"
             },
         )
-        os.replace(path + ".tmp", path)
+
+    path = stage.once(sf_dir, "named_range.xlsx", build)
     df = spark.read.format("xlsx").option("range", "customer_table").load(path)
     return df.select(
         "c_custkey", "c_name", F.round("c_acctbal", 2).alias("c_acctbal")
@@ -1046,9 +1052,8 @@ def json_nested_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-order re-aggregate. (At 100 TB you'd land this as parquet
     once and never re-parse — `etl_dead_letter` covers the malformed
     path; this op covers the happy nested path.)"""
-    root = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_orders_nested_json")
-    if not os.path.exists(os.path.join(root, "_SUCCESS")):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
+
+    def build(root: str) -> None:
         o = table(spark, sf_dir, "orders").filter(
             F.col("o_orderkey") % 16 == 1
         )
@@ -1069,6 +1074,8 @@ def json_nested_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         nested.coalesce(2).write.mode("overwrite").json(root)
+
+    root = stage.once(sf_dir, "orders_nested_json", build)
     doc = spark.read.json(root)
     return (
         doc.select(
@@ -1106,9 +1113,8 @@ def csv_gzip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     op's layout choice is the scale lesson, not an accident. Inference
     must land BIGINT keys/sizes and DOUBLE prices from text; the
     round-trip hash-matches the parquet-born oracle."""
-    root = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_part_gzip_csv")
-    if not os.path.exists(os.path.join(root, "_SUCCESS")):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
+
+    def build(root: str) -> None:
         (
             table(spark, sf_dir, "part")
             .select("p_partkey", "p_name", "p_size", "p_retailprice")
@@ -1118,6 +1124,8 @@ def csv_gzip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("compression", "gzip")
             .csv(root)
         )
+
+    root = stage.once(sf_dir, "part_gzip_csv", build)
     df = (
         spark.read.option("header", "true")
         .option("inferSchema", "true")
@@ -1150,10 +1158,9 @@ def jdbc_pushdown_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies the source. Stages a Derby table once (reusing the
     jdbc_partitioned_scan staging), then reads it back with a
     3-predicate conjunction the connector compiles to WHERE."""
-    tag = _tag(sf_dir)
     url = os.environ.get(
         "SPARK_GRAFT_JDBC_URL",
-        f"jdbc:derby:memory:graft_push_{tag};create=true",
+        f"jdbc:derby:memory:graft_push_{stage.tag(sf_dir)};create=true",
     )
     src = (
         table(spark, sf_dir, "orders")
@@ -1201,15 +1208,14 @@ def csv_preamble_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     files at 100 TB parallelizes per file-split like any text scan.
     Hash-matches the clean relational oracle, proving the preamble
     never leaks a row."""
-    root = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_supplier_preamble.csv")
-    if not os.path.exists(root):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
+
+    def build(root: str) -> None:
         rows = (
             table(spark, sf_dir, "supplier")
             .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
             .collect()
         )
-        with open(root + ".tmp", "w") as fh:
+        with open(root, "w") as fh:
             fh.write("# Supplier extract -- generated by legacy tool v2.3\n")
             fh.write("# contact: ops@example.invalid\n")
             fh.write("\n")
@@ -1219,7 +1225,8 @@ def csv_preamble_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"{r.s_suppkey},{r.s_name},{r.s_nationkey},"
                     f"{r.s_acctbal!r}\n"
                 )
-        os.replace(root + ".tmp", root)
+
+    root = stage.once(sf_dir, "supplier_preamble.csv", build)
     header = "s_suppkey,s_name,s_nationkey,s_acctbal"
     txt = spark.read.text(root)
     body = txt.filter(
@@ -1261,23 +1268,23 @@ def csv_latin1_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same labels from clean parquet, so the hash match proves
     byte-exact decode. Map-side like any text scan; a single-byte
     codepage is per-split decodable, so parallelism is unaffected."""
-    path = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_nation_cp1252.csv")
-    if not os.path.exists(path):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
+
+    def build(path: str) -> None:
         rows = (
             table(spark, sf_dir, "nation")
             .select("n_nationkey", "n_name", "n_regionkey")
             .orderBy("n_nationkey")
             .collect()
         )
-        with open(path + ".tmp", "w", encoding="iso-8859-1") as fh:
+        with open(path, "w", encoding="iso-8859-1") as fh:
             fh.write("n_nationkey,label,n_regionkey\n")
             for r in rows:
                 fh.write(
                     f"{r.n_nationkey},{r.n_name} à résumé "
                     f"über,{r.n_regionkey}\n"
                 )
-        os.replace(path + ".tmp", path)
+
+    path = stage.once(sf_dir, "nation_cp1252.csv", build)
     return (
         spark.read.option("header", "true")
         .option("encoding", "iso-8859-1")
@@ -1309,28 +1316,26 @@ def csv_evolving_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift. Each generation parses with its own explicit schema
     (header-validated), map-side; the oracle reconstructs the aligned
     union with NULL placeholders."""
-    root = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_supplier_evolving")
-    if not os.path.exists(os.path.join(root, "v2.csv")):
-        os.makedirs(root, exist_ok=True)
+
+    def build(root: str) -> None:
+        os.makedirs(root)
         rows = (
             table(spark, sf_dir, "supplier")
             .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
             .collect()
         )
-        with open(os.path.join(root, "v1.csv.tmp"), "w") as fh:
+        with open(os.path.join(root, "v1.csv"), "w") as fh:
             fh.write("s_suppkey,s_name,s_acctbal\n")
             for r in rows:
                 if r.s_suppkey % 2 == 0:
                     fh.write(f"{r.s_suppkey},{r.s_name},{r.s_acctbal!r}\n")
-        with open(os.path.join(root, "v2.csv.tmp"), "w") as fh:
+        with open(os.path.join(root, "v2.csv"), "w") as fh:
             fh.write("s_nationkey,s_suppkey,s_name\n")
             for r in rows:
                 if r.s_suppkey % 2 == 1:
                     fh.write(f"{r.s_nationkey},{r.s_suppkey},{r.s_name}\n")
-        os.replace(os.path.join(root, "v1.csv.tmp"),
-                   os.path.join(root, "v1.csv"))
-        os.replace(os.path.join(root, "v2.csv.tmp"),
-                   os.path.join(root, "v2.csv"))
+
+    root = stage.once(sf_dir, "supplier_evolving", build)
     v1 = (
         spark.read.option("header", "true")
         .schema("s_suppkey long, s_name string, s_acctbal double")
@@ -1427,8 +1432,7 @@ def _stage_formula_workbook(path: str) -> None:
         'ContentType="application/vnd.openxmlformats-officedocument.'
         'spreadsheetml.worksheet+xml"/>'
     )
-    tmp = path + ".tmp"
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
         zf.writestr(
             "[Content_Types].xml",
             xlsx_io._CONTENT_TYPES.format(sheet_overrides=overrides),
@@ -1439,7 +1443,6 @@ def _stage_formula_workbook(path: str) -> None:
         zf.writestr("xl/styles.xml", xlsx_io._STYLES)
         zf.writestr("xl/sharedStrings.xml", sst)
         zf.writestr("xl/worksheets/sheet1.xml", sheet)
-    os.replace(tmp, path)
 
 
 @query(
@@ -1470,10 +1473,7 @@ def xlsx_formula_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed NULL, never the ``#DIV/0!`` literal leaking into a numeric
     column)."""
     register_xlsx_source(spark)
-    path = os.path.join(_STAGE_ROOT, "formula_fixture.xlsx")
-    if not os.path.exists(path):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
-        _stage_formula_workbook(path)
+    path = stage.once(None, "formula_fixture.xlsx", _stage_formula_workbook)
     return spark.read.format("xlsx").load(path)
 
 
@@ -1561,16 +1561,15 @@ def csv_bom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     header-inference and explicit-schema paths; this op pins that
     behavior so a reader regression is caught here, not in
     production."""
-    path = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_nation_bom.csv")
-    if not os.path.exists(path):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
+
+    def build(path: str) -> None:
         rows = (
             table(spark, sf_dir, "nation")
             .select("n_nationkey", "n_name", "n_regionkey")
             .orderBy("n_nationkey")
             .collect()
         )
-        with open(path + ".tmp", "wb") as fh:
+        with open(path, "wb") as fh:
             fh.write(b"\xef\xbb\xbf")  # UTF-8 BOM
             fh.write(b"n_nationkey,n_name,n_regionkey\n")
             for r in rows:
@@ -1578,7 +1577,8 @@ def csv_bom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"{r.n_nationkey},{r.n_name},{r.n_regionkey}\n"
                     .encode("utf-8")
                 )
-        os.replace(path + ".tmp", path)
+
+    path = stage.once(sf_dir, "nation_bom.csv", build)
     df = (
         spark.read.option("header", "true")
         .schema("n_nationkey long, n_name string, n_regionkey long")
@@ -1612,22 +1612,22 @@ def csv_fixed_width_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-matching the clean parquet proves the round trip: numeric
     fields survive zero-padding-free right-alignment, text survives
     right-space-padding."""
-    path = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_nation_fixed.txt")
-    if not os.path.exists(path):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
+
+    def build(path: str) -> None:
         rows = (
             table(spark, sf_dir, "nation")
             .select("n_nationkey", "n_name", "n_regionkey")
             .orderBy("n_nationkey")
             .collect()
         )
-        with open(path + ".tmp", "w") as fh:
+        with open(path, "w") as fh:
             for r in rows:
                 fh.write(
                     f"{r.n_nationkey:>4d}{r.n_name:<16s}"
                     f"{r.n_regionkey:>2d}\n"
                 )
-        os.replace(path + ".tmp", path)
+
+    path = stage.once(sf_dir, "nation_fixed.txt", build)
     lines = spark.read.text(path)
     cols = []
     for name, start, width in _FW_LAYOUT:
@@ -1652,20 +1652,20 @@ def csv_multichar_delim_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     source accepts multi-char `sep` natively (Spark 3.0+), keeping the
     parse in the JVM scan instead of a per-line split UDF. Round-trip
     hash match against clean parquet proves no field bleeding."""
-    path = os.path.join(_STAGE_ROOT, f"{_tag(sf_dir)}_nation_pipe2.csv")
-    if not os.path.exists(path):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
+
+    def build(path: str) -> None:
         rows = (
             table(spark, sf_dir, "nation")
             .select("n_nationkey", "n_name", "n_regionkey")
             .orderBy("n_nationkey")
             .collect()
         )
-        with open(path + ".tmp", "w") as fh:
+        with open(path, "w") as fh:
             fh.write("n_nationkey||n_name||n_regionkey\n")
             for r in rows:
                 fh.write(f"{r.n_nationkey}||{r.n_name}||{r.n_regionkey}\n")
-        os.replace(path + ".tmp", path)
+
+    path = stage.once(sf_dir, "nation_pipe2.csv", build)
     return (
         spark.read.option("header", "true")
         .option("sep", "||")

@@ -29,6 +29,7 @@ from pyspark.sql.types import (
 )
 
 from xlsx_to_database_spark.operators.txn_table import TxnTable
+from xlsx_to_database_spark.queries import stage
 from xlsx_to_database_spark.registry import query
 from xlsx_to_database_spark.streaming.engine import (
     _stage_dir,
@@ -139,18 +140,19 @@ def _ordered_split_dir(spark: SparkSession, sf_dir: str) -> str:
     whose latest ts range landed the oldest mtime would replay FIRST,
     advancing the watermark past the earlier ranges so their rows drop
     as late (observed as a silently-shrunken result; caught by the
-    exact oracle). The source (size, mtime) pair is embedded in the dir
-    name so regenerated testdata can never be read through a stale
-    split (size alone could collide)."""
+    exact oracle). The split is staged :func:`stage.once`, so it only
+    appears once the utime pass is done: a build cut short between
+    Spark's commit and the last utime leaves nothing to reuse. The
+    source (size, mtime) pair is embedded in the name so regenerated
+    testdata can never be read through a stale split (size alone could
+    collide)."""
     src_dir = _stage_dir(sf_dir, 1)
     src_path = os.path.join(sf_dir, "events.parquet")
-    src_size = os.path.getsize(src_path)
-    split_dir = f"{src_dir}_wm3_{src_size}_{int(os.path.getmtime(src_path))}"
-    if not os.path.exists(os.path.join(split_dir, "_SUCCESS")):
-        shutil.rmtree(split_dir, ignore_errors=True)
+
+    def build(split_dir: str) -> None:
         spark.read.schema(events_raw_schema(sf_dir)).parquet(
             src_dir
-        ).repartitionByRange(3, "ts").write.mode("overwrite").parquet(split_dir)
+        ).repartitionByRange(3, "ts").write.parquet(split_dir)
         parts = sorted(
             f for f in os.listdir(split_dir)
             if f.startswith("part-") and f.endswith(".parquet")
@@ -158,7 +160,9 @@ def _ordered_split_dir(spark: SparkSession, sf_dir: str) -> str:
         base = int(os.path.getmtime(os.path.join(split_dir, parts[0])))
         for i, f in enumerate(parts):
             os.utime(os.path.join(split_dir, f), (base + i * 10, base + i * 10))
-    return split_dir
+
+    name = f"events_wm3_{os.path.getsize(src_path)}_{int(os.path.getmtime(src_path))}"
+    return stage.once(sf_dir, name, build)
 
 
 @query(
@@ -344,7 +348,7 @@ def stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwritable batch_id=N subdir per micro-batch (idempotent on
     retry); partition discovery surfaces batch_id on read-back, dropped
     here for a schema identical to the source projection."""
-    out_dir = f"/tmp/spark_stream_out/{uuid.uuid4().hex}"
+    out_dir = stage.fresh(sf_dir, "stream_sink")
     ev = events_stream(spark, sf_dir).select("event_id", "user_id", "event_type", "value")
     run_foreach_batch_parquet(ev, out_dir)
     return spark.read.parquet(out_dir).drop("batch_id")
@@ -439,7 +443,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate runs on the READ-BACK side (after the stream), so any
     exactly-once violation changes counts and fails the hash. Decimal
     value sums keep the total engine-exact under any batching."""
-    out_dir = f"/tmp/spark_stream_out/{uuid.uuid4().hex}"
+    out_dir = stage.fresh(sf_dir, "stream_foreach_batch")
     ev = (
         events_stream(spark, sf_dir)
         .filter(F.col("value") > 50)
@@ -483,7 +487,7 @@ def stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(split_dir)
     )
     ev = with_event_time(raw, sf_dir).select("event_id", "event_type", "value")
-    root = f"/tmp/spark_stream_out/txn_{uuid.uuid4().hex}"
+    root = stage.fresh(sf_dir, "stream_txn_sink")
     tt = TxnTable(spark, root, "event_id")
     ckpt = f"/tmp/spark_stream_ckpt/{uuid.uuid4().hex}"
 
@@ -544,9 +548,7 @@ def stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: restart cost is O(state + new files) — offsets and state
     live in the checkpoint, never rescanned from the source; the MERGE
     sink prunes to files overlapping the 10-bucket key range."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = f"/tmp/spark_stage/{tag}_restart_resume"
-    shutil.rmtree(base, ignore_errors=True)
+    base = stage.fresh(sf_dir, "restart_resume")
     src, ckpt, root = f"{base}/src", f"{base}/ckpt", f"{base}/table"
     os.makedirs(src)
 

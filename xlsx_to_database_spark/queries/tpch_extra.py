@@ -25,14 +25,12 @@ Catalyst turns into broadcast literals.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xlsx_to_database_spark.catalog import register_views, table
 from xlsx_to_database_spark.operators.txn_table import TxnTable
-from xlsx_to_database_spark.queries.sources_sinks import _tag
+from xlsx_to_database_spark.queries import stage
 from xlsx_to_database_spark.registry import query
 
 
@@ -426,8 +424,7 @@ def tpch_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACID buys over `etl_partition_overwrite`-style rewrites. The
     oracle reconstructs the post-refresh state declaratively."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = f"/tmp/spark_stage/{_tag(sf_dir)}_tpch_refresh"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "tpch_refresh")
     tt = TxnTable(spark, root, "o_orderkey")
     tt.create(o.repartitionByRange(4, "o_orderkey"))
     # RF1: new sales arrive beyond the current key domain (pure append)

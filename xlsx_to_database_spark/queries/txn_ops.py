@@ -5,9 +5,6 @@ VACUUM, clones, constraints, checkpoints and compaction."""
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,8 +15,7 @@ from xlsx_to_database_spark.operators.txn_table import (
     ConcurrentWriteError,
     TxnTable,
 )
-from xlsx_to_database_spark.queries.sources_sinks import _tag
-from xlsx_to_database_spark.queries.txn_fixtures import staged_copy
+from xlsx_to_database_spark.queries import stage
 from xlsx_to_database_spark.registry import query
 
 
@@ -53,7 +49,7 @@ def table_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests/test_operators.py.
 
     Fixture discipline (round-7 verdict #4): the range-clustered base
-    table is staged ONCE per process (txn_fixtures.staged_copy); each
+    table is staged once (stage.staged_copy); each
     invocation merges into a fresh OS-level copy, so the wall-clock is
     the two MERGE commits + read-back, not the repeated create."""
     c = table(spark, sf_dir, "customer").select(
@@ -65,7 +61,7 @@ def table_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             c.repartitionByRange(4, "c_custkey")
         )
 
-    root = staged_copy("txn_merge_v2", sf_dir, _build)
+    root = stage.staged_copy(sf_dir, "txn_merge_v2", _build)
     tt = TxnTable(spark, root, "c_custkey")
     updates = c.filter(
         (F.col("c_custkey") <= 150) & (F.col("c_custkey") % 3 == 0)
@@ -115,9 +111,7 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     an atomic manifest rename (optimistic concurrency — the protocol
     Delta runs on object stores)."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/spark_stage/{tag}_txn_tt"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "txn_tt")
     tt = TxnTable(spark, root, "o_orderkey")
     tt.create(
         o.filter(F.col("o_orderkey") % 4 != 0).repartitionByRange(
@@ -159,9 +153,7 @@ def table_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming ingestion at scale: downstream jobs tail the log and
     process only new files, never rescanning the table."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/spark_stage/{tag}_txn_incr"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "txn_incr")
     tt = TxnTable(spark, root, "o_orderkey")
     tt.create(o.filter(F.col("o_orderkey") % 3 == 0))
     tt.append(o.filter(F.col("o_orderkey") % 3 == 1))
@@ -190,9 +182,7 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     content — including the evolved NULLs — bit-identical, while old
     snapshots keep resolving their original manifests."""
     o = table(spark, sf_dir, "orders")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/spark_stage/{tag}_txn_evolve"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "txn_evolve")
     tt = TxnTable(spark, root, "o_orderkey")
     tt.create(
         o.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -242,9 +232,7 @@ def table_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/spark_stage/{tag}_txn_zorder"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "txn_zorder")
     tt = TxnTable(spark, root, "o_orderkey")
     tt.create(o.repartition(8))
     day = F.datediff(F.col("o_orderdate"), F.lit("1992-01-01"))
@@ -293,8 +281,7 @@ def table_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     read must hash-match the ORIGINAL table exactly — proving the
     round-trip through damage and restore is lossless."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = f"/tmp/spark_stage/{_tag(sf_dir)}_table_restore"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "table_restore")
     tt = TxnTable(spark, root, "o_orderkey")
     tt.create(o.repartitionByRange(4, "o_orderkey"))
     tt.delete_where(F.col("o_orderkey") % 5 == 0)          # the bad deploy
@@ -349,8 +336,7 @@ def table_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    root = f"/tmp/spark_stage/{_tag(sf_dir)}_table_vacuum"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "table_vacuum")
     tt = TxnTable(spark, root, "o_orderkey")
     tt.create(o.repartitionByRange(4, "o_orderkey"))
     src = o.filter(F.col("o_orderkey").between(200, 299)).withColumn(
@@ -399,10 +385,8 @@ def table_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    src_root = f"/tmp/spark_stage/{_tag(sf_dir)}_table_clone_src"
-    cl_root = f"/tmp/spark_stage/{_tag(sf_dir)}_table_clone_dst"
-    shutil.rmtree(src_root, ignore_errors=True)
-    shutil.rmtree(cl_root, ignore_errors=True)
+    src_root = stage.fresh(sf_dir, "table_clone_src")
+    cl_root = stage.fresh(sf_dir, "table_clone_dst")
     src = TxnTable(spark, src_root, "o_orderkey")
     src.create(o.repartitionByRange(4, "o_orderkey"))
 
@@ -459,8 +443,7 @@ def table_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    root = f"/tmp/spark_stage/{_tag(sf_dir)}_table_check"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "table_check")
     tt = TxnTable(spark, root, "o_orderkey")
     tt.create(o.filter(F.col("o_orderkey") < 1000))
     chk = F.col("price") > 0
@@ -516,8 +499,7 @@ def table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
-    root = f"/tmp/spark_stage/{_tag(sf_dir)}_table_history"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "table_history")
     tt = TxnTable(spark, root, "o_orderkey")
     tt.create(o.filter(F.col("o_orderkey") < 800)
               .repartitionByRange(4, "o_orderkey"))
@@ -576,8 +558,7 @@ def table_optimistic_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
     )
     base = o.filter(F.col("o_orderkey") < 500)
-    root = f"/tmp/spark_stage/{_tag(sf_dir)}_table_retry"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "table_retry")
     tt = TxnTable(spark, root, "o_orderkey")
     tt.create(base.repartitionByRange(2, "o_orderkey"))
 
@@ -645,9 +626,7 @@ def table_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/spark_stage/{tag}_txn_ckpt"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "txn_ckpt")
     t = TxnTable(spark, root, "o_orderkey", checkpoint_interval=5)
     t.create(orders.limit(0))
     for i in range(6):
@@ -721,7 +700,7 @@ def table_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     (merge-on-read row-level operations).
 
     Fixture discipline (round-7 verdict #2/#4): the 4-file base table
-    is staged ONCE per process (txn_fixtures.staged_copy) and each
+    is staged once (stage.staged_copy) and each
     invocation works on a fresh OS-level copy, so the op's wall-clock
     is the two DV commits + the merge-on-read aggregate — the thing
     the headline number claims — not repeated Spark fixture writes."""
@@ -733,7 +712,7 @@ def table_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             orders.repartitionByRange(4, "o_orderkey")
         )
 
-    root = staged_copy("txn_dv_v2", sf_dir, _build)
+    root = stage.staged_copy(sf_dir, "txn_dv_v2", _build)
     t = TxnTable(spark, root, "o_orderkey")
     key = F.col("o_orderkey")
     _, marked1, deleted1 = t.delete_where_dv(key % 7 == 3)
@@ -792,7 +771,7 @@ def table_update_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates.
 
     Fixture discipline: shares table_delete_vectors' staged base (same
-    4-file orders layout) via txn_fixtures.staged_copy — the timed
+    4-file orders layout) via stage.staged_copy — the timed
     region is the UPDATE commit + read-back, not the repeated create."""
     def _build(root: str) -> None:
         orders = table(spark, sf_dir, "orders").select(
@@ -802,7 +781,7 @@ def table_update_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             orders.repartitionByRange(4, "o_orderkey")
         )
 
-    root = staged_copy("txn_dv_v2", sf_dir, _build, work_tag="txn_updv_v2")
+    root = stage.staged_copy(sf_dir, "txn_dv_v2", _build, work="txn_updv_v2")
     t = TxnTable(spark, root, "o_orderkey")
     _, marked, updated = t.update_where_dv(
         F.col("o_orderkey") % 7 == 3,
@@ -856,9 +835,7 @@ def table_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/spark_stage/{tag}_txn_rename"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "txn_rename")
     t = TxnTable(spark, root, "o_orderkey")
     key = F.col("o_orderkey")
     t.create(
@@ -928,9 +905,7 @@ def table_reorg_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/spark_stage/{tag}_txn_purge"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "txn_purge")
     t = TxnTable(spark, root, "o_orderkey")
     t.create(orders.repartitionByRange(4, "o_orderkey"))
     cut = int(orders.agg(F.max("o_orderkey")).collect()[0][0]) // 4
@@ -997,7 +972,7 @@ def table_cdc_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
             orders.filter(key % 5 != 0).repartitionByRange(4, "o_orderkey")
         )
 
-    root = staged_copy("txn_cdc_v2", sf_dir, _build)
+    root = stage.staged_copy(sf_dir, "txn_cdc_v2", _build)
     t = TxnTable(spark, root, "o_orderkey")
     t.append(orders.filter(key % 5 == 0).coalesce(1))
     t.delete_where_dv(key % 9 == 2)
@@ -1044,9 +1019,7 @@ def table_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/spark_stage/{tag}_txn_autoopt"
-    shutil.rmtree(root, ignore_errors=True)
+    root = stage.fresh(sf_dir, "txn_autoopt")
     t = TxnTable(spark, root, "o_orderkey")
     tail = F.col("o_orderkey") % 1000
     t.create(
